@@ -23,7 +23,9 @@ final case class GraftConfig(
     metastoreJdbcUrl: Option[String] = None,
     /** Default project when unqualified — the reference's `kafka.default-schema`. */
     defaultProject: String = "default",
-    /** Segment-granular parallelism hint (reference O3). */
+    /** Splits per batch range (reference O3); None derives them from the
+      * planned offset window ([[graft.sources.KafkaEventSource.splitRequests]]).
+      */
     minPartitions: Option[Int] = None) {
 
   def payloadCodec: PayloadCodec = codec match {

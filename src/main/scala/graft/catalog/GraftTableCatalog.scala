@@ -55,7 +55,8 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
           graft.sources.FileEventSource(required(options, "sourceRoot"), f)
         case "kafka" =>
           // knobs: codec (avro|json), sourceFormat (swap in FakeKafka for
-          // broker-free tests), sourcePartitions, minPartitions, and
+          // broker-free tests), sourcePartitions, minPartitions (overrides
+          // the split request derived from each batch window), and
           // arbitrary source options via the "source.option." prefix
           import scala.jdk.CollectionConverters._
           val extra = options.asScala.collect {
@@ -70,7 +71,7 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
               case other => throw new IllegalArgumentException(s"unknown codec '$other'")
             },
             partitionsOf = _ => options.getInt("sourcePartitions", 1),
-            minPartitions = Option(options.get("minPartitions")).map(_.toInt),
+            minPartitions = Option(options.get("minPartitions")).map(positiveInt("minPartitions", _)),
             extraOptions = extra,
             format = Option(options.get("sourceFormat")).getOrElse("kafka"))
         case other => throw new IllegalArgumentException(s"unknown source '$other'")
@@ -86,6 +87,12 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
   private def required(options: CaseInsensitiveStringMap, key: String): String =
     Option(options.get(key)).getOrElse(
       throw new IllegalArgumentException(s"catalog $catalogName needs option '$key'"))
+
+  // checked here, not at query time: FakeKafka reads 0 as "unset", Spark's
+  // Kafka source rejects it only when a query runs
+  private def positiveInt(key: String, v: String): Int =
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"catalog $catalogName option '$key' must be a positive integer, got '$v'"))
 
   override def name(): String = catalogName
 

@@ -177,7 +177,9 @@ object OffsetRangePlanner {
     * workers). Given ascending segment boundary offsets and a pruned range,
     * emit per-segment `[start, end)` splits clamped to the range. `latest`
     * resolves unbounded-high ends — the plan-time snapshot of the live log
-    * head (`KafkaSplitManager.java:194-216`).
+    * head (`KafkaSplitManager.java:194-216`). No read path calls this yet:
+    * batch reads size their splits with
+    * [[graft.sources.KafkaEventSource.splitRequests]].
     */
   def segmentSplits(boundaries: Seq[Long], range: OffsetRange, latest: Long): Seq[OffsetRange] = {
     val end = math.min(range.end.getOrElse(latest), latest)

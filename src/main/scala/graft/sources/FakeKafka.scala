@@ -178,12 +178,13 @@ final class FakeKafkaScan(topic: String, options: CaseInsensitiveStringMap)
 
   override def readSchema(): StructType = FakeKafka.frameSchema
   override def toBatch: Batch = this
-  // the pruned offset window is part of the scan's identity — advertise it
-  // so plans show broker-side pruning (the connector's own scans do too)
+  // the pruned offset window and the split request are part of the scan's
+  // identity — advertise them so plans show broker-side pruning (the
+  // connector's own scans do too) and how finely it is split
   override def description(): String =
     s"FakeKafkaScan $topic partitions=$numPartitions latest=$latest" +
-      Option(options.get("startingOffsets")).map(s => s" startingOffsets=$s").getOrElse("") +
-      Option(options.get("endingOffsets")).map(s => s" endingOffsets=$s").getOrElse("")
+      Seq("startingOffsets", "endingOffsets", "minPartitions")
+        .flatMap(k => Option(options.get(k)).map(v => s" $k=$v")).mkString
 
   override def planInputPartitions(): Array[InputPartition] = {
     val starts = Option(options.get("startingOffsets"))

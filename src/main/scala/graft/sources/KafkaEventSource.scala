@@ -52,8 +52,15 @@ case object JsonPayloadCodec extends PayloadCodec {
   *    `endingOffsets` JSON — the C3 pushdown. Multi-range windows read as a
   *    union of per-range scans (correctly, unlike the reference's
   *    overlapping-slot bug).
-  *  - segment-granular parallelism (O3): `minPartitions` splits partitions
-  *    by offset range, Spark's analogue of one-split-per-log-segment.
+  *  - segment-granular parallelism (C4/O3): a batch read asks the source to
+  *    split each topic partition by offset range (its `minPartitions`
+  *    option, Spark's analogue of one split per log segment). The request
+  *    is derived from the planned window ([[KafkaEventSource.splitRequests]]):
+  *    the session's leaf-scan parallelism is shared across the bounded
+  *    ranges in proportion to their spans, with at least one split per
+  *    topic partition and at least [[KafkaEventSource.MinSplitMessages]]
+  *    messages per split. Ranges without an end, and streams, keep one
+  *    split per topic partition; an explicit `minPartitions` wins.
   *  - codec decode with schema resolution + malformed-row drop (C6) and
   *    hidden system-column synthesis (C7).
   *  - buffer/timeout knobs default to the reference's
@@ -80,7 +87,9 @@ final case class KafkaEventSource(
   override def withOffsetRanges(ranges: Seq[OffsetRange]): EventSource =
     copy(offsetRanges = ranges)
 
-  /** Source options for one pruned offset range of a topic. */
+  /** Source options for one pruned offset range of a topic; carries only a
+    * caller-set `minPartitions` (see [[batchOptions]] for the derived one).
+    */
   def readOptions(topic: String, range: OffsetRange): Map[String, String] = {
     val (startJson, endJson) =
       OffsetRangePlanner.kafkaOffsetJson(topic, partitionsOf(topic), range)
@@ -98,6 +107,28 @@ final case class KafkaEventSource(
       extraOptions
   }
 
+  /** Source options for each range of a batch read of `topic`: [[readOptions]]
+    * plus, unless the caller set `minPartitions`, the split request derived
+    * from the planned window.
+    */
+  def batchOptions(spark: SparkSession, topic: String): Seq[Map[String, String]] = {
+    val userSplits = minPartitions.isDefined ||
+      extraOptions.keys.exists(_.equalsIgnoreCase("minPartitions"))
+    val requests =
+      if (userSplits) offsetRanges.map(_ => None)
+      else KafkaEventSource.splitRequests(offsetRanges, partitionsOf(topic),
+        KafkaEventSource.splitBudget(spark))
+    offsetRanges.zip(requests).map { case (r, req) =>
+      readOptions(topic, r) ++ req.map("minPartitions" -> _.toString)
+    }
+  }
+
+  /** Source options of a stream: unbounded from the first range's start. The
+    * broker is told no end, so no split request is derived either.
+    */
+  def streamOptions(topic: String, ranges: Seq[OffsetRange]): Map[String, String] =
+    readOptions(topic, OffsetRange(ranges.head.start, None)) - "endingOffsets"
+
   override def read(spark: SparkSession, project: String, collection: String,
                     schema: StructType): DataFrame = {
     val topic = SystemColumns.topicFor(project, collection)
@@ -106,8 +137,8 @@ final case class KafkaEventSource(
       val full = StructType(SystemColumns.fields ++ schema.fields)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
     } else {
-      val raw = offsetRanges
-        .map(r => spark.read.format(format).options(readOptions(topic, r)).load())
+      val raw = batchOptions(spark, topic)
+        .map(opts => spark.read.format(format).options(opts).load())
         .reduce(_ unionAll _)
       KafkaEventSource.decodeRaw(raw, project, collection, schema, codec)
     }
@@ -132,9 +163,7 @@ final case class KafkaEventSource(
     // analogue would be "everything from 0", the OPPOSITE — refuse loudly
     require(offsetRanges.nonEmpty,
       s"predicate prunes every offset of $topic - nothing to stream")
-    val start = offsetRanges.head
-    val opts = readOptions(topic, OffsetRange(start.start, None)) - "endingOffsets"
-    val raw = spark.readStream.format(format).options(opts).load()
+    val raw = spark.readStream.format(format).options(streamOptions(topic, offsetRanges)).load()
     val decoded = KafkaEventSource.decodeRaw(raw, project, collection, schema, codec)
     decoded.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), offsetRanges))
   }
@@ -163,7 +192,7 @@ final case class KafkaEventSource(
     // streams have no endingOffsets: tell the broker the coarse start, keep
     // the pruned multi-range window as a residual in the decode pipeline
     // (identical to readStream's contract)
-    val opts = readOptions(topic, OffsetRange(effective.head.start, None)) - "endingOffsets"
+    val opts = streamOptions(topic, effective)
     val providerClass = org.apache.spark.sql.execution.datasources.DataSource
       .lookupDataSource(format, spark.sessionState.conf)
     val provider = providerClass.getDeclaredConstructor().newInstance()
@@ -192,6 +221,36 @@ final case class KafkaEventSource(
 }
 
 object KafkaEventSource {
+
+  /** Fewest messages a derived split may carry: below this a task's fixed
+    * cost outweighs what it reads, like the open-cost floor in Spark's own
+    * file-scan split sizing. Set by a window-span × split-count sweep of
+    * the FakeKafka Avro log (see CHANGES.md).
+    */
+  val MinSplitMessages: Long = 8192L
+
+  /** The task budget of one batch window: Spark's leaf-scan parallelism
+    * (`spark.sql.leafNodeDefaultParallelism`, by default the context's
+    * `defaultParallelism`).
+    */
+  private def splitBudget(spark: SparkSession): Int =
+    spark.conf.getOption(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM.key)
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+
+  /** The `minPartitions` request for each of `ranges` (one per topic
+    * partition by default, so `None` keeps that). Each bounded range gets
+    * its span's share of `budget`, as whole chunks per topic partition,
+    * capped so that no chunk holds fewer than [[MinSplitMessages]] offsets;
+    * ranges without an end get `None`, since the log head is unknown here.
+    */
+  def splitRequests(ranges: Seq[OffsetRange], partitions: Int, budget: Int): Seq[Option[Int]] = {
+    val boundedSpan = ranges.flatMap(r => r.end.map(_ - r.start)).sum
+    ranges.map(r => r.end.map(_ - r.start).flatMap { span =>
+      val share = (budget.toDouble * span / boundedSpan / partitions).toLong
+      val chunks = math.min(share, span / MinSplitMessages)
+      if (chunks > 1) Some((chunks * partitions).toInt) else None
+    })
+  }
 
   /** `_offset ∈ ranges` as a Column predicate — the residual filter that
     * makes a superset scan (e.g. an unbounded stream) honor a multi-range

@@ -127,6 +127,19 @@ class TableCatalogSpec extends SparkTestBase {
     assert(q.head().getLong(0) == 500L * 2) // 500 offsets x 2 partitions
   }
 
+  test("a kafka catalog rejects a minPartitions that is not a positive integer") {
+    val ms = java.nio.file.Files.createTempDirectory("graft-ms-minparts").toString
+    def init(v: String): Unit = new graft.catalog.GraftTableCatalog().initialize("graftmp",
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(java.util.Map.of(
+        "metastore", ms, "source", "kafka", "bootstrap", "fake:9092", "minPartitions", v)))
+    for (bad <- Seq("0", "-3", "four", "2.5", "")) {
+      val e = intercept[IllegalArgumentException](init(bad))
+      assert(e.getMessage.contains("'minPartitions'") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+    init("8")
+  }
+
   test("metastore mode resolves a CSV collection with header validation") {
     val dataDir = java.nio.file.Files.createTempDirectory("graft-csv").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dataDir/events.csv"),
