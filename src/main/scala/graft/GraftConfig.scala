@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.catalog.{FileMetastore, InMemoryMetastore, JdbcMetastore, Metastore}
-import graft.sources.{AvroPayloadCodec, EventSource, JsonPayloadCodec, KafkaEventSource, ParquetEventSource, PayloadCodec}
+import graft.sources.{AvroPayloadCodec, EventSource, JsonPayloadCodec, KafkaEventSource, PayloadCodec}
 
 /** Engine configuration (reference C8, `KafkaConnectorConfig.java:32-117` —
   * `kafka.nodes` / connect-timeout / buffer-size / default-schema) as a
@@ -51,8 +51,4 @@ object GraftConfig {
       minPartitions = config.minPartitions)
     new GraftEngine(spark, config.metastore(), source)
   }
-
-  /** Parquet-fixture engine (tests/bench). */
-  def parquetEngine(spark: SparkSession, dir: String, config: GraftConfig = GraftConfig()): GraftEngine =
-    new GraftEngine(spark, config.metastore(), ParquetEventSource(dir))
 }

@@ -129,12 +129,15 @@ final class GraftEngine(
     * specialize the source to them (Kafka reads only those windows; parquet
     * relies on Catalyst pushdown), and keep the full predicate as the
     * residual filter (extraction is conservative, so this is always sound).
+    * The predicate is planned against an empty relation of the table's
+    * schema, system columns and user fields, so the source is read once.
     */
   def offsetWindow(project: String, collection: String,
                    predicate: org.apache.spark.sql.Column): DataFrame = {
     val schema = userSchema(project, collection) // one metastore lookup
-    val full = source.read(spark, project, collection, schema)
-    val ranges = graft.plans.OffsetRangePlanner.fromPredicate(full, predicate)
+    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(SystemColumns.fields ++ schema.fields))
+    val ranges = graft.plans.OffsetRangePlanner.fromPredicate(empty, predicate)
     source.withOffsetRanges(ranges)
       .read(spark, project, collection, schema)
       .filter(predicate)

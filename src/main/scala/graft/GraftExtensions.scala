@@ -13,8 +13,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => PruneAvroDecode)
     ext.injectPostHocResolutionRule(s => new StandardGroupingSets(s))
-    // pre-CBO (right after V2ScanRelationPushDown): replace GraftLogScan's
-    // V1-bridge execution with the inner logical plan — native codegen/AQE
+    // pre-CBO: replace a file-backed log table's V1-bridge execution
+    // (GraftFileScan) with the inner logical plan — native codegen/AQE
     ext.injectPreCBORule(s => InlineLogScan(s))
     // fail loudly on the session_window end-filter pushdown hazard (the
     // shape Catalyst silently mis-optimizes; see SessionWindowGuard)

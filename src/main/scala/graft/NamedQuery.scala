@@ -142,9 +142,6 @@ object NamedQuery {
     * yearly average), computed past the decSum envelope: unscaled BIGINT →
     * one exact-constant division (k × 10^6 is exactly representable).
     */
-  def decSumDivConst(c: Column, k: Long): Column =
-    decSumUnscaled(c).cast("double") / lit(k * 1e6)
-
   def sqlDecSumDivConst(e: String, k: Long): String =
     s"CAST(${sqlDecSumUnscaled(e)} AS DOUBLE) / $k" + "000000.0"
 

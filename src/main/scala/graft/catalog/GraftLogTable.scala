@@ -3,17 +3,20 @@ package graft.catalog
 import java.util
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Row, SQLContext}
+import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.catalyst.{expressions => ce}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.connector.metric.CustomMetric
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.plans.{OffsetRange, OffsetRangePlanner}
-import graft.sources.{EventSource, KafkaEventSource}
+import graft.sources.{EventSource, KafkaEventSource, LogMicroBatchStream, OffsetAddressedSource}
 
 /** DSv2 table for an offset-addressed event LOG: `_offset` predicates from
   * ANY `spark.sql` query are pushed into the scan as pruned
@@ -22,13 +25,24 @@ import graft.sources.{EventSource, KafkaEventSource}
   * [[GraftLogScanBuilder.pushFilters]] is that hook, with
   * [[OffsetRangePlanner]] as the filter→range translator.
   *
-  * Execution follows Spark's own JDBC-connector pattern: the built scan is a
-  * [[V1Scan]] whose relation delegates to the collection's [[EventSource]]
-  * specialized to the pruned ranges (Kafka reads only those windows;
-  * columnar files get the ranges re-applied as an `_offset` residual that
-  * Catalyst pushes into the file scan). Every accepted filter is ALSO kept
-  * as a Spark-side residual, so pruning can only ever drop rows the
-  * predicate excludes (the planner's sound over-approximation).
+  * Execution depends on the collection's [[EventSource]]:
+  *
+  *  - an [[OffsetAddressedSource]] (Kafka) gets [[GraftLogScan]], a native
+  *    DSv2 batch and micro-batch scan: the raw source's own scans over the
+  *    pruned ranges, decoded at the reader. The planner sees one scan node
+  *    and optimizes the query once.
+  *  - a file source gets [[GraftFileScan]], a [[V1Scan]] over the source's
+  *    DataFrame read (Spark's own JDBC-connector pattern), which
+  *    [[graft.plans.InlineLogScan]] replaces with the native file scan when
+  *    the session has [[graft.GraftExtensions]].
+  *
+  * Pruning can only ever drop rows the predicate excludes. Over a file
+  * source every filter also stays a Spark-side residual (the planner's
+  * sound over-approximation). [[GraftLogScan]] instead enforces its ranges
+  * in the reader; they are exactly the filters `pushFilters` translated,
+  * so only the untranslated ones stay residual. (A residual's per-query
+  * offset bounds would land in the query's generated code and compile a
+  * new class for every window.)
   */
 final class GraftLogTable(
     tableName: String,
@@ -40,28 +54,45 @@ final class GraftLogTable(
 
   private val fullSchema = StructType(SystemColumns.fields ++ userSchema.fields)
 
+  /** Whether the table reads through [[GraftLogScan]] rather than a
+    * DataFrame.
+    */
+  def offsetAddressed: Boolean = source.isInstanceOf[OffsetAddressedSource]
+
   override def name(): String = tableName
   override def schema(): StructType = fullSchema
   override def capabilities(): util.Set[TableCapability] =
-    if (source.supportsMicroBatch)
+    if (offsetAddressed)
       util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
     else util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftLogScanBuilder(project, collection, userSchema, fullSchema, source)
 
-  /** The table's read at full schema, pruned to `ranges`, as a DataFrame —
-    * what [[graft.plans.InlineLogScan]] splices into query plans in place of
-    * this relation. Same construction as the scan path: pruned source read,
-    * offset-range residual, full-schema projection.
+  /** A file-backed table's read at full schema, pruned to `ranges`, as a
+    * DataFrame — what [[graft.plans.InlineLogScan]] splices into query
+    * plans in place of this relation.
     */
   def innerFrame(spark: org.apache.spark.sql.classic.SparkSession,
-                 ranges: Seq[OffsetRange]): org.apache.spark.sql.DataFrame = {
+                 ranges: Seq[OffsetRange]): org.apache.spark.sql.DataFrame =
+    GraftLogTable.fileFrame(spark, source, project, collection, userSchema, ranges, fullSchema)
+}
+
+object GraftLogTable {
+
+  /** A file source's read pruned to `ranges` and projected to `columns`: the
+    * source read, the ranges as an `_offset` residual (Catalyst pushes it
+    * into the file scan via the offset-column alias), the projection.
+    */
+  def fileFrame(spark: org.apache.spark.sql.classic.SparkSession, source: EventSource,
+                project: String, collection: String, userSchema: StructType,
+                ranges: Seq[OffsetRange],
+                columns: StructType): org.apache.spark.sql.DataFrame = {
     val full = source.withOffsetRanges(ranges).read(spark, project, collection, userSchema)
     val pruned =
       if (ranges == OffsetRangePlanner.Full) full
       else full.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), ranges))
-    pruned.select(fullSchema.fieldNames.map(col).toSeq: _*)
+    pruned.select(columns.fieldNames.map(col).toSeq: _*)
   }
 }
 
@@ -77,17 +108,18 @@ final class GraftLogScanBuilder(
   private var ranges: Seq[OffsetRange] = OffsetRangePlanner.Full
   private var accepted: Array[Filter] = Array.empty
 
-  /** Translate an `_offset`-only DSv2 filter into a [[Column]] predicate the
-    * [[OffsetRangePlanner]] understands; `None` = not an offset filter (or a
-    * shape the planner can't prune) — it stays a plain residual.
+  private val offset = ce.AttributeReference(SystemColumns.Offset, LongType, nullable = false)()
+
+  /** Translate an `_offset`-only DSv2 filter into a typed Catalyst predicate
+    * the [[OffsetRangePlanner]] understands; `None` = not an offset filter
+    * (or a shape the planner can't prune) — it stays a plain residual.
     */
-  private def toColumn(f: Filter): Option[Column] = {
-    val off = col(SystemColumns.Offset)
+  private def toExpression(f: Filter): Option[ce.Expression] = {
     // integral values only: a fractional literal truncated via longValue()
     // would prune UNDER-inclusively (LessThan(_offset, 2.5) -> [0,2) drops
     // offset 2) — exactly the unsoundness the planner's cast guard exists
     // to prevent. Non-integral shapes fall through to the plain residual.
-    def num(v: Any): Option[Long] = v match {
+    def num(v: Any): Option[ce.Literal] = (v match {
       case n: java.lang.Long => Some(n.longValue())
       case n: java.lang.Integer => Some(n.longValue())
       case n: java.lang.Short => Some(n.longValue())
@@ -95,54 +127,115 @@ final class GraftLogScanBuilder(
       case d: java.math.BigDecimal if d.stripTrailingZeros.scale <= 0 =>
         try Some(d.longValueExact()) catch { case _: ArithmeticException => None }
       case _ => None
-    }
+    }).map(ce.Literal(_))
     f match {
-      case sources.EqualTo(SystemColumns.Offset, v) => num(v).map(off === lit(_))
-      case sources.GreaterThan(SystemColumns.Offset, v) => num(v).map(off > lit(_))
-      case sources.GreaterThanOrEqual(SystemColumns.Offset, v) => num(v).map(off >= lit(_))
-      case sources.LessThan(SystemColumns.Offset, v) => num(v).map(off < lit(_))
-      case sources.LessThanOrEqual(SystemColumns.Offset, v) => num(v).map(off <= lit(_))
+      case sources.EqualTo(SystemColumns.Offset, v) => num(v).map(ce.EqualTo(offset, _))
+      case sources.GreaterThan(SystemColumns.Offset, v) => num(v).map(ce.GreaterThan(offset, _))
+      case sources.GreaterThanOrEqual(SystemColumns.Offset, v) =>
+        num(v).map(ce.GreaterThanOrEqual(offset, _))
+      case sources.LessThan(SystemColumns.Offset, v) => num(v).map(ce.LessThan(offset, _))
+      case sources.LessThanOrEqual(SystemColumns.Offset, v) =>
+        num(v).map(ce.LessThanOrEqual(offset, _))
       case sources.In(SystemColumns.Offset, vs) =>
         val ls = vs.toSeq.map(num)
-        // the CONVERTED longs must feed isin — raw values (e.g. integral
-        // BigDecimals) would wrap _offset in a decimal cast the planner
-        // conservatively refuses, silently disabling the pruning this
-        // branch just claimed via pushedFilters()
-        if (ls.nonEmpty && ls.forall(_.isDefined)) Some(off.isin(ls.flatten: _*))
-        else None
-      case sources.And(l, r) => for { a <- toColumn(l); b <- toColumn(r) } yield a && b
-      case sources.Or(l, r) => for { a <- toColumn(l); b <- toColumn(r) } yield a || b
+        if (ls.nonEmpty && ls.forall(_.isDefined)) Some(ce.In(offset, ls.flatten)) else None
+      case sources.And(l, r) => for { a <- toExpression(l); b <- toExpression(r) } yield ce.And(a, b)
+      case sources.Or(l, r) => for { a <- toExpression(l); b <- toExpression(r) } yield ce.Or(a, b)
       case _ => None
     }
   }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val spark = org.apache.spark.sql.classic.SparkSession.active
-    val translated = filters.map(f => f -> toColumn(f)).collect { case (f, Some(c)) => (f, c) }
+    val translated = filters.map(f => f -> toExpression(f)).collect { case (f, Some(e)) => (f, e) }
     accepted = translated.map(_._1)
     if (translated.nonEmpty) {
-      // one analysis pass over a relation exposing _offset resolves casts,
-      // then the planner extracts and normalizes the ranges
-      val dummy = spark.range(1).select(col("id").as(SystemColumns.Offset))
-      ranges = OffsetRangePlanner.fromPredicate(dummy, translated.map(_._2).reduce(_ && _))
+      // translated shapes extract exactly (no conjunct or disjunct is
+      // widened), so the ranges hold exactly the rows the filters keep
+      ranges = OffsetRangePlanner.fromExpression(translated.map(_._2).reduce(ce.And(_, _)))
     }
-    // EVERYTHING stays a Spark-side residual: range extraction prunes the
-    // scan but the engine never claims exactness to the optimizer
-    filters
+    source match {
+      case _: OffsetAddressedSource => filters.filterNot(accepted.contains)
+      case _ => filters
+    }
   }
 
   override def pushedFilters(): Array[Filter] = accepted
 
   override def pruneColumns(required: StructType): Unit = {
-    // empty required schema (e.g. COUNT(*)) still needs SOME column to count
-    requiredSchema = required
+    // top-level columns only, at their full types: the scans produce whole
+    // structs, so a nested-pruned read schema would misdescribe their rows.
+    // An empty required schema (e.g. COUNT(*)) reads rows with no columns.
+    val names = required.fieldNames.toSet
+    requiredSchema = StructType(fullSchema.filter(f => names(f.name)))
   }
 
-  override def build(): Scan =
-    new GraftLogScan(project, collection, userSchema, requiredSchema, ranges, source)
+  override def build(): Scan = source match {
+    case log: OffsetAddressedSource =>
+      new GraftLogScan(project, collection, userSchema, requiredSchema, ranges, log)
+    case _ =>
+      new GraftFileScan(project, collection, userSchema, requiredSchema, ranges, source)
+  }
 }
 
+/** Native DSv2 scan of an offset-addressed log: the batch is the source's
+  * [[graft.sources.LogBatch]] over the pruned ranges, the stream its
+  * [[graft.sources.LogMicroBatchStream]]. Both decode at the reader and
+  * return only rows whose offsets lie in the ranges, so the query plan holds
+  * one scan node and no per-query DataFrame.
+  */
 final class GraftLogScan(
+    project: String,
+    collection: String,
+    userSchema: StructType,
+    requiredSchema: StructType,
+    ranges: Seq[OffsetRange],
+    source: OffsetAddressedSource)
+    extends Scan {
+
+  private lazy val batch = source.batch(org.apache.spark.sql.classic.SparkSession.active,
+    project, collection, userSchema, requiredSchema, ranges)
+
+  // set when the scan is streamed (Spark does so before it plans the
+  // stream's physical scan), so a stream never builds the batch
+  @volatile private var stream: Option[LogMicroBatchStream] = None
+
+  override def readSchema(): StructType = requiredSchema
+
+  // the raw scans' descriptions carry each range's offsets and split
+  // request, so plans show the pruning and the splitting
+  override def description(): String =
+    s"GraftLogScan $project.$collection ranges=${GraftLogScan.rangesString(ranges)} " +
+      s"[${stream.fold(batch.description)(_.description)}]"
+
+  override def toBatch: Batch = batch
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    stream.fold(batch.supportedCustomMetrics)(_.supportedCustomMetrics)
+
+  /** Micro-batch streaming half of the scan (MICRO_BATCH_READ). The pruned
+    * ranges travel into the stream as a residual (streaming scans get no
+    * pushFilters pass, so this is normally [[OffsetRangePlanner.Full]]; a
+    * caller-side `_offset` filter still evaluates on the decoded rows).
+    */
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    val started = source.microBatchStream(org.apache.spark.sql.classic.SparkSession.active,
+      project, collection, userSchema, requiredSchema, ranges, checkpointLocation)
+    stream = Some(started)
+    started
+  }
+}
+
+object GraftLogScan {
+  def rangesString(ranges: Seq[OffsetRange]): String =
+    ranges.map(r => s"[${r.start},${r.end.map(_.toString).getOrElse("∞")})").mkString(",")
+}
+
+/** Scan of a file-backed log table: a [[V1Scan]] whose relation runs
+  * [[GraftLogTable.fileFrame]] — the fallback for sessions without
+  * [[graft.GraftExtensions]], whose [[graft.plans.InlineLogScan]] splices
+  * the same read into the plan natively.
+  */
+final class GraftFileScan(
     project: String,
     collection: String,
     userSchema: StructType,
@@ -154,56 +247,18 @@ final class GraftLogScan(
   override def readSchema(): StructType = requiredSchema
 
   override def description(): String =
-    s"GraftLogScan $project.$collection ranges=${rangesString}"
-
-  /** Micro-batch streaming half of the scan (MICRO_BATCH_READ, advertised
-    * only when the [[EventSource]] supports it): the source wraps ITS raw
-    * connector stream with the reader-level decode pipeline — see
-    * [[graft.sources.LogMicroBatchStream]]. The pruned ranges travel into
-    * the stream as a residual (streaming scans get no pushFilters pass, so
-    * this is normally [[OffsetRangePlanner.Full]]; a caller-side `_offset`
-    * filter still evaluates on the decoded rows).
-    */
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val spark = org.apache.spark.sql.classic.SparkSession.active
-    source.microBatchStream(spark, project, collection, userSchema,
-      requiredSchema, ranges, checkpointLocation)
-  }
-
-  private def rangesString: String =
-    ranges.map(r => s"[${r.start},${r.end.map(_.toString).getOrElse("∞")})").mkString(",")
-
-  /** The scan AS a DataFrame: the pruned source read, the offset-range
-    * residual, and the required-column projection. Both execution paths run
-    * exactly this frame — [[graft.plans.InlineLogScan]] splices its LOGICAL
-    * plan into the query (native codegen/AQE; the preferred path), and the
-    * [[V1Scan]] bridge below compiles it to an RDD (fallback for sessions
-    * without GraftExtensions).
-    */
-  def innerFrame(spark: org.apache.spark.sql.classic.SparkSession): org.apache.spark.sql.DataFrame = {
-    val full = source.withOffsetRanges(ranges)
-      .read(spark, project, collection, userSchema)
-    // ranges re-applied as an _offset residual: offset-addressed sources
-    // already pruned at the broker; columnar sources get this predicate
-    // pushed into the file scan by Catalyst (via the offset-column alias)
-    val pruned =
-      if (ranges == OffsetRangePlanner.Full) full
-      else full.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), ranges))
-    if (requiredSchema.isEmpty) pruned.select()
-    else pruned.select(requiredSchema.fieldNames.map(col).toSeq: _*)
-  }
+    s"GraftFileScan $project.$collection ranges=${GraftLogScan.rangesString(ranges)}"
 
   override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
     val scan = this
     new BaseRelation with TableScan {
       override def sqlContext: SQLContext = context
       override def schema: StructType = requiredSchema
-      override def toString: String =
-        s"GraftLog ${project}.${collection} ranges=${scan.rangesString}"
+      override def toString: String = scan.description()
       override def buildScan(): RDD[Row] = {
         val spark = context.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        scan.innerFrame(spark).asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].rdd
+        GraftLogTable.fileFrame(spark, source, project, collection, userSchema, ranges,
+          requiredSchema).asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].rdd
       }
     }.asInstanceOf[T]
   }

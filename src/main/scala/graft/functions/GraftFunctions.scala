@@ -116,7 +116,4 @@ object GraftFunctions {
   def cosine(a: Column, b: Column): Column =
     dotDecimal(a, b).cast("double") /
       (sqrt(dotDecimal(a, a).cast("double")) * sqrt(dotDecimal(b, b).cast("double")))
-
-  def sqlCosine(a: String, b: String): String =
-    s"CAST(${sqlDotDecimal(a, b)} AS DOUBLE) / (sqrt(CAST(${sqlDotDecimal(a, a)} AS DOUBLE)) * sqrt(CAST(${sqlDotDecimal(b, b)} AS DOUBLE)))"
 }

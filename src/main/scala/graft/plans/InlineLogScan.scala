@@ -8,19 +8,22 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.catalog.GraftLogTable
 
-/** Inline a [[GraftLogTable]]'s read as a native part of the query plan,
-  * replacing the DSv2 relation (and with it the `V1Scan` RDD bridge the
-  * table's ScanBuilder would otherwise execute through).
+/** Inline a file-backed [[GraftLogTable]]'s read as a native part of the
+  * query plan, replacing the DSv2 relation (and with it the `V1Scan` RDD
+  * bridge, [[graft.catalog.GraftFileScan]], the table's ScanBuilder would
+  * otherwise execute through). Tables over an offset-addressed source
+  * (Kafka) are left alone: their [[graft.catalog.GraftLogScan]] is already
+  * a native DSv2 batch scan.
   *
   * Why: the bridge compiles the inner DataFrame to an `RDD[Row]`, so
   * everything above it loses whole-stage-codegen fusion with the scan and
   * pays an InternalRow→Row→InternalRow conversion per row. At fixture scale
   * that is noise; at 100 TB it is a per-row tax on every log query. With
   * the inner LOGICAL plan spliced in instead, the file scan (parquet/ORC/
-  * JSON/CSV) or per-range Kafka union is planned natively: Catalyst pushes
-  * the `_offset` predicate through the system-column alias into the file
-  * scan (`PushedFilters` on the offset stand-in column), column pruning
-  * reaches the reader schema, and AQE plans the whole tree.
+  * JSON/CSV) is planned natively: Catalyst pushes the `_offset` predicate
+  * through the system-column alias into the file scan (`PushedFilters` on
+  * the offset stand-in column), column pruning reaches the reader schema,
+  * and AQE plans the whole tree.
   *
   * Runs as a PRE-CBO rule, which in Spark 4 sits AFTER the operator
   * optimization batches (filters are settled directly above the relation —
@@ -34,8 +37,7 @@ import graft.catalog.GraftLogTable
   * final RewriteSubquery batch (ColumnPruning + CollapseProject re-run
   * after Pre CBO), so file scans still read only referenced columns.
   *
-  * The inner plan is optimized as a detached subtree first (an inner DSv2
-  * source such as FakeKafka needs its own scan-pushdown pass — the
+  * The inner plan is optimized as a detached subtree first (the
   * OptimizeSubqueries re-entrancy pattern), then spliced under a Project
   * that re-binds the relation's attribute ids onto the inner output. The
   * `V1Scan` bridge remains the fallback for sessions that registered the
@@ -53,8 +55,10 @@ case class InlineLogScan(session: SparkSession) extends Rule[LogicalPlan] {
       inline(rel, OffsetRangePlanner.Full).getOrElse(rel)
   }
 
-  private def isLogTable(rel: DataSourceV2Relation): Boolean =
-    rel.table.isInstanceOf[GraftLogTable]
+  private def isLogTable(rel: DataSourceV2Relation): Boolean = rel.table match {
+    case t: GraftLogTable => !t.offsetAddressed
+    case _ => false
+  }
 
   /** The relation's read as an optimized detached plan, output re-bound to
     * the relation's exprIds. `None` = leave the relation alone (the V1

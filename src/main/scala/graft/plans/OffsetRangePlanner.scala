@@ -171,27 +171,9 @@ object OffsetRangePlanner {
     }
   }
 
-  /** Segment-aligned split generation (reference C4,
-    * `KafkaSplitManager.java:180-188` + design note `KafkaSplit.java:27-33`:
-    * one split per log segment so a single partition parallelizes across
-    * workers). Given ascending segment boundary offsets and a pruned range,
-    * emit per-segment `[start, end)` splits clamped to the range. `latest`
-    * resolves unbounded-high ends — the plan-time snapshot of the live log
-    * head (`KafkaSplitManager.java:194-216`). No read path calls this yet:
-    * batch reads size their splits with
-    * [[graft.sources.KafkaEventSource.splitRequests]].
-    */
-  def segmentSplits(boundaries: Seq[Long], range: OffsetRange, latest: Long): Seq[OffsetRange] = {
-    val end = math.min(range.end.getOrElse(latest), latest)
-    if (end <= range.start) return Nil
-    val bs = (boundaries.filter(b => b > range.start && b < end).distinct.sorted
-      .prepended(range.start) :+ end)
-    bs.sliding(2).collect { case Seq(s, e) if e > s => OffsetRange(s, Some(e)) }.toSeq
-  }
-
   /** `startingOffsets`/`endingOffsets` JSON for Spark's Kafka batch source,
-    * for the first (or only) pruned range across all partitions of a topic.
-    * Multi-range windows run as a union of per-range reads.
+    * for one pruned range across all partitions of a topic. Multi-range
+    * windows read one raw scan per range.
     */
   def kafkaOffsetJson(topic: String, numPartitions: Int, range: OffsetRange): (String, String) = {
     def json(v: String): String =

@@ -22,25 +22,31 @@ trait EventSource {
     * them (the residual filter always runs either way).
     */
   def withOffsetRanges(ranges: Seq[graft.plans.OffsetRange]): EventSource = this
+}
 
-  /** Whether [[microBatchStream]] is implemented — gates the DSv2 table's
-    * MICRO_BATCH_READ capability so `spark.readStream.table` is only
-    * offered where it can run.
+/** A source whose rows are addressed by log offset (Kafka). The DSv2
+  * catalog reads it natively instead of through [[EventSource.read]]: the
+  * raw source's own scans over the pruned windows, decoded at the reader to
+  * `requiredSchema` (a projection of system columns + user fields).
+  */
+trait OffsetAddressedSource extends EventSource {
+
+  /** Batch read of the collection over `ranges`, returning exactly the rows
+    * whose offsets lie in them; no ranges read nothing.
     */
-  def supportsMicroBatch: Boolean = false
+  def batch(spark: SparkSession, project: String, collection: String,
+            schema: StructType,
+            requiredSchema: StructType,
+            ranges: Seq[graft.plans.OffsetRange]): LogBatch
 
-  /** DSv2 micro-batch stream of the collection decoded to
-    * `requiredSchema` (a projection of system columns + user fields).
-    * Only offset-addressed sources implement this; file collections
-    * stream through the engine API's file-stream path instead.
+  /** Micro-batch stream of the collection from the first range's start;
+    * the ranges apply as a residual on the decoded rows.
     */
   def microBatchStream(spark: SparkSession, project: String, collection: String,
                        schema: StructType,
                        requiredSchema: StructType,
                        ranges: Seq[graft.plans.OffsetRange],
-                       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    throw new UnsupportedOperationException(
-      s"${getClass.getSimpleName} does not support micro-batch streaming")
+                       checkpointLocation: String): LogMicroBatchStream
 }
 
 object EventSource {

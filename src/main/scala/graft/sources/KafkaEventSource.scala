@@ -1,8 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThan, Literal, Or}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.connector.catalog.{SupportsRead, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.read.Scan
+import org.apache.spark.sql.execution.datasources.DataSource
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.SystemColumns
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
@@ -48,10 +58,12 @@ case object JsonPayloadCodec extends PayloadCodec {
   * actually owned:
   *
   *  - offset windows: pruned [[OffsetRange]]s (from
-  *    [[OffsetRangePlanner.fromPredicate]]) become `startingOffsets` /
-  *    `endingOffsets` JSON — the C3 pushdown. Multi-range windows read as a
-  *    union of per-range scans (correctly, unlike the reference's
-  *    overlapping-slot bug).
+  *    [[OffsetRangePlanner]]) become `startingOffsets` / `endingOffsets`
+  *    JSON — the C3 pushdown. A multi-range window reads one raw scan per
+  *    range (correctly, unlike the reference's overlapping-slot bug): the
+  *    DSv2 catalog concatenates the raw scans' partitions in one
+  *    [[LogBatch]] ([[batch]]), the engine API's [[read]] unions per-range
+  *    DataFrames.
   *  - segment-granular parallelism (C4/O3): a batch read asks the source to
   *    split each topic partition by offset range (its `minPartitions`
   *    option, Spark's analogue of one split per log segment). The request
@@ -62,7 +74,11 @@ case object JsonPayloadCodec extends PayloadCodec {
   *    messages per split. Ranges without an end, and streams, keep one
   *    split per topic partition; an explicit `minPartitions` wins.
   *  - codec decode with schema resolution + malformed-row drop (C6) and
-  *    hidden system-column synthesis (C7).
+  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]].
+  *    The catalog's batch and micro-batch scans run it at the reader, as a
+  *    [[RowPipeline]] analyzed once per collection and codec
+  *    ([[KafkaEventSource.decodePlan]]); [[read]] runs it as DataFrame
+  *    operators.
   *  - buffer/timeout knobs default to the reference's
   *    (`KafkaConnectorPageSource.java:62` 1 MB fetch,
   *    `KafkaConnectorConfig.java:44-49` 64 KB socket / 10 s connect).
@@ -82,7 +98,7 @@ final case class KafkaEventSource(
     // connector, tests swap in [[FakeKafka]] to drive the FULL read path
     // (per-range union, offset JSON, minPartitions) without a broker
     format: String = "kafka")
-    extends EventSource {
+    extends OffsetAddressedSource {
 
   override def withOffsetRanges(ranges: Seq[OffsetRange]): EventSource =
     copy(offsetRanges = ranges)
@@ -129,13 +145,16 @@ final case class KafkaEventSource(
   def streamOptions(topic: String, ranges: Seq[OffsetRange]): Map[String, String] =
     readOptions(topic, OffsetRange(ranges.head.start, None)) - "endingOffsets"
 
+  /** Engine-API batch read (`GraftEngine.offsetWindow`, q41): the ranges'
+    * raw frames, unioned, then [[decodeRaw]].
+    */
   override def read(spark: SparkSession, project: String, collection: String,
                     schema: StructType): DataFrame = {
     val topic = SystemColumns.topicFor(project, collection)
     if (offsetRanges.isEmpty) {
       // contradictory predicate pruned everything — empty relation, not a crash
       val full = StructType(SystemColumns.fields ++ schema.fields)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
     } else {
       val raw = batchOptions(spark, topic)
         .map(opts => spark.read.format(format).options(opts).load())
@@ -168,55 +187,66 @@ final case class KafkaEventSource(
     decoded.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), offsetRanges))
   }
 
-  override def supportsMicroBatch: Boolean = true
+  /** DSv2 batch of the catalog's `spark.sql` path: one raw scan per range
+    * with [[batchOptions]] (so the split requests are [[read]]'s), decoded
+    * at the reader. The reader also applies the ranges as a residual, so
+    * the batch returns exactly their offsets whatever the raw source reads
+    * (the catalog drops the translated filters from Spark's residual).
+    */
+  override def batch(spark: SparkSession, project: String, collection: String,
+                     schema: StructType,
+                     requiredSchema: StructType,
+                     ranges: Seq[OffsetRange]): LogBatch = {
+    val topic = SystemColumns.topicFor(project, collection)
+    new LogBatch(copy(offsetRanges = ranges).batchOptions(spark, topic).map(rawScan(spark, _)),
+      pipeline(spark, project, collection, schema, requiredSchema, ranges))
+  }
 
   /** DSv2 micro-batch stream (the [[graft.catalog.GraftLogTable]] streaming
-    * path — `spark.readStream.table("graft.<project>.<collection>")`):
-    * obtain the RAW source's own [[MicroBatchStream]] from its
-    * `TableProvider` (the Kafka connector in production, [[FakeKafka]] in
-    * tests — same options [[readOptions]] builds for `readStream`), then
-    * wrap it in a [[LogMicroBatchStream]] that decodes at the reader via
-    * the [[RowPipeline]] compiled from the SAME `decodeRaw` + residual +
-    * projection DataFrame the engine-API streaming path declares. Offset
+    * path — `spark.readStream.table("graft.<project>.<collection>")`): the
+    * raw source's own `MicroBatchStream` with [[streamOptions]] (the same
+    * options `readStream` uses), wrapped in a [[LogMicroBatchStream]] that
+    * decodes at the reader. Streams have no `endingOffsets`, so the pruned
+    * window is a residual in the reader, as in `readStream`. Offset
     * checkpointing is the inner connector's, untouched.
     */
   override def microBatchStream(spark: SparkSession, project: String, collection: String,
                                 schema: StructType,
                                 requiredSchema: StructType,
                                 ranges: Seq[OffsetRange],
-                                checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    import scala.jdk.CollectionConverters._
+                                checkpointLocation: String): LogMicroBatchStream = {
     val topic = SystemColumns.topicFor(project, collection)
     val effective = if (ranges.nonEmpty) ranges else OffsetRangePlanner.Full
-    // streams have no endingOffsets: tell the broker the coarse start, keep
-    // the pruned multi-range window as a residual in the decode pipeline
-    // (identical to readStream's contract)
-    val opts = streamOptions(topic, effective)
-    val providerClass = org.apache.spark.sql.execution.datasources.DataSource
-      .lookupDataSource(format, spark.sessionState.conf)
-    val provider = providerClass.getDeclaredConstructor().newInstance()
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableProvider]
-    val optMap = new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts.asJava)
-    val rawTable = provider.getTable(provider.inferSchema(optMap),
-      Array.empty[org.apache.spark.sql.connector.expressions.Transform],
-      optMap.asCaseSensitiveMap())
-    val innerStream = rawTable.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
-      .newScanBuilder(optMap).build()
-      .toMicroBatchStream(s"$checkpointLocation/raw")
+    new LogMicroBatchStream(rawScan(spark, streamOptions(topic, effective)),
+      s"$checkpointLocation/raw",
+      pipeline(spark, project, collection, schema, requiredSchema, effective))
+  }
 
-    // the decode as a DataFrame over a dummy raw-frame relation — analyzed
-    // once on the driver, compiled to per-row projections on executors
-    val rawDummy = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), FakeKafka.frameSchema)
-    val decoded = KafkaEventSource.decodeRaw(rawDummy, project, collection, schema, codec)
-    val windowed =
-      if (effective == OffsetRangePlanner.Full) decoded
-      else decoded.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), effective))
-    val projected =
-      if (requiredSchema.isEmpty) windowed.select()
-      else windowed.select(requiredSchema.fieldNames.map(col).toIndexedSeq: _*)
-    new LogMicroBatchStream(innerStream, RowPipeline.compile(projected))
+  /** The raw source's own DSv2 scan for `opts`, through its `TableProvider`
+    * (Spark's Kafka connector, or [[FakeKafka]] in tests).
+    */
+  private def rawScan(spark: SparkSession, opts: Map[String, String]): Scan = {
+    val provider = DataSource.lookupDataSource(format, spark.sessionState.conf)
+      .getDeclaredConstructor().newInstance().asInstanceOf[TableProvider]
+    val optMap = new CaseInsensitiveStringMap(opts.asJava)
+    provider.getTable(provider.inferSchema(optMap), Array.empty[Transform],
+      optMap.asCaseSensitiveMap())
+      .asInstanceOf[SupportsRead].newScanBuilder(optMap).build()
+  }
+
+  /** Reader pipeline from raw frames to `requiredSchema`: the cached decode,
+    * then the `ranges` residual (unless [[OffsetRangePlanner.Full]]) and the
+    * projection, built without analysis.
+    */
+  private def pipeline(spark: SparkSession, project: String, collection: String,
+                       schema: StructType, requiredSchema: StructType,
+                       ranges: Seq[OffsetRange]): RowPipeline.Pipeline = {
+    val decode = KafkaEventSource.decodePlan(spark, project, collection, schema, codec)
+    val window =
+      if (ranges == OffsetRangePlanner.Full) None
+      else Some(KafkaEventSource.rangePredicate(
+        decode.output.find(_.name == SystemColumns.Offset).get, ranges))
+    RowPipeline.pipeline(decode, window, requiredSchema.fieldNames.toIndexedSeq)
   }
 }
 
@@ -257,10 +287,52 @@ object KafkaEventSource {
     * pruned window exactly.
     */
   def rangeResidual(offset: Column, ranges: Seq[OffsetRange]): Column =
+    Bridge.column(rangePredicate(Bridge.expression(offset), ranges))
+
+  /** [[rangeResidual]] over a Catalyst expression, for reader pipelines. */
+  def rangePredicate(offset: Expression, ranges: Seq[OffsetRange]): Expression =
     ranges
-      .map(r => r.end.fold(offset >= r.start)(e => offset >= r.start && offset < e))
-      .reduceOption(_ || _)
-      .getOrElse(lit(false))
+      .map { r =>
+        val from = GreaterThanOrEqual(offset, Literal(r.start))
+        r.end.fold[Expression](from)(e => And(from, LessThan(offset, Literal(e))))
+      }
+      .reduceOption[Expression](Or(_, _))
+      .getOrElse(Literal(false))
+
+  /** Most decode plans [[decodePlan]] keeps. */
+  private val MaxDecodePlans = 256
+
+  private val decodeCache =
+    new java.util.LinkedHashMap[AnyRef, LogicalPlan](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, LogicalPlan]): Boolean =
+        size() > MaxDecodePlans
+    }
+
+  private val compilations = new java.util.concurrent.atomic.AtomicLong
+
+  /** Decode plans analyzed so far in this JVM (cache misses of
+    * [[decodePlan]]).
+    */
+  def decodeCompilations: Long = compilations.get()
+
+  /** [[decodeRaw]] of a raw Kafka frame as a [[RowPipeline.analyzed]] plan,
+    * analyzed once per (collection, schema, codec, session time zone) over
+    * an empty raw relation and kept in a bounded LRU cache, so scans plan
+    * without analysis. Its filter is the malformed-row verdict. The decode
+    * reads the full writer record, so a payload is dropped as malformed
+    * exactly when `decodeRaw` drops it, whichever columns a scan reads.
+    */
+  def decodePlan(spark: SparkSession, project: String, collection: String,
+                 schema: StructType, codec: PayloadCodec): LogicalPlan = {
+    val key = (project, collection, schema, codec, spark.conf.get("spark.sql.session.timeZone"))
+    decodeCache.synchronized(Option(decodeCache.get(key))).getOrElse {
+      compilations.incrementAndGet()
+      val raw = spark.createDataFrame(new java.util.ArrayList[Row](), FakeKafka.frameSchema)
+      val plan = RowPipeline.analyzed(decodeRaw(raw, project, collection, schema, codec))
+      decodeCache.synchronized(decodeCache.put(key, plan))
+      plan
+    }
+  }
 
   /** Kafka-shaped rows (`value` binary, `offset` long) → the engine's table
     * shape: system columns first, decoded user fields after, malformed rows

@@ -1,15 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.metric.CustomMetric
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 
 /** DSv2 [[MicroBatchStream]] for an offset-addressed log table: wraps the
-  * underlying raw source's stream (Kafka's own connector in production,
+  * stream of the raw source's scan `raw` (Kafka's own connector in production,
   * [[FakeKafka]] in the sandbox — both expose the same 7-column raw frame)
-  * and decodes each raw record to the table's schema at the reader via a
-  * [[RowPipeline]] compiled from the SAME DataFrame decode the batch scan
-  * runs.
+  * and decodes each raw record to the table's schema at the reader via the
+  * same [[RowPipeline]] decode the batch scan ([[LogBatch]]) runs.
   *
   * Offset bookkeeping (initial/latest/deserialize/commit) is delegated
   * verbatim to the inner stream — the wrapper adds no state of its own, so
@@ -19,9 +18,17 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
   * and locality at any executor count.
   */
 final class LogMicroBatchStream(
-    inner: MicroBatchStream,
-    pipeline: Seq[RowPipeline.Stage])
+    raw: Scan,
+    checkpointLocation: String,
+    pipeline: RowPipeline.Pipeline)
     extends MicroBatchStream {
+
+  private val inner = raw.toMicroBatchStream(checkpointLocation)
+
+  /** The raw scan's own description: the offsets the stream starts from. */
+  def description: String = raw.description()
+
+  def supportedCustomMetrics: Array[CustomMetric] = DecodingReaderFactory.metrics(Seq(raw))
 
   override def initialOffset(): Offset = inner.initialOffset()
   override def latestOffset(): Offset = inner.latestOffset()
@@ -30,35 +37,8 @@ final class LogMicroBatchStream(
   override def stop(): Unit = inner.stop()
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    inner.planInputPartitions(start, end)
+    inner.planInputPartitions(start, end).map(RangePartition(0, _))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    DecodingReaderFactory(inner.createReaderFactory(), pipeline)
-}
-
-/** Wraps the raw source's reader factory; each reader pulls raw rows and
-  * streams them through the compiled decode pipeline, dropping rows the
-  * pipeline filters out (malformed payloads, offset-window residuals).
-  */
-final case class DecodingReaderFactory(
-    inner: PartitionReaderFactory,
-    pipeline: Seq[RowPipeline.Stage])
-    extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val raw = inner.createReader(partition)
-    val eval = new RowPipeline.Eval(pipeline)
-    new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean = {
-        while (raw.next()) {
-          val out = eval(raw.get())
-          if (out != null) { current = out; return true }
-        }
-        false
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = raw.close()
-    }
-  }
+    DecodingReaderFactory(Seq(inner.createReaderFactory()), pipeline)
 }

@@ -252,12 +252,10 @@ class FakeKafkaSpec extends SparkTestBase {
       .select("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
     val batch = graft.sources.KafkaEventSource
       .decodeRaw(raw, "p", "c", schema, graft.sources.AvroPayloadCodec).collect()
-    val stages = graft.sources.RowPipeline.compile(
-      graft.sources.KafkaEventSource.decodeRaw(
-        s0.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          graft.sources.FakeKafka.frameSchema),
-        "p", "c", schema, graft.sources.AvroPayloadCodec))
-    val eval = new graft.sources.RowPipeline.Eval(stages)
+    val decode = graft.sources.KafkaEventSource
+      .decodePlan(s0, "p", "c", schema, graft.sources.AvroPayloadCodec)
+    val pipeline = graft.sources.RowPipeline.pipeline(decode, None, decode.output.map(_.name))
+    val eval = new graft.sources.RowPipeline.Eval(pipeline.decode ++ pipeline.select)
     val decoded = raw.queryExecution.toRdd.collect().flatMap(r => Option(eval(r)))
     assert(batch.length == 1 && decoded.length == 1)   // garbage dropped on both paths
     assert(decoded.head.getLong(0) == 5L)              // _offset

@@ -110,19 +110,6 @@ class OffsetRangePlannerSpec extends SparkTestBase {
     assert(plan(off > -5) == Seq(OffsetRange(0, None)))
   }
 
-  test("segment splits cover the pruned range exactly, cut at boundaries") {
-    val splits = OffsetRangePlanner.segmentSplits(
-      boundaries = Seq(0L, 100L, 200L, 300L),
-      range = OffsetRange(50L, Some(250L)), latest = 1000L)
-    assert(splits == Seq(
-      OffsetRange(50, Some(100)), OffsetRange(100, Some(200)), OffsetRange(200, Some(250))))
-    // unbounded-high resolves to live latest (reference :163-167)
-    val open = OffsetRangePlanner.segmentSplits(Seq(0L, 100L), OffsetRange(0L, None), latest = 150L)
-    assert(open == Seq(OffsetRange(0, Some(100)), OffsetRange(100, Some(150))))
-    // empty when range starts past latest
-    assert(OffsetRangePlanner.segmentSplits(Seq(0L), OffsetRange(500L, None), 100L).isEmpty)
-  }
-
   test("narrowing casts are NOT unwrapped (would drop aliased offsets)") {
     // cast(_offset AS INT) = 5 also matches 2^32+5 etc. (ANSI off): pruning
     // to [5,6) would silently drop rows the residual filter keeps. Must
