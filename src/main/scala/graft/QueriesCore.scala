@@ -1270,7 +1270,7 @@ object QueriesCore {
     // Schema evolution through the correctness gate: rows encoded under the
     // v1 writer schema, decoded under an EVOLVED reader — a renamed column
     // (alias maps old name) plus a new nullable column (defaults to null) —
-    // the ResolvingDecoder semantics of C6 (reference PageDatumReader.java:68-93)
+    // Avro's schema-resolution semantics of C6 (reference PageDatumReader.java:68-93)
     // hash-checked against the original rows.
     NamedQuery("q39_avro_schema_evolution",
       (s, dir) => {

@@ -690,8 +690,8 @@ object QueriesStreaming {
     // (KafkaConnectorPageSource.java:298; its test harness only ever
     // produced JSON, so this goes one further). FakeKafka now writes
     // binary Avro through the SAME AvroSchemas.toAvro schema the decode
-    // side derives from the metastore, and the reader-level RowPipeline
-    // runs the native AvroDecode expression (writer/reader resolution,
+    // side derives from the metastore, and the reader decodes it with an
+    // AvroReadPlan straight into the scan's row (writer/reader resolution,
     // C6 malformed-drop: every 300th offset is garbage bytes and must
     // vanish in-flight). Static head → the whole window arrives in one
     // micro-batch (multi-batch cadence is s09's job); the caller-side

@@ -1,28 +1,25 @@
 package graft.functions
 
 import org.apache.avro.Schema
-import org.apache.avro.io.{BinaryDecoder, DecoderFactory, ResolvingDecoder}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Decode an Avro-binary payload column into a struct, with writer/reader
   * **schema resolution** and **projection pushdown** — the Spark-native
-  * rebuild of the reference's `PageDatumReader` (C6):
+  * rebuild of the reference's `PageDatumReader` (C6), run by the engine's
+  * one Avro decoder, an [[AvroReadPlan]] compiled once per expression:
   *
-  *  - the reader schema may be a projection of the writer schema; the
-  *    `ResolvingDecoder` *byte-skips* unqueried fields without materializing
-  *    them (reference `PageDatumReader.java:210-271`), so scan cost tracks
-  *    queried columns, not record width — the property that matters at
-  *    100 TB (reference built its reader schema the same way,
+  *  - the reader schema may be a projection of the writer schema; the plan
+  *    *byte-skips* unqueried fields without materializing them (reference
+  *    `PageDatumReader.java:210-271`), so scan cost tracks queried columns,
+  *    not record width — the property that matters at 100 TB (reference
+  *    built its reader schema the same way,
   *    `KafkaConnectorPageSource.java:91-105`).
   *  - schema evolution: fields added to the writer are skipped; reader
   *    fields missing from the writer resolve to their defaults; renames via
   *    Avro aliases (`Schema.applyAliases`, reference `PageDatumReader.java:84`).
-  *  - nullable fields are `union[null, T]`, branch chosen by `readIndex()`
+  *  - nullable fields are `union[null, T]`, branch chosen per datum
   *    (reference `PageDatumReader.java:127-129`).
   *  - malformed payloads decode to NULL; the caller filters them out —
   *    the reference logged + skipped (`KafkaConnectorPageSource.java:300-307`).
@@ -40,106 +37,24 @@ case class AvroDecode(
     readerSchemaJson: String)
     extends UnaryExpression with CodegenFallback {
 
-  @transient private lazy val writerSchema = new Schema.Parser().parse(writerSchemaJson)
   @transient private lazy val readerSchema = new Schema.Parser().parse(readerSchemaJson)
 
   override lazy val dataType: DataType = AvroSchemas.toSpark(readerSchema)
   override def nullable: Boolean = true
   override def prettyName: String = "avro_decode"
 
-  // Per-instance decoder state. Each task deserializes its own expression
-  // tree and evaluates single-threaded, so plain instance reuse is safe —
-  // the same confinement GenericDatumReader gets from its thread-local cache.
-  @transient private var binaryDecoder: BinaryDecoder = _
-  @transient private var resolver: ResolvingDecoder = _
+  @transient private lazy val plan =
+    AvroReadPlan.compile(new Schema.Parser().parse(writerSchemaJson), readerSchema)
+
+  // Per-instance cursor. Each task deserializes its own expression tree and
+  // evaluates single-threaded, so plain instance reuse is safe.
+  @transient private lazy val cursor = new AvroCursor
 
   override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    try {
-      binaryDecoder = DecoderFactory.get().binaryDecoder(bytes, binaryDecoder)
-      if (resolver == null) {
-        resolver = DecoderFactory.get().resolvingDecoder(
-          Schema.applyAliases(writerSchema, readerSchema), readerSchema, binaryDecoder)
-      } else {
-        resolver.configure(binaryDecoder)
-      }
-      val row = read(readerSchema)
-      resolver.drain()
-      row
-    } catch {
-      // malformed payload ⇒ NULL row; parity with the reference's
-      // log-and-skip (KafkaConnectorPageSource.java:300-307)
-      case _: java.io.IOException | _: org.apache.avro.AvroRuntimeException |
-          _: IndexOutOfBoundsException | _: IllegalArgumentException =>
-        resolver = null // mid-stream failure leaves the decoder unusable
-        null
-    }
-  }
-
-  private def read(s: Schema): Any = s.getType match {
-    case Schema.Type.UNION =>
-      read(s.getTypes.get(resolver.readIndex()))
-    case Schema.Type.NULL => resolver.readNull(); null
-    case Schema.Type.STRING =>
-      val u = resolver.readString(null)
-      UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
-    case Schema.Type.LONG => resolver.readLong()
-    case Schema.Type.INT => resolver.readInt()
-    case Schema.Type.FLOAT => resolver.readFloat()
-    case Schema.Type.DOUBLE => resolver.readDouble()
-    case Schema.Type.BOOLEAN => resolver.readBoolean()
-    case Schema.Type.ENUM =>
-      UTF8String.fromString(s.getEnumSymbols.get(resolver.readEnum()))
-    case Schema.Type.BYTES =>
-      val bb = resolver.readBytes(null)
-      val out = new Array[Byte](bb.remaining())
-      bb.get(out)
-      out
-    case Schema.Type.ARRAY =>
-      val elem = s.getElementType
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var n = resolver.readArrayStart()
-      while (n > 0) {
-        var i = 0L
-        while (i < n) { buf += read(elem); i += 1 }
-        n = resolver.arrayNext()
-      }
-      new GenericArrayData(buf.toArray)
-    case Schema.Type.RECORD =>
-      // nested records recurse through the SAME resolver: readFieldOrder()
-      // is positional, so writer-side sibling fields (and nested fields
-      // absent from the reader) byte-skip exactly like top-level ones —
-      // this is what makes nested-field pruning (PruneAvroDecode +
-      // AvroSchemas.projectNestedField) an actual IO win. Beyond reference:
-      // PageDatumReader.java:156-160 threw on RECORD.
-      val fields = resolver.readFieldOrder()
-      val row = new GenericInternalRow(s.getFields.size())
-      var i = 0
-      while (i < fields.length) {
-        val f = fields(i)
-        row.update(f.pos(), read(f.schema()))
-        i += 1
-      }
-      row
-    case Schema.Type.MAP =>
-      val vt = s.getValueType
-      val keys = scala.collection.mutable.ArrayBuffer.empty[Any]
-      val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var n = resolver.readMapStart()
-      while (n > 0) {
-        var i = 0L
-        while (i < n) {
-          val k = resolver.readString(null)
-          keys += UTF8String.fromBytes(k.getBytes, 0, k.getByteLength)
-          vals += read(vt)
-          i += 1
-        }
-        n = resolver.mapNext()
-      }
-      new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
-    case other =>
-      // FIXED etc. — outside even the extended lattice (AvroSchemas doc)
-      throw new UnsupportedOperationException(s"avro type not supported in decode: $other")
+    val row = new GenericInternalRow(plan.width)
+    // malformed payload ⇒ NULL row; parity with the reference's
+    // log-and-skip (KafkaConnectorPageSource.java:300-307)
+    if (plan.read(cursor, input.asInstanceOf[Array[Byte]], row)) row else null
   }
 
   override protected def withNewChildInternal(newChild: Expression): AvroDecode =

@@ -86,7 +86,7 @@ object AvroSchemas {
   }
 
   /** Reader schema projected to `names` (in writer field order) — the C6/O2
-    * projection pushdown unit: `ResolvingDecoder` byte-skips every field not
+    * projection pushdown unit: the [[AvroReadPlan]] byte-skips every field not
     * in the reader schema (reference `KafkaConnectorPageSource.java:91-105`,
     * skip logic `PageDatumReader.java:210-271`).
     */

@@ -12,7 +12,7 @@ import graft.functions.{AvroDecode, AvroSchemas}
 /** Projection pushdown into the Avro decoder (reference O2): when a decoded
   * struct `e = avro_decode(value)` is only ever accessed through
   * `e.field` extractions, shrink the decoder's *reader schema* to exactly
-  * those fields. `ResolvingDecoder` then byte-skips everything else — the
+  * those fields. Its [[graft.functions.AvroReadPlan]] then byte-skips everything else — the
   * reference's behavior of building an expected schema containing only the
   * queried columns (`KafkaConnectorPageSource.java:91-105`, skip logic
   * `PageDatumReader.java:210-271`).

@@ -4,7 +4,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThan, Literal, Or}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{SupportsRead, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.Scan
@@ -15,7 +14,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.SystemColumns
-import graft.functions.{AvroSchemas, GraftFunctions => GF}
+import graft.functions.{AvroReadPlan, AvroSchemas, GraftFunctions => GF}
 import graft.plans.{OffsetRange, OffsetRangePlanner}
 
 /** Payload codec: Kafka `value` bytes → typed struct (null on malformed).
@@ -74,11 +73,13 @@ case object JsonPayloadCodec extends PayloadCodec {
   *    messages per split. Ranges without an end, and streams, keep one
   *    split per topic partition; an explicit `minPartitions` wins.
   *  - codec decode with schema resolution + malformed-row drop (C6) and
-  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]].
-  *    The catalog's batch and micro-batch scans run it at the reader, as a
-  *    [[RowPipeline]] analyzed once per collection and codec
-  *    ([[KafkaEventSource.decodePlan]]); [[read]] runs it as DataFrame
-  *    operators.
+  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]],
+  *    which [[read]] runs as DataFrame operators. The catalog's batch and
+  *    micro-batch scans decode at the reader ([[KafkaEventSource.frameDecoder]]):
+  *    Avro payloads straight into the scan's output row through an
+  *    [[graft.functions.AvroReadPlan]] compiled once per collection and
+  *    column set, JSON through a [[RowPipeline]] analyzed once per
+  *    collection.
   *  - buffer/timeout knobs default to the reference's
   *    (`KafkaConnectorPageSource.java:62` 1 MB fetch,
   *    `KafkaConnectorConfig.java:44-49` 64 KB socket / 10 s connect).
@@ -199,7 +200,8 @@ final case class KafkaEventSource(
                      ranges: Seq[OffsetRange]): LogBatch = {
     val topic = SystemColumns.topicFor(project, collection)
     new LogBatch(copy(offsetRanges = ranges).batchOptions(spark, topic).map(rawScan(spark, _)),
-      pipeline(spark, project, collection, schema, requiredSchema, ranges))
+      KafkaEventSource.frameDecoder(spark, project, collection, schema, requiredSchema,
+        ranges, codec))
   }
 
   /** DSv2 micro-batch stream (the [[graft.catalog.GraftLogTable]] streaming
@@ -219,34 +221,20 @@ final case class KafkaEventSource(
     val effective = if (ranges.nonEmpty) ranges else OffsetRangePlanner.Full
     new LogMicroBatchStream(rawScan(spark, streamOptions(topic, effective)),
       s"$checkpointLocation/raw",
-      pipeline(spark, project, collection, schema, requiredSchema, effective))
+      KafkaEventSource.frameDecoder(spark, project, collection, schema, requiredSchema,
+        effective, codec))
   }
 
   /** The raw source's own DSv2 scan for `opts`, through its `TableProvider`
     * (Spark's Kafka connector, or [[FakeKafka]] in tests).
     */
   private def rawScan(spark: SparkSession, opts: Map[String, String]): Scan = {
-    val provider = DataSource.lookupDataSource(format, spark.sessionState.conf)
+    val provider = KafkaEventSource.providerClass(spark, format)
       .getDeclaredConstructor().newInstance().asInstanceOf[TableProvider]
     val optMap = new CaseInsensitiveStringMap(opts.asJava)
     provider.getTable(provider.inferSchema(optMap), Array.empty[Transform],
       optMap.asCaseSensitiveMap())
       .asInstanceOf[SupportsRead].newScanBuilder(optMap).build()
-  }
-
-  /** Reader pipeline from raw frames to `requiredSchema`: the cached decode,
-    * then the `ranges` residual (unless [[OffsetRangePlanner.Full]]) and the
-    * projection, built without analysis.
-    */
-  private def pipeline(spark: SparkSession, project: String, collection: String,
-                       schema: StructType, requiredSchema: StructType,
-                       ranges: Seq[OffsetRange]): RowPipeline.Pipeline = {
-    val decode = KafkaEventSource.decodePlan(spark, project, collection, schema, codec)
-    val window =
-      if (ranges == OffsetRangePlanner.Full) None
-      else Some(KafkaEventSource.rangePredicate(
-        decode.output.find(_.name == SystemColumns.Offset).get, ranges))
-    RowPipeline.pipeline(decode, window, requiredSchema.fieldNames.toIndexedSeq)
   }
 }
 
@@ -299,39 +287,72 @@ object KafkaEventSource {
       .reduceOption[Expression](Or(_, _))
       .getOrElse(Literal(false))
 
-  /** Most decode plans [[decodePlan]] keeps. */
-  private val MaxDecodePlans = 256
+  private val providers = new java.util.concurrent.ConcurrentHashMap[String, Class[_]]
+
+  /** The `TableProvider` class of a source format, looked up once per format
+    * (the lookup scans the classpath's registered data sources).
+    */
+  private def providerClass(spark: SparkSession, format: String): Class[_] =
+    providers.computeIfAbsent(format,
+      f => DataSource.lookupDataSource(f, spark.sessionState.conf))
+
+  /** Most compiled decoders the decode cache keeps. */
+  private val MaxDecoders = 256
 
   private val decodeCache =
-    new java.util.LinkedHashMap[AnyRef, LogicalPlan](16, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, LogicalPlan]): Boolean =
-        size() > MaxDecodePlans
+    new java.util.LinkedHashMap[AnyRef, AnyRef](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, AnyRef]): Boolean =
+        size() > MaxDecoders
     }
 
   private val compilations = new java.util.concurrent.atomic.AtomicLong
 
-  /** Decode plans analyzed so far in this JVM (cache misses of
-    * [[decodePlan]]).
+  /** Reader decodes compiled so far in this JVM (cache misses of
+    * [[frameDecoder]]).
     */
   def decodeCompilations: Long = compilations.get()
 
-  /** [[decodeRaw]] of a raw Kafka frame as a [[RowPipeline.analyzed]] plan,
-    * analyzed once per (collection, schema, codec, session time zone) over
-    * an empty raw relation and kept in a bounded LRU cache, so scans plan
-    * without analysis. Its filter is the malformed-row verdict. The decode
-    * reads the full writer record, so a payload is dropped as malformed
-    * exactly when `decodeRaw` drops it, whichever columns a scan reads.
-    */
-  def decodePlan(spark: SparkSession, project: String, collection: String,
-                 schema: StructType, codec: PayloadCodec): LogicalPlan = {
-    val key = (project, collection, schema, codec, spark.conf.get("spark.sql.session.timeZone"))
+  private def cached[T <: AnyRef](key: AnyRef)(compile: => T): T =
     decodeCache.synchronized(Option(decodeCache.get(key))).getOrElse {
       compilations.incrementAndGet()
-      val raw = spark.createDataFrame(new java.util.ArrayList[Row](), FakeKafka.frameSchema)
-      val plan = RowPipeline.analyzed(decodeRaw(raw, project, collection, schema, codec))
-      decodeCache.synchronized(decodeCache.put(key, plan))
-      plan
-    }
+      val value = compile
+      decodeCache.synchronized(decodeCache.put(key, value))
+      value
+    }.asInstanceOf[T]
+
+  /** The reader-side decode of a log scan, from raw frames to rows of
+    * `requiredSchema` in `ranges`, with [[decodeRaw]]'s answers and
+    * malformed verdicts. Both codecs decode the full writer record, so a
+    * payload is dropped as malformed exactly when `decodeRaw` drops it,
+    * whichever columns a scan reads, and both compile once into a bounded
+    * LRU cache, so scans plan without analysis:
+    *  - Avro payloads decode straight into the output row through an
+    *    [[AvroReadPlan]], compiled once per (collection, schema, columns);
+    *  - JSON runs [[decodeRaw]] as a [[RowPipeline]], analyzed once per
+    *    (collection, schema, session time zone) over an empty raw relation,
+    *    whose filter is the malformed-row verdict; the `ranges` residual
+    *    (unless [[OffsetRangePlanner.Full]]) and the projection extend it.
+    */
+  def frameDecoder(spark: SparkSession, project: String, collection: String,
+                   schema: StructType, requiredSchema: StructType,
+                   ranges: Seq[OffsetRange], codec: PayloadCodec): FrameDecoder = codec match {
+    case AvroPayloadCodec =>
+      val columns = requiredSchema.fieldNames.toIndexedSeq
+      val plan = cached((project, collection, schema, columns)) {
+        val avro = AvroSchemas.toAvro(schema)
+        AvroReadPlan.compile(avro, avro, columns)
+      }
+      FrameDecoder.Avro(plan, requiredSchema, project, collection, ranges)
+    case JsonPayloadCodec =>
+      val decode = cached((project, collection, schema, codec,
+          spark.conf.get("spark.sql.session.timeZone"))) {
+        val raw = spark.createDataFrame(new java.util.ArrayList[Row](), FakeKafka.frameSchema)
+        RowPipeline.analyzed(decodeRaw(raw, project, collection, schema, codec))
+      }
+      val window =
+        if (ranges == OffsetRangePlanner.Full) None
+        else Some(rangePredicate(decode.output.find(_.name == SystemColumns.Offset).get, ranges))
+      RowPipeline.pipeline(decode, window, requiredSchema.fieldNames.toIndexedSeq)
   }
 
   /** Kafka-shaped rows (`value` binary, `offset` long) → the engine's table

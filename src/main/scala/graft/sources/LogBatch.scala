@@ -6,7 +6,8 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 
 /** DSv2 [[Batch]] over an offset-addressed log: the raw source's own scans,
   * one per pruned offset range (Spark's Kafka connector in production,
-  * [[FakeKafka]] in tests), with every raw record decoded at the reader.
+  * [[FakeKafka]] in tests), with every raw record decoded at the reader by
+  * `decoder` (for Avro, straight into the scan's output row).
   * The reference connector had the same split of work: the engine planned a
   * table handle and the connector turned offsets into splits
   * (`KafkaSplitManager.java:93-106`) and decoded in its page source
@@ -16,7 +17,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
   * each range keeps the split count its scan was asked for; no ranges plan
   * no partitions.
   */
-final class LogBatch(raw: Seq[Scan], pipeline: RowPipeline.Pipeline) extends Batch {
+final class LogBatch(raw: Seq[Scan], decoder: FrameDecoder) extends Batch {
 
   private lazy val batches = raw.map(_.toBatch)
 
@@ -33,7 +34,7 @@ final class LogBatch(raw: Seq[Scan], pipeline: RowPipeline.Pipeline) extends Bat
     }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
-    DecodingReaderFactory(batches.map(_.createReaderFactory()), pipeline)
+    DecodingReaderFactory(batches.map(_.createReaderFactory()), decoder)
 }
 
 /** A raw input partition of the `range`-th raw scan. */
@@ -42,21 +43,20 @@ final case class RangePartition(range: Int, raw: InputPartition) extends InputPa
 }
 
 /** Wraps the raw sources' reader factories (one per [[RangePartition.range]]);
-  * each reader pulls raw rows and streams them through the decode pipeline,
+  * each reader pulls raw rows and runs them through the [[FrameDecoder]],
   * dropping malformed payloads and rows outside the window. It reports the
   * raw records it read and the malformed rows it dropped as DSv2 custom
   * metrics, next to whatever the raw reader reports.
   */
 final case class DecodingReaderFactory(
     raw: Seq[PartitionReaderFactory],
-    pipeline: RowPipeline.Pipeline)
+    decoder: FrameDecoder)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[RangePartition]
     val in = raw(p.range).createReader(p.raw)
-    val decode = new RowPipeline.Eval(pipeline.decode)
-    val select = new RowPipeline.Eval(pipeline.select)
+    val frames = decoder.open()
     new PartitionReader[InternalRow] {
       private var current: InternalRow = _
       private var records = 0L
@@ -64,10 +64,9 @@ final case class DecodingReaderFactory(
       override def next(): Boolean = {
         while (in.next()) {
           records += 1
-          val row = decode(in.get())
-          if (row == null) malformed += 1
+          if (!frames.decode(in.get())) malformed += 1
           else {
-            val out = select(row)
+            val out = frames.row()
             if (out != null) { current = out; return true }
           }
         }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 /** DSv2 [[MicroBatchStream]] for an offset-addressed log table: wraps the
   * stream of the raw source's scan `raw` (Kafka's own connector in production,
   * [[FakeKafka]] in the sandbox — both expose the same 7-column raw frame)
-  * and decodes each raw record to the table's schema at the reader via the
-  * same [[RowPipeline]] decode the batch scan ([[LogBatch]]) runs.
+  * and decodes each raw record to the table's schema at the reader with the
+  * same [[FrameDecoder]] the batch scan ([[LogBatch]]) runs.
   *
   * Offset bookkeeping (initial/latest/deserialize/commit) is delegated
   * verbatim to the inner stream — the wrapper adds no state of its own, so
@@ -20,7 +20,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 final class LogMicroBatchStream(
     raw: Scan,
     checkpointLocation: String,
-    pipeline: RowPipeline.Pipeline)
+    decoder: FrameDecoder)
     extends MicroBatchStream {
 
   private val inner = raw.toMicroBatchStream(checkpointLocation)
@@ -40,5 +40,5 @@ final class LogMicroBatchStream(
     inner.planInputPartitions(start, end).map(RangePartition(0, _))
 
   override def createReaderFactory(): PartitionReaderFactory =
-    DecodingReaderFactory(Seq(inner.createReaderFactory()), pipeline)
+    DecodingReaderFactory(Seq(inner.createReaderFactory()), decoder)
 }

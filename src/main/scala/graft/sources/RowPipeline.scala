@@ -14,7 +14,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   *
   * Why this exists: a DSv2 log scan must produce decoded [[InternalRow]]s
   * at the reader (the table's declared schema is the DECODED shape), but
-  * the decode logic (`from_json` / Avro, malformed-row drop, system-column
+  * the decode logic (`from_json`, malformed-row drop, system-column
   * synthesis) is authored once at the DataFrame layer. Re-implementing it
   * row-wise by hand would fork the semantics; instead the driver ANALYZES
   * the DataFrame transformation over a dummy relation and ships the
@@ -29,6 +29,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
   * stream rows through reused buffers (the DSv2 reader contract: a row is
   * valid until the next `next()`), so a 1000-executor scan pays only the
   * expression evaluation itself.
+  *
+  * It serves the JSON codec only: Avro payloads decode straight into the
+  * scan's output row through a [[graft.functions.AvroReadPlan]]
+  * ([[FrameDecoder.Avro]]), with no projection stages in between.
   */
 object RowPipeline {
 
@@ -44,7 +48,18 @@ object RowPipeline {
     * then drops rows outside the scan's window and projects the columns the
     * scan reads. Kept apart so readers can count malformed rows.
     */
-  final case class Pipeline(decode: Seq[Stage], select: Seq[Stage])
+  final case class Pipeline(decode: Seq[Stage], select: Seq[Stage]) extends FrameDecoder {
+    override def open(): FrameDecoder.Frames = new Frames(new Eval(decode), new Eval(select))
+  }
+
+  private final class Frames(decoded: Eval, selected: Eval) extends FrameDecoder.Frames {
+    private var current: InternalRow = _
+    override def decode(frame: InternalRow): Boolean = {
+      current = decoded(frame)
+      current != null
+    }
+    override def row(): InternalRow = selected(current)
+  }
 
   /** `df`'s ANALYZED plan, which must be a Project/Filter chain over a single
     * leaf — exactly what a decode transformation is. The analyzed (not
@@ -92,10 +107,12 @@ object RowPipeline {
     * Stages are interpreted, not code-generated: generating a projection
     * costs each reader (one per task) milliseconds, more than interpreting
     * a few expressions costs over a split's rows. Spark's interpreted
-    * projection hands values on by reference and evaluates a repeated
-    * subexpression (the JSON codec's `from_json`) once per row; rows leave
-    * as generic rows, which Spark's planner turns into UnsafeRows above
-    * every row-based DSv2 scan.
+    * projection evaluates a repeated subexpression (the JSON codec's
+    * `from_json`) once per row, but it does not hand values on by
+    * reference: it writes each one through `InternalRow.getWriter`, which
+    * copies every string (`UTF8String.copy`) and struct (`InternalRow.copy`)
+    * a stage outputs. Rows leave as generic rows, which Spark's planner
+    * turns into UnsafeRows above every row-based DSv2 scan.
     */
   final class Eval(stages: Seq[Stage]) {
     private val steps: Array[Either[Projection, BasePredicate]] =

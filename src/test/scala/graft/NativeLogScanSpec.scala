@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
 
 import graft.catalog.{FileMetastore, InMemoryMetastore, SchemaField}
 import graft.functions.{AvroSchemas, GraftFunctions}
-import graft.plans.InlineLogScan
-import graft.sources.{AvroPayloadCodec, DecodingReaderFactory, FakeKafka, KafkaEventSource, RangePartition, RowPipeline}
+import graft.plans.{InlineLogScan, OffsetRangePlanner}
+import graft.sources.{AvroPayloadCodec, DecodingReaderFactory, FakeKafka, KafkaEventSource, RangePartition}
 
 /** `spark.sql` over a Kafka-format log table reads through the native DSv2
   * batch scan: one `BatchScan` of `GraftLogScan`, the raw connector scans
@@ -166,30 +166,33 @@ class NativeLogScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("reader metrics count raw records and malformed rows, batch and micro-batch") {
     val every = 7L
-    val cat = catalog(spark, "graftmetrics", payload = "json",
-      extra = Map(".source.option.fake.corruptEvery" -> every.toString))
     def corrupt(s: Long, e: Long): Long = (s until e).count(_ % every == 0).toLong * Partitions
+    for (payload <- Seq("json", "avro")) {
+      val cat = catalog(spark, s"graftmetrics$payload", payload = payload,
+        extra = Map(".source.option.fake.corruptEvery" -> every.toString))
 
-    val df = spark.sql(
-      s"SELECT user_id FROM $cat.proj.events WHERE _offset >= 100 AND _offset < 1100")
-    assert(df.collect().length == 1000L * Partitions - corrupt(100, 1100))
-    val scan = batchScans(df).head
-    assert(scan.metrics("rawRecords").value == 1000L * Partitions)
-    assert(scan.metrics("malformedRows").value == corrupt(100, 1100))
+      val df = spark.sql(
+        s"SELECT user_id FROM $cat.proj.events WHERE _offset >= 100 AND _offset < 1100")
+      assert(df.collect().length == 1000L * Partitions - corrupt(100, 1100))
+      val scan = batchScans(df).head
+      assert(scan.metrics("rawRecords").value == 1000L * Partitions)
+      assert(scan.metrics("malformedRows").value == corrupt(100, 1100))
 
-    val q = spark.readStream.table(s"$cat.proj.events")
-      .writeStream.format("memory").queryName("native_metrics").outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("native_metrics").count() == Latest * Partitions - corrupt(0, Latest))
-      val micro = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
-        .streamingQuery.lastExecution.executedPlan.collectFirst { case m: MicroBatchScanExec => m }.get
-      assert(micro.metrics("rawRecords").value == Latest * Partitions)
-      assert(micro.metrics("malformedRows").value == corrupt(0, Latest))
-      // the stream's own raw scan is described: it has no end offsets
-      assert(micro.scan.description().contains("startingOffsets") &&
-        !micro.scan.description().contains("endingOffsets"), micro.scan.description())
-    } finally q.stop()
+      val q = spark.readStream.table(s"$cat.proj.events")
+        .writeStream.format("memory").queryName(s"native_metrics_$payload").outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        assert(spark.table(s"native_metrics_$payload").count() ==
+          Latest * Partitions - corrupt(0, Latest))
+        val micro = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.collectFirst { case m: MicroBatchScanExec => m }.get
+        assert(micro.metrics("rawRecords").value == Latest * Partitions)
+        assert(micro.metrics("malformedRows").value == corrupt(0, Latest))
+        // the stream's own raw scan is described: it has no end offsets
+        assert(micro.scan.description().contains("startingOffsets") &&
+          !micro.scan.description().contains("endingOffsets"), micro.scan.description())
+      } finally q.stop()
+    }
   }
 
   test("a payload malformed only in a field the scan does not read is still dropped") {
@@ -203,11 +206,10 @@ class NativeLogScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         pruned).as("e")).head()
     assert(!alone.isNullAt(0), "a pruned decode keeps this payload")
 
-    val pipeline = RowPipeline.pipeline(
-      KafkaEventSource.decodePlan(spark, "proj", "events", schema, AvroPayloadCodec),
-      None, Seq("user_id"))
+    val decoder = KafkaEventSource.frameDecoder(spark, "proj", "events", schema,
+      StructType(Seq(schema("user_id"))), OffsetRangePlanner.Full, AvroPayloadCodec)
     val good = FakeKafka.avroPayloadFor(5L, 0, Partitions, 0L)
-    val reader = DecodingReaderFactory(Seq(new RowsFactory(Seq(payload, good))), pipeline)
+    val reader = DecodingReaderFactory(Seq(new RowsFactory(Seq(payload, good))), decoder)
       .createReader(RangePartition(0, NoPartition))
     val ids = Iterator.continually(reader.next()).takeWhile(identity).map(_ => reader.get().getLong(0)).toList
     assert(ids == List(FakeKafka.userIdFor(5L, 0, Partitions)))
