@@ -125,23 +125,15 @@ final class GraftEngine(
     org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
 
   /** Offset-windowed scan — the reference's core query shape (`SELECT …
-    * WHERE _offset …`, C3): plan the predicate into pruned [[graft.plans.OffsetRange]]s,
-    * specialize the source to them (Kafka reads only those windows; parquet
-    * relies on Catalyst pushdown), and keep the full predicate as the
-    * residual filter (extraction is conservative, so this is always sound).
-    * The predicate is planned against an empty relation of the table's
-    * schema, system columns and user fields, so the source is read once.
+    * WHERE _offset …`, C3): the table with system columns, filtered by
+    * `predicate`. Over Kafka its `_offset` conjuncts push into the log scan
+    * as pruned [[graft.plans.OffsetRange]]s, so only those windows are read
+    * and no `_offset` filter is left to run; over parquet Catalyst pushes
+    * them into the file scan.
     */
   def offsetWindow(project: String, collection: String,
-                   predicate: org.apache.spark.sql.Column): DataFrame = {
-    val schema = userSchema(project, collection) // one metastore lookup
-    val empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(SystemColumns.fields ++ schema.fields))
-    val ranges = graft.plans.OffsetRangePlanner.fromPredicate(empty, predicate)
-    source.withOffsetRanges(ranges)
-      .read(spark, project, collection, schema)
-      .filter(predicate)
-  }
+                   predicate: org.apache.spark.sql.Column): DataFrame =
+    tableWithSystemColumns(project, collection).filter(predicate)
 }
 
 object GraftEngine {

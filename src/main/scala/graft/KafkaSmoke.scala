@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.catalog.{FieldType, InMemoryMetastore, SchemaField, SystemColumns}
 import graft.sources.{AvroPayloadCodec, KafkaEventSink, KafkaEventSource}
 
-/** Live-broker smoke — the one line the sandbox can never execute
-  * (`spark.read.format("kafka")`, KafkaEventSource.scala:110) run for real,
+/** Live-broker smoke — the one step the sandbox can never execute
+  * (`KafkaEventSource.rawScan` over the `kafka` format) run for real,
   * mirroring the reference's embedded-broker test
   * (`TestMinimalFunctionality.java:100-121`: empty count == 0, produce 1000,
   * count == 1000) plus the C3 offset pushdown the reference tested through

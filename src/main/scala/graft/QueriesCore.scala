@@ -1352,9 +1352,10 @@ object QueriesCore {
     // The ONE line the reference's defining tests exercised end-to-end with
     // an embedded broker (TestManySegments.java:64-108): a multi-range,
     // many-split log read must deliver exactly the windowed rows. Runs the
-    // COMPLETE KafkaEventSource.read() path (offset JSON handoff, per-range
-    // union, minPartitions splitting, JSON decode, system columns) against
-    // the broker-free FakeKafka DSv2 source, whose content is a closed-form
+    // COMPLETE KafkaEventSource.read() path (one GraftLogScan holding a raw
+    // scan per range, offset JSON handoff, minPartitions splitting, JSON
+    // decode and system columns at the reader) against the broker-free
+    // FakeKafka DSv2 source, whose content is a closed-form
     // function of (partition, offset) — so DuckDB replays it exactly with
     // generate_series, no broker on either side.
     NamedQuery("q41_kafka_log_scan",

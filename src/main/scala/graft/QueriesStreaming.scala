@@ -319,8 +319,8 @@ object QueriesStreaming {
     // offsets per micro-batch to 8000, so the run REALLY progresses through
     // four micro-batches (start-offset handoff, per-batch offset planning,
     // commit); the broker only receives the coarse start offset 1000, and
-    // the decoded stream re-applies the pruned multi-range window
-    // [1000,3000)∪[5000,6000) as a residual `_offset` filter; offsets
+    // the reader applies the pruned multi-range window
+    // [1000,3000)∪[5000,6000) as a residual while it decodes; offsets
     // divisible by 500 carry garbage payloads and must drop in-flight (C6
     // malformed semantics on the streaming path). Content is a closed-form
     // function of (partition, offset), so DuckDB replays the whole thing
@@ -543,8 +543,8 @@ object QueriesStreaming {
     // over the DSv2 catalog (metastore-mode GraftLogTable, source=kafka
     // with FakeKafka swapped in) — the round-4 gap where GraftLogTable had
     // no MicroBatchStream and streaming required the engine API. The scan
-    // decodes AT THE READER through the RowPipeline compiled from the same
-    // decodeRaw DataFrame the batch path runs (zero drift; malformed
+    // decodes AT THE READER with the same FrameDecoder as the batch scan
+    // (for JSON, a RowPipeline compiled from decodeRaw; malformed
     // payloads drop in-flight), offset bookkeeping is the raw connector's
     // own (checkpoint/replay untouched), and the head grows 1500 offsets
     // per micro-batch to 6000 so the run REALLY progresses through four
@@ -796,7 +796,7 @@ object QueriesStreaming {
             .filter(col("event_type").isin("click", "error"))
             .groupBy(col("event_type"))
             .agg(max(unix_micros(col("ts").cast("timestamp"))).as("mx"))
-            .agg(min(col("mx"))).head.getLong(0)
+            .agg(min(col("mx"))).head().getLong(0)
           val cutoffUs = (maxUs / 1000 - 3600000L - 3600000L) * 1000
           runToTable(s, sink("s14", dir), j, mode = "append")
             .filter(col("err_ts").isNotNull ||

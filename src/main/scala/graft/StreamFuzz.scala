@@ -253,7 +253,7 @@ object StreamFuzz {
 
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[FzWin] = {
-      val w = expiredTimerInfo.getExpiryTimeInMs - windowMs
+      val w = expiredTimerInfo.getExpiryTimeInMs() - windowMs
       if (!wins.containsKey(w)) Iterator.empty
       else {
         val a = wins.getValue(w)
@@ -524,7 +524,7 @@ object StreamFuzz {
         .agg(count(lit(1)).as("n"), sum(col("user_id")).as("su"),
           min(col("event_id")).as("mn"), max(col("event_id")).as("mx"))
       val restart = if (rng.nextInt(3) == 0) 1 + rng.nextInt(chunks - 1) else 0
-      Plan(s"p$i agg w=${w}m slide=${slide.fold("-")(_ + "m")} key=$keyPick " +
+      Plan(s"p$i agg w=${w}m slide=${slide.fold("-")(s => s"${s}m")} key=$keyPick " +
            s"delay=${delay}m chunks=$chunks restart=$restart",
         delay,
         df => agg(df.withWatermark("ts", s"$delay minutes")),

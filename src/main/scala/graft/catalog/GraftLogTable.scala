@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.metric.CustomMetric
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -30,7 +31,9 @@ import graft.sources.{EventSource, KafkaEventSource, LogMicroBatchStream, Offset
   *  - an [[OffsetAddressedSource]] (Kafka) gets [[GraftLogScan]], a native
   *    DSv2 batch and micro-batch scan: the raw source's own scans over the
   *    pruned ranges, decoded at the reader. The planner sees one scan node
-  *    and optimizes the query once.
+  *    and optimizes the query once. The engine API's Kafka reads are this
+  *    table too, built without a catalog (`KafkaEventSource.read`), and
+  *    their scans start from the source's own window.
   *  - a file source gets [[GraftFileScan]], a [[V1Scan]] over the source's
   *    DataFrame read (Spark's own JDBC-connector pattern), which
   *    [[graft.plans.InlineLogScan]] replaces with the native file scan when
@@ -39,10 +42,11 @@ import graft.sources.{EventSource, KafkaEventSource, LogMicroBatchStream, Offset
   * Pruning can only ever drop rows the predicate excludes. Over a file
   * source every filter also stays a Spark-side residual (the planner's
   * sound over-approximation). [[GraftLogScan]] instead enforces its ranges
-  * in the reader; they are exactly the filters `pushFilters` translated,
-  * so only the untranslated ones stay residual. (A residual's per-query
-  * offset bounds would land in the query's generated code and compile a
-  * new class for every window.)
+  * in the reader; they hold exactly the rows of the source's window that
+  * the filters `pushFilters` translated keep, so only the untranslated
+  * filters stay residual. (A residual's per-query offset bounds would land
+  * in the query's generated code and compile a new class for every
+  * window.)
   */
 final class GraftLogTable(
     tableName: String,
@@ -88,10 +92,11 @@ object GraftLogTable {
                 project: String, collection: String, userSchema: StructType,
                 ranges: Seq[OffsetRange],
                 columns: StructType): org.apache.spark.sql.DataFrame = {
-    val full = source.withOffsetRanges(ranges).read(spark, project, collection, userSchema)
+    val full = source.read(spark, project, collection, userSchema)
     val pruned =
       if (ranges == OffsetRangePlanner.Full) full
-      else full.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), ranges))
+      else full.filter(Bridge.column(
+        KafkaEventSource.rangePredicate(Bridge.expression(col(SystemColumns.Offset)), ranges)))
     pruned.select(columns.fieldNames.map(col).toSeq: _*)
   }
 }
@@ -105,7 +110,12 @@ final class GraftLogScanBuilder(
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var requiredSchema: StructType = fullSchema
-  private var ranges: Seq[OffsetRange] = OffsetRangePlanner.Full
+  // the source's own window (the whole log unless the engine API was given
+  // ranges); pushed filters narrow it
+  private var ranges: Seq[OffsetRange] = source match {
+    case log: OffsetAddressedSource => log.offsetRanges
+    case _ => OffsetRangePlanner.Full
+  }
   private var accepted: Array[Filter] = Array.empty
 
   private val offset = ce.AttributeReference(SystemColumns.Offset, LongType, nullable = false)()
@@ -151,7 +161,8 @@ final class GraftLogScanBuilder(
     if (translated.nonEmpty) {
       // translated shapes extract exactly (no conjunct or disjunct is
       // widened), so the ranges hold exactly the rows the filters keep
-      ranges = OffsetRangePlanner.fromExpression(translated.map(_._2).reduce(ce.And(_, _)))
+      ranges = OffsetRangePlanner.normalize(OffsetRangePlanner.intersectAll(ranges,
+        OffsetRangePlanner.fromExpression(translated.map(_._2).reduce(ce.And(_, _)))))
     }
     source match {
       case _: OffsetAddressedSource => filters.filterNot(accepted.contains)
@@ -212,10 +223,11 @@ final class GraftLogScan(
   override def supportedCustomMetrics(): Array[CustomMetric] =
     stream.fold(batch.supportedCustomMetrics)(_.supportedCustomMetrics)
 
-  /** Micro-batch streaming half of the scan (MICRO_BATCH_READ). The pruned
-    * ranges travel into the stream as a residual (streaming scans get no
-    * pushFilters pass, so this is normally [[OffsetRangePlanner.Full]]; a
-    * caller-side `_offset` filter still evaluates on the decoded rows).
+  /** Micro-batch streaming half of the scan (MICRO_BATCH_READ). The ranges
+    * travel into the stream as a residual. Streaming scans get no
+    * pushFilters pass, so they are the source's own window (the whole log
+    * for a catalog table), and a caller-side `_offset` filter still
+    * evaluates on the decoded rows.
     */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     val started = source.microBatchStream(org.apache.spark.sql.classic.SparkSession.active,

@@ -57,20 +57,6 @@ final class InMemoryMetastore extends Metastore {
     gen.incrementAndGet()
   }
 
-  /** Additive schema evolution: append fields not yet present (by
-    * normalized name). Mirrors how Rakam's metastore grows collections as
-    * new event attributes appear.
-    */
-  def addFields(project: String, collection: String, fields: Seq[SchemaField]): Unit = {
-    store.updateWith((project, collection)) {
-      case Some(existing) =>
-        val have = existing.map(_.normalizedName).toSet
-        Some(existing ++ fields.filterNot(f => have(f.normalizedName)))
-      case None => Some(fields)
-    }
-    gen.incrementAndGet()
-  }
-
   override def getCollection(project: String, collection: String): Option[Seq[SchemaField]] =
     store.get((project, collection))
 

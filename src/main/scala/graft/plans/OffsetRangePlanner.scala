@@ -148,7 +148,8 @@ object OffsetRangePlanner {
       } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  private def intersectAll(a: Seq[OffsetRange], b: Seq[OffsetRange]): Seq[OffsetRange] =
+  /** The offsets in both `a` and `b`, range by range. */
+  def intersectAll(a: Seq[OffsetRange], b: Seq[OffsetRange]): Seq[OffsetRange] =
     for { x <- a; y <- b; z <- x.intersect(y) } yield z
 
   /** Sort, clamp to [0, ∞), merge overlapping/adjacent → disjoint sorted. */

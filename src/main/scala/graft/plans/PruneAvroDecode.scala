@@ -20,7 +20,8 @@ import graft.functions.{AvroDecode, AvroSchemas}
   * Catalyst's own column pruning stops at the struct boundary (the decode
   * is one opaque expression producing a struct); this rule carries the
   * pruning across it. Idempotent: once the reader equals the used set,
-  * nothing matches.
+  * nothing matches. Log scans decode at the reader with their own column
+  * set, so this rule serves the `from_avro` calls users write.
   */
 object PruneAvroDecode extends Rule[LogicalPlan] {
 

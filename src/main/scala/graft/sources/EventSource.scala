@@ -15,21 +15,21 @@ import graft.catalog.SystemColumns
 trait EventSource {
   def read(spark: SparkSession, project: String, collection: String,
            schema: StructType): DataFrame
-
-  /** Source specialized to the given pruned `_offset` windows (reference
-    * C3): offset-addressed sources (Kafka) scan only those ranges; columnar
-    * sources return themselves — Catalyst's filter pushdown already prunes
-    * them (the residual filter always runs either way).
-    */
-  def withOffsetRanges(ranges: Seq[graft.plans.OffsetRange]): EventSource = this
 }
 
-/** A source whose rows are addressed by log offset (Kafka). The DSv2
-  * catalog reads it natively instead of through [[EventSource.read]]: the
-  * raw source's own scans over the pruned windows, decoded at the reader to
-  * `requiredSchema` (a projection of system columns + user fields).
+/** A source whose rows are addressed by log offset (Kafka). Its reads are
+  * [[graft.catalog.GraftLogScan]]s: the raw source's own scans over the
+  * pruned windows, decoded at the reader to `requiredSchema` (a projection
+  * of system columns + user fields). `_offset` filters prune such a scan
+  * (reference C3); a columnar file source instead relies on Catalyst's
+  * filter pushdown into its file scan.
   */
 trait OffsetAddressedSource extends EventSource {
+
+  /** The window every scan of this source starts from; `_offset` filters
+    * pushed into a scan narrow it.
+    */
+  def offsetRanges: Seq[graft.plans.OffsetRange]
 
   /** Batch read of the collection over `ranges`, returning exactly the rows
     * whose offsets lie in them; no ranges read nothing.

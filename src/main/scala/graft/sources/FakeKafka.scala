@@ -2,6 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.util
+import java.util.Optional
+
+import scala.jdk.OptionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
@@ -9,13 +12,15 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, ReadLimit, ReadMaxRows,
+  ReportsSourceMetrics, SupportsTriggerAvailableNow, Offset => StreamOffset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Broker-free stand-in for Spark's Kafka batch source, used to exercise
-  * the FULL [[KafkaEventSource.read]] path (offset-JSON parsing, per-range
-  * union, minPartitions splitting, decode, malformed-drop) in the sandbox —
+  * the FULL [[KafkaEventSource.read]] path (offset-JSON parsing, one raw
+  * scan per range, minPartitions splitting, decode, malformed-drop) —
   * the role the reference's `EmbeddedKafka.java:38-173` +
   * `TestManySegments.java:64-108` played for its connector, without a JVM
   * broker.
@@ -110,7 +115,7 @@ object FakeKafka {
     * two can't drift.
     */
   private[sources] def fieldsToMap(node: com.fasterxml.jackson.databind.JsonNode): Map[Int, Long] = {
-    val it = node.fields()
+    val it = node.properties().iterator()
     val m = Map.newBuilder[Int, Long]
     while (it.hasNext) {
       val e = it.next()
@@ -220,15 +225,20 @@ final class FakeKafkaScan(topic: String, options: CaseInsensitiveStringMap)
     * stream's residual `_offset` filter, and multi-batch progression,
     * broker-free.
     */
-  override def toMicroBatchStream(checkpointLocation: String):
-      org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new FakeKafkaMicroBatchStream(topic, options)
 }
 
+/** The stream is admission-controlled like Spark's Kafka connector
+  * (`KafkaMicroBatchStream`): the engine asks `latestOffset(start, limit)`
+  * and the no-argument form throws, `maxOffsetsPerTrigger` caps each
+  * micro-batch (pro rata over the partitions' lag, as the connector does),
+  * `Trigger.AvailableNow` fixes the end at the head it sees when the query
+  * starts, and each progress report carries the offsets-behind-latest
+  * metrics.
+  */
 final class FakeKafkaMicroBatchStream(topic: String, options: CaseInsensitiveStringMap)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-
-  import org.apache.spark.sql.connector.read.streaming.{Offset => StreamOffset}
+    extends MicroBatchStream with SupportsTriggerAvailableNow with ReportsSourceMetrics {
 
   private val numPartitions = options.getInt("fake.partitions", 1)
   private val initialLatest = options.getLong("fake.latest", 1000L)
@@ -236,10 +246,11 @@ final class FakeKafkaMicroBatchStream(topic: String, options: CaseInsensitiveStr
   private val maxLatest = options.getLong("fake.maxLatest", initialLatest)
   private val corruptEvery = options.getLong("fake.corruptEvery", 0L)
   private val payload = Option(options.get("fake.payload")).getOrElse("json")
+  private val maxOffsetsPerTrigger = Option(options.get("maxOffsetsPerTrigger")).map(_.toLong)
 
   /** Durable-broker head (see [[FakeKafka.headOf]]): JVM-global per
     * (topic, growth config), so a fresh instance after checkpoint restart
-    * answers `latestOffset()` with the real head — never the configured
+    * answers `latestOffset` with the real head — never the configured
     * initial value — exactly like a broker whose log survived the consumer.
     */
   private val headKey =
@@ -247,10 +258,16 @@ final class FakeKafkaMicroBatchStream(topic: String, options: CaseInsensitiveStr
   private def head: Long = FakeKafka.headOf(headKey, initialLatest)
   private def raise(v: Long): Unit = FakeKafka.raiseHead(headKey, v)
 
+  /** The end fixed by [[prepareForTriggerAvailableNow]]. */
+  private var availableNowEnd: Option[Map[Int, Long]] = None
+  /** The head the last [[latestOffset]] call saw, for progress reports. */
+  private var lastHead: Option[Map[Int, Long]] = None
+
   /** The head never regresses below offsets the engine already knows
     * (checkpointed start offsets arrive via [[deserializeOffset]]/[[commit]]
-    * on restart): a fresh stream instance re-reading `fake.latest` must not
-    * re-deliver rows a previous run committed past.
+    * and as `latestOffset`'s start on restart): a fresh stream instance
+    * re-reading `fake.latest` must not re-deliver rows a previous run
+    * committed past.
     */
   private def observe(m: Map[Int, Long]): Unit =
     if (m.nonEmpty) raise(m.values.max)
@@ -263,19 +280,68 @@ final class FakeKafkaMicroBatchStream(topic: String, options: CaseInsensitiveStr
   private def parse(json: String): Map[Int, Long] =
     FakeKafka.fieldsToMap(new ObjectMapper().readTree(json))
 
+  /** The current head on every partition; the log then grows by
+    * `fake.advancePerBatch` up to `fake.maxLatest`.
+    */
+  private def advanceHead(): Map[Int, Long] = {
+    val h = head
+    // monotone: even a restored offset beyond this run's maxLatest config
+    // must not shrink (raiseHead maxes, so the clamp can only grow the head)
+    raise(math.min(maxLatest, h + advancePerBatch))
+    (0 until numPartitions).map(p => p -> h).toMap
+  }
+
   override def initialOffset(): StreamOffset = {
     val starts = Option(options.get("startingOffsets"))
       .flatMap(FakeKafka.parseOffsetJson(_, topic)).getOrElse(Map.empty[Int, Long])
     offsetOf((0 until numPartitions).map(p => p -> math.max(0L, starts.getOrElse(p, 0L))).toMap)
   }
 
-  override def latestOffset(): StreamOffset = {
-    val h = head
-    // monotone: even a restored offset beyond this run's maxLatest config
-    // must not shrink (raiseHead maxes, so the clamp can only grow the head)
-    raise(math.min(maxLatest, h + advancePerBatch))
-    offsetOf((0 until numPartitions).map(p => p -> h).toMap)
+  override def latestOffset(): StreamOffset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
+
+  override def getDefaultReadLimit: ReadLimit =
+    maxOffsetsPerTrigger.fold(ReadLimit.allAvailable())(ReadLimit.maxRows)
+
+  override def prepareForTriggerAvailableNow(): Unit = availableNowEnd = Some(advanceHead())
+
+  override def latestOffset(start: StreamOffset, limit: ReadLimit): StreamOffset = {
+    val from = parse(start.json())
+    observe(from)
+    val latest = availableNowEnd.getOrElse(advanceHead())
+    lastHead = Some(latest)
+    offsetOf(limit match {
+      case rows: ReadMaxRows => capped(from, latest, rows.maxRows())
+      case _ => latest
+    })
   }
+
+  /** At most `limit` offsets past `from` in all, shared by the partitions
+    * in proportion to their lag (a partition with any lag gets at least one).
+    */
+  private def capped(from: Map[Int, Long], latest: Map[Int, Long], limit: Long): Map[Int, Long] = {
+    val lag = latest.map { case (p, e) => p -> math.max(0L, e - from.getOrElse(p, 0L)) }
+    val total = lag.values.sum
+    if (total <= limit) latest
+    else latest.map { case (p, e) =>
+      val share = limit.toDouble * lag(p) / total
+      val s = from.getOrElse(p, 0L)
+      p -> math.min(e, s + (if (share < 1) math.ceil(share) else math.floor(share)).toLong)
+    }
+  }
+
+  override def reportLatestOffset(): StreamOffset = lastHead.map(offsetOf).orNull
+
+  /** Offsets behind the head, under the Kafka connector's metric names. */
+  override def metrics(latestConsumed: Optional[StreamOffset]): util.Map[String, String] =
+    (for (consumed <- latestConsumed.toScala; latest <- lastHead) yield {
+      val done = parse(consumed.json())
+      val behind = latest.toSeq.map { case (p, e) => math.max(0L, e - done.getOrElse(p, 0L)) }
+      util.Map.of(
+        "minOffsetsBehindLatest", behind.min.toString,
+        "maxOffsetsBehindLatest", behind.max.toString,
+        "avgOffsetsBehindLatest", (behind.sum.toDouble / behind.size).toString)
+    }).getOrElse(util.Map.of())
 
   override def deserializeOffset(json: String): StreamOffset = {
     val m = parse(json)

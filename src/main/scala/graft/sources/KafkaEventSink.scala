@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.catalog.SystemColumns
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
@@ -31,7 +30,7 @@ object KafkaEventSink {
     df.select(
       lit(SystemColumns.topicFor(project, collection)).as("topic"),
       bigEndianBytes(col(keyColumn)).as("key"),
-      GF.to_avro(struct(payload.columns.map(col): _*), avroSchema).as("value"))
+      GF.to_avro(struct(payload.columns.toIndexedSeq.map(col): _*), avroSchema).as("value"))
   }
 
   /** 8-byte big-endian encoding of a long — `NumberEncoder.java:30-36`.
@@ -40,13 +39,4 @@ object KafkaEventSink {
     */
   def bigEndianBytes(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     unhex(lpad(hex(c.cast("long")), 16, "0"))
-
-  /** Streaming writer pre-wired for a collection (caller sets checkpoint &
-    * bootstrap servers and starts it).
-    */
-  def streamWriter(df: DataFrame, project: String, collection: String,
-                   keyColumn: String, bootstrapServers: String): DataStreamWriter[Row] =
-    toKafkaFrame(df, project, collection, keyColumn)
-      .writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
 }

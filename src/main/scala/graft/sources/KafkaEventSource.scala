@@ -13,7 +13,7 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.catalog.SystemColumns
+import graft.catalog.{GraftLogTable, SystemColumns}
 import graft.functions.{AvroReadPlan, AvroSchemas, GraftFunctions => GF}
 import graft.plans.{OffsetRange, OffsetRangePlanner}
 
@@ -50,19 +50,21 @@ case object JsonPayloadCodec extends PayloadCodec {
   }
 }
 
-/** Kafka batch source over `<project>_<collection>` topics (reference
-  * C2–C8). Spark's Kafka connector supplies partition discovery, replica
-  * failover, locality and fetch/retry (reference C2/C4/C5/O4/O6 — all
-  * engine-side now); this class contributes what the reference's connector
-  * actually owned:
+/** Kafka source over `<project>_<collection>` topics (reference C2–C8).
+  * Spark's Kafka connector supplies partition discovery, replica failover,
+  * locality and fetch/retry (reference C2/C4/C5/O4/O6 — all engine-side
+  * now); this class contributes what the reference's connector actually
+  * owned. Every read — `spark.sql` and `readStream.table` through the
+  * catalog, and the engine API's [[read]]/[[readStream]] — plans one
+  * [[graft.catalog.GraftLogScan]] over a [[graft.catalog.GraftLogTable]]:
   *
-  *  - offset windows: pruned [[OffsetRange]]s (from
-  *    [[OffsetRangePlanner]]) become `startingOffsets` / `endingOffsets`
-  *    JSON — the C3 pushdown. A multi-range window reads one raw scan per
-  *    range (correctly, unlike the reference's overlapping-slot bug): the
-  *    DSv2 catalog concatenates the raw scans' partitions in one
-  *    [[LogBatch]] ([[batch]]), the engine API's [[read]] unions per-range
-  *    DataFrames.
+  *  - offset windows: the scan starts from [[offsetRanges]] (the whole log
+  *    for a catalog table) and narrows it by the `_offset` filters pushed
+  *    into it; the pruned [[OffsetRange]]s become `startingOffsets` /
+  *    `endingOffsets` JSON — the C3 pushdown. A multi-range window reads
+  *    one raw scan per range (correctly, unlike the reference's
+  *    overlapping-slot bug), their partitions concatenated in one
+  *    [[LogBatch]] ([[batch]]).
   *  - segment-granular parallelism (C4/O3): a batch read asks the source to
   *    split each topic partition by offset range (its `minPartitions`
   *    option, Spark's analogue of one split per log segment). The request
@@ -73,20 +75,18 @@ case object JsonPayloadCodec extends PayloadCodec {
   *    messages per split. Ranges without an end, and streams, keep one
   *    split per topic partition; an explicit `minPartitions` wins.
   *  - codec decode with schema resolution + malformed-row drop (C6) and
-  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]],
-  *    which [[read]] runs as DataFrame operators. The catalog's batch and
-  *    micro-batch scans decode at the reader ([[KafkaEventSource.frameDecoder]]):
-  *    Avro payloads straight into the scan's output row through an
-  *    [[graft.functions.AvroReadPlan]] compiled once per collection and
-  *    column set, JSON through a [[RowPipeline]] analyzed once per
-  *    collection.
+  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]]
+  *    and run at the reader ([[KafkaEventSource.frameDecoder]]), with the
+  *    window as a residual there: Avro payloads straight into the scan's
+  *    output row through an [[graft.functions.AvroReadPlan]] compiled once
+  *    per collection and column set, JSON through a [[RowPipeline]]
+  *    analyzed once per collection.
   *  - buffer/timeout knobs default to the reference's
   *    (`KafkaConnectorPageSource.java:62` 1 MB fetch,
   *    `KafkaConnectorConfig.java:44-49` 64 KB socket / 10 s connect).
   *
   * Requires `spark-sql-kafka-0-10` on the cluster classpath (not bundled
-  * here); everything around the `format("kafka")` call is broker-free and
-  * unit-tested via [[KafkaEventSource.decodeRaw]].
+  * here); tests read the same scans from [[FakeKafka]] without a broker.
   */
 final case class KafkaEventSource(
     bootstrapServers: String,
@@ -95,14 +95,11 @@ final case class KafkaEventSource(
     partitionsOf: String => Int = _ => 1,
     minPartitions: Option[Int] = None,
     extraOptions: Map[String, String] = Map.empty,
-    // the batch source format; production default is Spark's Kafka
-    // connector, tests swap in [[FakeKafka]] to drive the FULL read path
-    // (per-range union, offset JSON, minPartitions) without a broker
+    // the raw source format; production default is Spark's Kafka
+    // connector, tests swap in [[FakeKafka]] to drive the full read path
+    // (offset JSON, minPartitions, reader decode) without a broker
     format: String = "kafka")
     extends OffsetAddressedSource {
-
-  override def withOffsetRanges(ranges: Seq[OffsetRange]): EventSource =
-    copy(offsetRanges = ranges)
 
   /** Source options for one pruned offset range of a topic; carries only a
     * caller-set `minPartitions` (see [[batchOptions]] for the derived one).
@@ -146,53 +143,35 @@ final case class KafkaEventSource(
   def streamOptions(topic: String, ranges: Seq[OffsetRange]): Map[String, String] =
     readOptions(topic, OffsetRange(ranges.head.start, None)) - "endingOffsets"
 
-  /** Engine-API batch read (`GraftEngine.offsetWindow`, q41): the ranges'
-    * raw frames, unioned, then [[decodeRaw]].
+  /** Engine-API batch read (`GraftEngine.table`/`offsetWindow`, q41): the
+    * collection's log table over [[offsetRanges]], so a filter on the result
+    * narrows the scan's window like a `spark.sql` query's does. No ranges
+    * read nothing.
     */
   override def read(spark: SparkSession, project: String, collection: String,
-                    schema: StructType): DataFrame = {
-    val topic = SystemColumns.topicFor(project, collection)
-    if (offsetRanges.isEmpty) {
-      // contradictory predicate pruned everything — empty relation, not a crash
-      val full = StructType(SystemColumns.fields ++ schema.fields)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
-    } else {
-      val raw = batchOptions(spark, topic)
-        .map(opts => spark.read.format(format).options(opts).load())
-        .reduce(_ unionAll _)
-      KafkaEventSource.decodeRaw(raw, project, collection, schema, codec)
-    }
-  }
+                    schema: StructType): DataFrame =
+    Bridge.batchFrame(spark, table(project, collection, schema))
 
   /** Structured-Streaming variant (the extension the reference never had —
-    * its "streaming" was repeated batch over the log, SURVEY.md §1.1):
-    * unbounded read from the first pruned range's start; feed the result to
-    * [[graft.streaming.EventStreams]] windows/sessionization.
-    *
-    * The broker is only told the coarse start offset (streams have no
-    * `endingOffsets`), so the raw stream is a superset of a multi-range
-    * window; the pruned ranges are re-applied as a residual `_offset` filter
-    * on the decoded stream so callers see exactly the predicate's rows —
-    * gaps between ranges and offsets past the last bounded range are
-    * excluded, matching the batch `read()` semantics.
+    * its "streaming" was repeated batch over the log, SURVEY.md §1.1): the
+    * log table's micro-batch stream ([[microBatchStream]]) from the first
+    * range's start, returning exactly the rows of [[offsetRanges]]; feed the
+    * result to [[graft.streaming.EventStreams]] windows/sessionization. No
+    * ranges fail the query when it starts.
     */
   def readStream(spark: SparkSession, project: String, collection: String,
-                 schema: StructType): DataFrame = {
-    val topic = SystemColumns.topicFor(project, collection)
-    // batch read() returns an empty relation for Nil ranges; the streaming
-    // analogue would be "everything from 0", the OPPOSITE — refuse loudly
-    require(offsetRanges.nonEmpty,
-      s"predicate prunes every offset of $topic - nothing to stream")
-    val raw = spark.readStream.format(format).options(streamOptions(topic, offsetRanges)).load()
-    val decoded = KafkaEventSource.decodeRaw(raw, project, collection, schema, codec)
-    decoded.filter(KafkaEventSource.rangeResidual(col(SystemColumns.Offset), offsetRanges))
-  }
+                 schema: StructType): DataFrame =
+    Bridge.streamFrame(spark, table(project, collection, schema))
 
-  /** DSv2 batch of the catalog's `spark.sql` path: one raw scan per range
-    * with [[batchOptions]] (so the split requests are [[read]]'s), decoded
-    * at the reader. The reader also applies the ranges as a residual, so
-    * the batch returns exactly their offsets whatever the raw source reads
-    * (the catalog drops the translated filters from Spark's residual).
+  private def table(project: String, collection: String, schema: StructType): GraftLogTable =
+    new GraftLogTable(SystemColumns.topicFor(project, collection), project, collection,
+      schema, this)
+
+  /** DSv2 batch of a log scan: one raw scan per range with [[batchOptions]],
+    * decoded at the reader. The reader also applies the ranges as a
+    * residual, so the batch returns exactly their offsets whatever the raw
+    * source reads (the scan drops the translated filters from Spark's
+    * residual).
     */
   override def batch(spark: SparkSession, project: String, collection: String,
                      schema: StructType,
@@ -204,12 +183,11 @@ final case class KafkaEventSource(
         ranges, codec))
   }
 
-  /** DSv2 micro-batch stream (the [[graft.catalog.GraftLogTable]] streaming
-    * path — `spark.readStream.table("graft.<project>.<collection>")`): the
-    * raw source's own `MicroBatchStream` with [[streamOptions]] (the same
-    * options `readStream` uses), wrapped in a [[LogMicroBatchStream]] that
-    * decodes at the reader. Streams have no `endingOffsets`, so the pruned
-    * window is a residual in the reader, as in `readStream`. Offset
+  /** DSv2 micro-batch stream of a log scan ([[readStream]], and
+    * `readStream.table("graft.<project>.<collection>")`): the raw
+    * source's own `MicroBatchStream` with [[streamOptions]], wrapped in a
+    * [[LogMicroBatchStream]] that decodes at the reader. Streams have no
+    * `endingOffsets`, so the window is a residual in the reader. Offset
     * checkpointing is the inner connector's, untouched.
     */
   override def microBatchStream(spark: SparkSession, project: String, collection: String,
@@ -218,11 +196,13 @@ final case class KafkaEventSource(
                                 ranges: Seq[OffsetRange],
                                 checkpointLocation: String): LogMicroBatchStream = {
     val topic = SystemColumns.topicFor(project, collection)
-    val effective = if (ranges.nonEmpty) ranges else OffsetRangePlanner.Full
-    new LogMicroBatchStream(rawScan(spark, streamOptions(topic, effective)),
+    // a batch over no ranges reads nothing; a stream would read everything
+    // from offset 0, the opposite — refuse loudly
+    require(ranges.nonEmpty, s"predicate prunes every offset of $topic - nothing to stream")
+    new LogMicroBatchStream(rawScan(spark, streamOptions(topic, ranges)),
       s"$checkpointLocation/raw",
       KafkaEventSource.frameDecoder(spark, project, collection, schema, requiredSchema,
-        effective, codec))
+        ranges, codec))
   }
 
   /** The raw source's own DSv2 scan for `opts`, through its `TableProvider`
@@ -270,14 +250,10 @@ object KafkaEventSource {
     })
   }
 
-  /** `_offset ∈ ranges` as a Column predicate — the residual filter that
-    * makes a superset scan (e.g. an unbounded stream) honor a multi-range
-    * pruned window exactly.
+  /** `offset ∈ ranges` as a Catalyst predicate — the residual that makes a
+    * superset read (an unbounded stream, a file scan) honor a multi-range
+    * pruned window exactly. No ranges keep nothing.
     */
-  def rangeResidual(offset: Column, ranges: Seq[OffsetRange]): Column =
-    Bridge.column(rangePredicate(Bridge.expression(offset), ranges))
-
-  /** [[rangeResidual]] over a Catalyst expression, for reader pipelines. */
   def rangePredicate(offset: Expression, ranges: Seq[OffsetRange]): Expression =
     ranges
       .map { r =>

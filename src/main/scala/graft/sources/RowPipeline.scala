@@ -8,9 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPla
 
 /** A Project/Filter-only DataFrame transformation compiled down to a
   * per-[[InternalRow]] function — the bridge that lets a DSv2 reader run
-  * the SAME Catalyst decode expressions the engine API declares as
-  * `Column`s ([[KafkaEventSource.decodeRaw]]), with zero semantic drift
-  * between the two.
+  * Catalyst decode expressions declared once as `Column`s
+  * ([[KafkaEventSource.decodeRaw]]) without restating them row by row.
   *
   * Why this exists: a DSv2 log scan must produce decoded [[InternalRow]]s
   * at the reader (the table's declared schema is the DECODED shape), but

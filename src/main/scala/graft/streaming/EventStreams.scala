@@ -356,7 +356,7 @@ object EventStreams {
 
     override def handleExpiredTimer(userId: Long, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[UserWindow] = {
-      val w = expiredTimerInfo.getExpiryTimeInMs - windowMs
+      val w = expiredTimerInfo.getExpiryTimeInMs() - windowMs
       if (!wins.containsKey(w)) Iterator.empty
       else {
         val a = wins.getValue(w)

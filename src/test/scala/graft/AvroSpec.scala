@@ -108,7 +108,7 @@ class AvroSpec extends SparkTestBase {
     val df = rows.toDF("user_id", "event_type", "value", "tags")
     val schemaJson = AvroSchemas.toAvro(df.schema, "rt").toString
     val back = df
-      .select(GFF.to_avro(struct(df.columns.map(col): _*), schemaJson).as("v"))
+      .select(GFF.to_avro(struct(df.columns.toIndexedSeq.map(col): _*), schemaJson).as("v"))
       .select(GFF.from_avro(col("v"), schemaJson).as("e"))
       .select("e.*")
     assert(back.collect().toSeq.sortBy(_.toString) == df.collect().toSeq.sortBy(_.toString))
@@ -163,7 +163,7 @@ class AvroSpec extends SparkTestBase {
         col("attrs"))
     val schemaJson = AvroSchemas.toAvro(df.schema, "nv").toString
     val back = df
-      .select(GFF.to_avro(struct(df.columns.map(col): _*), schemaJson).as("v"))
+      .select(GFF.to_avro(struct(df.columns.toIndexedSeq.map(col): _*), schemaJson).as("v"))
       .select(GFF.from_avro(col("v"), schemaJson).as("e"))
       .select("e.*")
     assert(back.collect().toSeq.sortBy(_.toString) == df.collect().toSeq.sortBy(_.toString))
@@ -179,7 +179,7 @@ class AvroSpec extends SparkTestBase {
         col("m._3").as("depth")).as("meta"), col("attrs"))
     val schemaJson = AvroSchemas.toAvro(base.schema, "nv").toString
     val payloadRows = base
-      .select(GFF.to_avro(struct(base.columns.map(col): _*), schemaJson).as("v"))
+      .select(GFF.to_avro(struct(base.columns.toIndexedSeq.map(col): _*), schemaJson).as("v"))
       .collect().map(_.getAs[Array[Byte]](0)).toSeq
     // RDD-backed so ConvertToLocalRelation can't fold the decode away
     val rddDf = s0.createDataset(s0.sparkContext.parallelize(payloadRows, 1)).toDF("value")

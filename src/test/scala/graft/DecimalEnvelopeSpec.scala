@@ -46,7 +46,7 @@ class DecimalEnvelopeSpec extends SparkTestBase {
   test("edge: the retired decSum route lands on the single-rounded value, " +
       "1 ulp from DuckDB's — the divergence is real, not theoretical") {
     val got = rowsDf("edge").agg(NamedQuery.decSum(col("v")).as("s"))
-      .head.getDouble(0)
+      .head().getDouble(0)
     val jvm = hex("edge", "expect_spark_hex")
     val duck = hex("edge", "expect_duck_hex")
     assert(java.lang.Double.doubleToLongBits(got) ==
@@ -60,22 +60,22 @@ class DecimalEnvelopeSpec extends SparkTestBase {
 
   test("edge: decSumStr and decSumUnscaled are exact on the same rows") {
     val df = rowsDf("edge")
-    val s = df.agg(NamedQuery.decSumStr(col("v")).as("s")).head.getString(0)
+    val s = df.agg(NamedQuery.decSumStr(col("v")).as("s")).head().getString(0)
     assert(s == fix.get("edge").get("expect_str").asText())
     val u = df.agg(NamedQuery.decSumUnscaled(col("v")).as("u"))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(u == fix.get("edge").get("target_unscaled").asLong())
     // a ratio of two identical past-2^53 sums: exactly 1.0 via the
     // unscaled route (each BIGINT→double rounds once, identically)
     val r = df.agg(NamedQuery.decRatio(col("v"), col("v")).as("r"))
-      .head.getDouble(0)
+      .head().getDouble(0)
     assert(r == 1.0)
   }
 
   test("over63: the guarded Column route raises its own name") {
     val ex = intercept[Throwable] {
       rowsDf("over63").agg(NamedQuery.decSumUnscaled(col("v")).as("u"))
-        .head
+        .head()
     }
     val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
@@ -88,7 +88,7 @@ class DecimalEnvelopeSpec extends SparkTestBase {
     val ex = intercept[Throwable] {
       rowsDf("over63")
         .selectExpr(NamedQuery.sqlDecSumUnscaled("v") + " AS u")
-        .head
+        .head()
     }
     val msgs = Iterator.iterate(ex)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
@@ -100,7 +100,7 @@ class DecimalEnvelopeSpec extends SparkTestBase {
 
   test("over63: decSumStr stays exact past 2^63") {
     val s = rowsDf("over63").agg(NamedQuery.decSumStr(col("v")).as("s"))
-      .head.getString(0)
+      .head().getString(0)
     assert(s == fix.get("over63").get("expect_str").asText())
   }
 }

@@ -2,40 +2,73 @@ package graft
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FilterExec, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.catalog.SystemColumns
+import graft.catalog.{InMemoryMetastore, SchemaField, SystemColumns}
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
 import graft.plans.{OffsetRange, OffsetRangePlanner}
-import graft.sources.{EventSource, KafkaEventSink, ParquetEventSource}
+import graft.sources.{AvroPayloadCodec, JsonPayloadCodec, KafkaEventSink, KafkaEventSource, ParquetEventSource}
 
-class EngineWiringSpec extends SparkTestBase {
+class EngineWiringSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
-  /** Stub source recording the pruned ranges the engine hands it. */
-  private final class RecordingSource(inner: EventSource) extends EventSource {
-    var ranges: Seq[OffsetRange] = OffsetRangePlanner.Full
-    override def read(spark: SparkSession, project: String, collection: String,
-                      schema: StructType): DataFrame =
-      inner.read(spark, project, collection, schema)
-    override def withOffsetRanges(rs: Seq[OffsetRange]): EventSource = {
-      ranges = rs; this
-    }
+  private val kafkaSchema = StructType(Seq(
+    StructField("user_id", LongType), StructField("event_type", StringType)))
+
+  /** A 4-partition FakeKafka topic of 25000 offsets a partition. */
+  private def fakeKafka(payload: String, ranges: Seq[OffsetRange] = OffsetRangePlanner.Full,
+                        minPartitions: Option[Int] = None) =
+    KafkaEventSource("fake:9092",
+      codec = if (payload == "avro") AvroPayloadCodec else JsonPayloadCodec,
+      offsetRanges = ranges,
+      partitionsOf = _ => 4,
+      minPartitions = minPartitions,
+      extraOptions = Map("fake.latest" -> "25000", "fake.partitions" -> "4",
+        "fake.payload" -> payload),
+      format = "graft.sources.FakeKafka")
+
+  /** The executed plan's scans, and its filters over `_offset`. */
+  private def scansAndOffsetFilters(df: DataFrame): (Seq[BatchScanExec], Seq[FilterExec]) = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) { case b: BatchScanExec => b },
+      collect(plan) { case f: FilterExec if f.condition.references.exists(_.name == "_offset") => f })
   }
 
-  test("engine.offsetWindow plans pruned ranges into the source and filters residually") {
-    val base = GraftEngine.overFixtures(spark, sfDir)
-    val rec = new RecordingSource(ParquetEventSource(sfDir))
-    val eng = new GraftEngine(spark, base.metastore, rec)
-    val df = eng.offsetWindow("tpch", "events",
-      col("_offset") >= 100 && col("_offset") < 500 && col("event_type") === "click")
-    // the offset bounds reached the source; the event_type conjunct widened nothing
-    assert(rec.ranges == Seq(OffsetRange(100, Some(500))))
-    // residual filter still applied on top
-    val rows = df.select(col("_offset"), col("event_type")).collect()
+  test("engine.offsetWindow prunes the Kafka scan, with no _offset residual") {
+    val window = col("_offset") >= 100 && col("_offset") < 500 && col("event_type") === "click"
+    // parquet: the answer honors the whole predicate
+    val rows = GraftEngine.overFixtures(spark, sfDir).offsetWindow("tpch", "events", window)
+      .select(col("_offset"), col("event_type")).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(0) >= 100 && r.getLong(0) < 500 && r.getString(1) == "click"))
+    // Kafka: the offset bounds became the scan's window, read in the reader,
+    // so no per-window _offset filter is compiled
+    val ms = new InMemoryMetastore
+    ms.createCollection("proj", "events", SchemaField.fromStructType(kafkaSchema))
+    val df = new GraftEngine(spark, ms, fakeKafka("avro")).offsetWindow("proj", "events", window)
+    val (scans, offsetFilters) = scansAndOffsetFilters(df)
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    assert(scans.head.scan.description().contains("GraftLogScan proj.events ranges=[100,500)"),
+      scans.head.scan.description())
+    assert(offsetFilters.isEmpty, offsetFilters)
+  }
+
+  test("a multi-range engine read is one scan of every range, no union") {
+    val df = fakeKafka("json", Seq(OffsetRange(1000, Some(3000)), OffsetRange(5000, Some(6000))),
+      minPartitions = Some(64)).read(spark, "tpch", "events", kafkaSchema)
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
+    val (scans, _) = scansAndOffsetFilters(df)
+    assert(scans.size == 1, df.queryExecution.executedPlan)
+    val description = scans.head.scan.description()
+    assert(description.contains("ranges=[1000,3000),[5000,6000)"), description)
+    assert("FakeKafkaScan".r.findAllMatchIn(description).size == 2, description)
+    assert(collect(df.queryExecution.executedPlan) { case u: UnionExec => u }.isEmpty)
+    assert(df.agg(sum(col("n"))).head().getLong(0) == (2000L + 1000L) * 4)
   }
 
   test("register exposes <project>_<collection> to spark.sql without system columns") {

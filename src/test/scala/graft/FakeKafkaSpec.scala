@@ -7,11 +7,11 @@ import graft.plans.OffsetRange
 import graft.sources.{FakeKafka, JsonPayloadCodec, KafkaEventSource}
 
 /** Drives the FULL [[KafkaEventSource.read]] path — offset-JSON handoff,
-  * per-range union, minPartitions splitting, decode, malformed-drop —
-  * against the broker-free [[FakeKafka]] DSv2 source. Reproduces the
-  * reference's exact-count-across-many-splits invariant
-  * (`TestManySegments.java:102-108`: many segments/splits must neither lose
-  * nor duplicate a single row).
+  * one raw scan per range inside one log scan, minPartitions splitting,
+  * reader decode, malformed-drop — against the broker-free [[FakeKafka]]
+  * DSv2 source. Reproduces the reference's exact-count-across-many-splits
+  * invariant (`TestManySegments.java:102-108`: many segments/splits must
+  * neither lose nor duplicate a single row).
   */
 class FakeKafkaSpec extends SparkTestBase {
 
@@ -92,6 +92,18 @@ class FakeKafkaSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("readStream over no ranges fails instead of streaming from offset 0") {
+    val q = source(Nil, minParts = None).readStream(spark, "proj", "events", schema)
+      .writeStream.format("memory").queryName("fkempty").outputMode("append").start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try q.processAllAvailable() finally q.stop()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("prunes every offset")), e)
+    assert(q.recentProgress.isEmpty)
+    assert(spark.sql("SELECT count(*) FROM fkempty").head().getLong(0) == 0L)
+  }
+
   test("readStream advances across micro-batches as the log head grows") {
     val src = KafkaEventSource("fake:9092",
       codec = JsonPayloadCodec,
@@ -115,20 +127,58 @@ class FakeKafkaSpec extends SparkTestBase {
   }
 
   test("micro-batch stream never regresses past a checkpointed offset on restart") {
+    import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     val opts = new CaseInsensitiveStringMap(java.util.Map.of(
       "subscribe", "t", "fake.partitions", "1",
       "fake.latest", "50", "fake.advancePerBatch", "50", "fake.maxLatest", "150"))
+    val all = ReadLimit.allAvailable()
     val restarted = new graft.sources.FakeKafkaMicroBatchStream("t", opts)
     // the engine restores the committed offset through deserializeOffset —
     // a fresh instance must adopt it instead of re-announcing head=50
-    restarted.deserializeOffset("""{"0":150}""")
-    val latest = restarted.latestOffset().json()
+    val restored = restarted.deserializeOffset("""{"0":150}""")
+    val latest = restarted.latestOffset(restored, all).json()
     assert(latest == """{"0":150}""", latest)
     // and a maxLatest below the restored offset must not shrink it either
     val shrunk = new graft.sources.FakeKafkaMicroBatchStream("t", opts)
-    shrunk.commit(shrunk.deserializeOffset("""{"0":400}"""))
-    assert(shrunk.latestOffset().json() == """{"0":400}""")
+    val far = shrunk.deserializeOffset("""{"0":400}""")
+    shrunk.commit(far)
+    assert(shrunk.latestOffset(far, all).json() == """{"0":400}""")
+    // a start offset handed straight to latestOffset is adopted as well
+    val fresh = new graft.sources.FakeKafkaMicroBatchStream("t_fresh", opts)
+    val start = new Offset { override def json(): String = """{"0":150}""" }
+    assert(fresh.latestOffset(start, all).json() == """{"0":150}""")
+  }
+
+  test("readStream is admission-controlled: read limit, AvailableNow and source metrics") {
+    // FakeKafka's stream, like Spark's Kafka connector, throws on the
+    // no-argument latestOffset, so this runs only if the log stream
+    // passes admission control through to it
+    val src = KafkaEventSource("fake:9092",
+      codec = JsonPayloadCodec,
+      offsetRanges = Seq(OffsetRange(0, None)),
+      partitionsOf = _ => 2,
+      extraOptions = Map(
+        "fake.partitions" -> "2",
+        "fake.latest" -> "100",
+        "maxOffsetsPerTrigger" -> "60"),
+      format = "graft.sources.FakeKafka")
+    val q = src.readStream(spark, "proj", "limited", schema)
+      .writeStream.format("memory").queryName("fklimit").outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try {
+      assert(q.awaitTermination(120000), "AvailableNow stream did not finish")
+      val batches = q.recentProgress.filter(_.numInputRows > 0).toSeq
+      // 2 x 100 offsets at most 60 a trigger, shared by the two partitions
+      assert(batches.map(_.numInputRows) == Seq(60L, 60L, 60L, 20L))
+      val metrics = batches.map(_.sources.head.metrics)
+      assert(metrics.map(_.get("maxOffsetsBehindLatest")) == Seq("70", "40", "10", "0"))
+      assert(batches.map(_.sources.head.latestOffset).distinct == Seq("""{"0":100,"1":100}"""))
+      val Array(n, distinct) = spark.sql(
+        "SELECT count(*), count(DISTINCT _offset, user_id) FROM fklimit").head().toSeq
+        .map(_.asInstanceOf[Long]).toArray
+      assert(n == 200L && distinct == 200L)
+    } finally q.stop()
   }
 
   test("DSv2 readStream.table decodes at the reader and matches the batch scan") {

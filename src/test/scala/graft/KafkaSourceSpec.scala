@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.catalog.SystemColumns
@@ -66,16 +67,17 @@ class KafkaSourceSpec extends SparkTestBase {
     assert(opts("subscribe") == "proj_events")
   }
 
-  test("rangeResidual restores multi-range semantics on a superset stream") {
+  test("rangePredicate restores multi-range semantics on a superset stream") {
     val s0 = spark
     import s0.implicits._
     val df = (0L until 50L).toDF("_offset")
+    def in(ranges: Seq[OffsetRange]) =
+      Bridge.column(KafkaEventSource.rangePredicate(Bridge.expression(col("_offset")), ranges))
     val ranges = Seq(OffsetRange(5, Some(10)), OffsetRange(20, Some(25)), OffsetRange(40, None))
-    val kept = df.filter(KafkaEventSource.rangeResidual(col("_offset"), ranges))
-      .collect().map(_.getLong(0)).toSet
+    val kept = df.filter(in(ranges)).collect().map(_.getLong(0)).toSet
     assert(kept == ((5L until 10L) ++ (20L until 25L) ++ (40L until 50L)).toSet)
     // no ranges -> nothing passes (matches the empty batch relation)
-    assert(df.filter(KafkaEventSource.rangeResidual(col("_offset"), Nil)).count() == 0)
+    assert(df.filter(in(Nil)).count() == 0)
   }
 
   test("avro round-trip: encode(decode) is lossless incl. nulls") {
