@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Benchmark main (driver contract): run every registered query on
@@ -12,37 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", aqe)
-      // runtime SMJ→SHJ rewrite, size-adaptive via AQE (r16, guide §3.1);
-      // see GraftEngine.shjThreshold for the production rationale
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        GraftEngine.shjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      // default = Spark's own 1g; the 300x streaming spot measurements
-      // raise it because the REGISTRY GATE SHAPE (memory sink + driver
-      // sort, needed for the oracle compare) collects every emission to
-      // the driver — at 30M events the s18 window set alone serializes
-      // past 1 GiB. A production stream writes to a real sink; the
-      // engine-side scale evidence at many triggers is the noop-sink
-      // trigger-regime gate, not this knob.
-      .config("spark.driver.maxResultSize",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT", "1g"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // per-trigger progress capture for the streaming scale audits — no-op
-    // unless SPARK_GRAFT_STREAM_METRICS names a file (ADVICE r11: the
-    // listener scaladoc promised Bench attachment but only Verify did it,
-    // so a metrics-enabled bench silently captured nothing)
-    graft.streaming.StreamMetricsListener.attachIfConfigured(spark)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session(32, "graft-bench")
     // JIT/codegen/IO warmup outside the timed region: one cheap action per
     // table, then a synthetic sweep over the engine machinery the registry
     // leans on (hash agg, sort-merge + broadcast join, window, explode,
@@ -50,7 +20,7 @@ object Bench {
     // compilation and C2 JIT of the generated bytecode — steady-state is
     // what the bench measures, so compile that machinery on data that is
     // NOT the fixtures (no registry query or shared cache is touched).
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+    Harness.warmUp(spark, sfDir)
     locally {
       import org.apache.spark.sql.expressions.Window
       val a = spark.range(2000).select(col("id"), (col("id") % 97).as("k"),
@@ -84,100 +54,19 @@ object Bench {
     // the quantity partition/shuffle tuning actually moves; the JSON
     // discloses passes/agg and the single-pass wall time alongside.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "2").toInt
-    // SPARK_GRAFT_BENCH_ONLY=p04,q44 — diagnostic subset (comma-separated
-    // name prefixes); the driver contract always runs the full registry
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
+    // SPARK_GRAFT_ONLY selects a diagnostic subset; the driver contract
+    // always runs the full registry
+    val names = Harness.entries
     var best = Map.empty[String, Double] // per-query MIN across passes
-    var order: Seq[String] = Nil
     var passTotals = Vector.empty[Double]
     val benchStart = System.nanoTime()
     var pass = 0
-    // --- single-JVM residue control (r5: 2.6x slowdown on UNCHANGED entries
-    // in the driver's full-registry run vs isolated re-runs of the same
-    // queries — q29 22.9 s driver vs 0.73 s isolated). The 196-entry run
-    // accumulates: (a) localCheckpoint blocks pinned by streaming entries'
-    // returned plans (their temp input dirs are deleted, so results are
-    // checkpointed), (b) HDFS-backed state store providers kept in the
-    // executor-side loaded-providers map after each streaming query stops —
-    // dozens of stores x 8 partitions x retained state-map versions, (c)
-    // terminated StreamingQuery objects (each holding its last micro-batch
-    // execution) in StreamingQueryManager, (d) broadcast/shuffle/RDD cleanup
-    // that ContextCleaner only performs after a DRIVER GC — which a 32 GiB
-    // heap with a small live set may not run for the whole bench window.
-    // Every release below runs OUTSIDE the timed region.
-    import java.lang.management.ManagementFactory
-    def gcStats(): (Long, Long) = {
-      var (n, ms) = (0L, 0L)
-      ManagementFactory.getGarbageCollectorMXBeans.forEach { b =>
-        n += math.max(0L, b.getCollectionCount)
-        ms += math.max(0L, b.getCollectionTime)
-      }
-      (n, ms)
-    }
-    def familyReset(tag: String): Unit = {
-      QueriesPipeline.releaseSharedCaches()
-      // safety net: anything still persisted at a family boundary is a leak
-      // (shared caches were just dropped; no cross-family plan reuse exists)
-      spark.sparkContext.getPersistentRDDs.values.foreach(r =>
-        try r.unpersist(blocking = false) catch { case _: Exception => () })
-      // drop terminated streaming queries + close lingering state stores
-      try spark.streams.resetTerminated() catch { case _: Exception => () }
-      try org.apache.spark.sql.execution.streaming.state.GraftStateStoreHygiene.unloadAll()
-      catch { case _: Throwable => () }
-      // drive ContextCleaner's weak-ref queue NOW (broadcast pieces, shuffle
-      // state, checkpoint blocks) instead of at an arbitrary later GC that
-      // lands inside some victim query's timed region
-      System.gc()
-      val (gcN, gcMs) = gcStats()
-      val rt = Runtime.getRuntime
-      val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
-      System.err.println(f"[bench] +${(System.nanoTime() - benchStart) / 1e9}%.1fs reset $tag heapMB=$usedMb gcN=$gcN gcSec=${gcMs / 1000.0}%.1f")
-    }
     def runPass(): Unit = {
       pass += 1
-      // the registry runs alphabetically: all 36 p-queries (whose shared
-      // family caches persist MEMORY_AND_DISK and localCheckpoint blocks)
-      // before q01…, then s-streaming. r03 measured 3-10x regressions on
-      // unchanged q-queries from exactly that: the p-family's pinned blocks
-      // degrade every later family in the same heap. Release the shared
-      // caches at each family boundary (untimed — between queries), so each
-      // family is measured against a clean executor memory.
-      var family = 0.toChar
-      val results = SparkEntry.queries.toSeq.filter(e => selected(e._1)).sortBy(_._1).map { case (name, fn) =>
-        if (name.head != family) {
-          if (family != 0.toChar) familyReset(s"family $family->${name.head}")
-          family = name.head
-        }
-        val t0 = System.nanoTime()
-        val df =
-          try { val d = fn(spark, sfDir); d.count(); Some(d) }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); None
-          }
-        // a failed query must not masquerade as a fast one: record -1
-        val sec = (System.nanoTime() - t0) / 1e9
-        // timestamped per-query line on stderr: lets a slow entry be
-        // correlated against GC/JIT logs (stdout carries only the JSON line)
-        System.err.println(f"[bench] +${(System.nanoTime() - benchStart) / 1e9}%.1fs $name ${sec}%.3fs")
-        // untimed per-entry release for self-contained streaming results:
-        // their localCheckpoint blocks are dead the moment the count
-        // returns (nothing shares them — unlike p-family shared caches,
-        // which stay live until the family boundary), and each run's state
-        // stores / terminated-query handles are pure residue.
-        if (name.head == 's') {
-          df.foreach(d => try graft.operators.Dedup.releaseCheckpoints(d)
-            catch { case _: Exception => () })
-          try spark.streams.resetTerminated() catch { case _: Exception => () }
-          try org.apache.spark.sql.execution.streaming.state.GraftStateStoreHygiene.unloadAll()
-          catch { case _: Throwable => () }
-        }
-        name -> (if (df.isDefined) sec else -1.0)
-      }
-      familyReset("pass end") // between repeat passes, too
-      if (pass == 1) order = results.map(_._1)
+      // a failed query must not masquerade as a fast one: record -1
+      val results = Harness.runEntries(spark, names, "bench") { name =>
+        val d = SparkEntry.queries(name)(spark, sfDir); d.count(); d
+      }.map { case (name, sec) => name -> sec.getOrElse(-1.0) }
       results.foreach { case (name, sec) =>
         // min over SUCCESSFUL passes; -1 survives only if every pass failed
         val merged = best.get(name) match {
@@ -209,7 +98,7 @@ object Bench {
         runPass()
       }
     }
-    val results: Seq[(String, Double)] = order.map(n => n -> best(n))
+    val results: Seq[(String, Double)] = names.map(n => n -> best(n))
     // ONE compact JSON line, printed LAST (after spark.stop() so no late log
     // line can trail it). The harness captures only the tail of stdout, so
     // the line must stay short as the registry grows: per-query keys are the
@@ -239,7 +128,7 @@ object Bench {
     // window whole (see compactTailLine). Local tooling keeps reading the
     // full line; bench_profile.py can also expand "cols".
     compactTailLine(results, keyOf, total, failed, pass, wall, sfDir,
-      subset = only.nonEmpty)
+      subset = Harness.only.nonEmpty)
       .foreach(println)
   }
 
@@ -248,9 +137,9 @@ object Bench {
     * Headline metrics first, the spec-shaped "queries" dict restricted to
     * the slowest entries, and the COMPLETE per-entry map as columnar arrays
     * (one per registry family, index = 1-based numeric suffix). Emitted only
-    * when this is a FULL-registry run (`subset = false`): a BENCH_ONLY run
+    * when this is a FULL-registry run (`subset = false`): a SPARK_GRAFT_ONLY run
     * returns None even when the chosen subset happens to be
-    * family-complete (e.g. BENCH_ONLY=p), because its "value" is a
+    * family-complete (e.g. SPARK_GRAFT_ONLY=p), because its "value" is a
     * family-only total the driver could misread as a full-registry
     * regression. The contiguity check stays as a second guard (positional
     * array indexing must not lie). The line is guaranteed ≤ 1880 chars so

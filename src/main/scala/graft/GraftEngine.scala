@@ -166,7 +166,10 @@ object GraftEngine {
   val shjThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
 
-  /** Local session with the settings this project standardizes on. */
+  /** Local session with the settings this project standardizes on: the
+    * only session builder in the program, so every main and spec plans
+    * under the same conf (`SessionConfSpec` pins it).
+    */
   def localSession(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -176,6 +179,13 @@ object GraftEngine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
       .config("spark.sql.session.timeZone", "UTC")
+      // default = Spark's own 1g; the 300x streaming spot measurements
+      // raise it because the registry gate shape (memory sink + driver
+      // sort, needed for the oracle compare) collects every emission to
+      // the driver — at 30M events the s18 window set alone serializes
+      // past 1 GiB
+      .config("spark.driver.maxResultSize",
+        sys.env.getOrElse("SPARK_GRAFT_MAX_RESULT", "1g"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{FieldType, InMemoryMetastore, SchemaField, SystemColumns}
@@ -25,15 +24,7 @@ object KafkaSmoke {
 
   def main(args: Array[String]): Unit = {
     val bootstrap = args.headOption.getOrElse("localhost:9092")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-kafka-smoke")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftEngine.localSession(cores = 4, appName = "graft-kafka-smoke")
 
     val metastore = new InMemoryMetastore
     metastore.createCollection(Project, Collection, Seq(

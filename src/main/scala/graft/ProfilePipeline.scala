@@ -9,12 +9,11 @@ package graft
   */
 object ProfilePipeline {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the engine's standard local session — profiled stage costs must be
-    // measured under the same config the bench runs
-    val spark = GraftEngine.localSession(cores = cpus.toInt, appName = "graft-profilepipeline")
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+    val sfDir = Harness.sfDir
+    // the bench's session — profiled stage costs must be measured under
+    // the same config the bench runs
+    val spark = Harness.session(32, "graft-profilepipeline")
+    Harness.warmUp(spark, sfDir)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
     def time(tag: String)(body: => Long): Unit = {
       val t0 = System.nanoTime()

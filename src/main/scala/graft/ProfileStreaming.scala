@@ -1,30 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Diagnostic main: run one registry entry (SPARK_GRAFT_PROFILE_ENTRY)
+/** Diagnostic main: run the registry entries `SPARK_GRAFT_ONLY` selects
+  * (required; prefixes as in [[Harness]], e.g. `SPARK_GRAFT_ONLY=s08`)
   * with a StreamingQueryListener attached and dump every micro-batch's
   * progress JSON (durationMs breakdown: triggerExecution, addBatch,
   * walCommit, commitOffsets, queryPlanning, latestOffset) to stderr.
-  * Same session config as Bench so the numbers are comparable. Used to
+  * Same session as Bench so the numbers are comparable. Used to
   * attribute the streaming entries' per-trigger fixed cost (round-7
   * verdict item #1); not part of the driver contract.
   */
 object ProfileStreaming {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val entry = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ENTRY", "s08")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+    val sfDir = Harness.sfDir
+    val names = Harness.select(Harness.only.getOrElse(
+      sys.error("SPARK_GRAFT_ONLY must name the entries to profile, e.g. s08")))
+    val spark = Harness.session(32, "graft-profilestreaming")
+    Harness.warmUp(spark, sfDir)
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
         System.err.println(s"[profile] started ${e.id}")
@@ -36,27 +29,12 @@ object ProfileStreaming {
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         System.err.println(s"[profile] terminated ${e.id}")
     })
-    // Comma-separated list of entries; each resolved by exact-name lookup
-    // first, else prefix over SORTED keys, erroring on ambiguity —
-    // Map.find over hash order would pick an arbitrary match for a prefix
-    // like "s1" (s10/s11/s14/...).
-    val resolved: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      entry.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { e =>
-        SparkEntry.queries.get(e).map(e -> _).getOrElse {
-          val hits = SparkEntry.queries.keys.toSeq.sorted.filter(_.startsWith(e))
-          hits match {
-            case Seq(one) => one -> SparkEntry.queries(one)
-            case Seq() => sys.error(s"no entry matching $e")
-            case many => sys.error(s"ambiguous prefix $e: ${many.mkString(", ")}")
-          }
-        }
-      }
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
-    resolved.foreach { case (name, fn) =>
+    names.foreach { name =>
       System.err.println(s"[profile] ===== $name =====")
       (1 to passes).foreach { i =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        SparkEntry.queries(name)(spark, sfDir).count()
         System.err.println(f"[profile] $name pass $i total ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     }

@@ -185,7 +185,7 @@ object QueriesPipeline {
     * persistAtHit = 1 deliberately: with exactly two consumers, persisting
     * from the second access would re-execute the join for the second
     * consumer and lose the sharing entirely. The lone-run tradeoff (a
-    * BENCH_ONLY=p02 run persists a table nothing reuses) is the same one
+    * SPARK_GRAFT_ONLY=p02 run persists a table nothing reuses) is the same one
     * pairsCache/scoredPairsCache already accept — and post-r16 the
     * persisted frame is a few thousand survivor rows, so the lone-run
     * cost is negligible.
@@ -784,31 +784,11 @@ object QueriesPipeline {
     corpusIndexDirs.values.forEach(p => graft.util.Fs.deleteRecursively(p))
   }
 
-  /** Cache key for [[materializedCorpusIndex]]: the fixture dir PLUS a
-    * fingerprint of documents.parquet (total size + max mtime, recursive
-    * for directory-shaped tables). A fixture regenerated in place mid-JVM
-    * therefore misses the cache and rebuilds, instead of silently serving
-    * a stale index (advice r7).
-    */
-  private def corpusFingerprint(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "documents.parquet")
-    if (!java.nio.file.Files.exists(p)) s"$dir:absent"
-    else {
-      var size = 0L; var mtime = 0L
-      val walk = java.nio.file.Files.walk(p)
-      try walk.forEach { f =>
-        if (java.nio.file.Files.isRegularFile(f)) {
-          size += java.nio.file.Files.size(f)
-          mtime = math.max(mtime,
-            java.nio.file.Files.getLastModifiedTime(f).toMillis)
-        }
-      } finally walk.close()
-      s"$dir:$size:$mtime"
-    }
-  }
-
   private[graft] def materializedCorpusIndex(s: SparkSession, dir: String): CorpusIndex = {
-    val root = corpusIndexDirs.computeIfAbsent(corpusFingerprint(dir), { _ =>
+    // keyed on the documents table's stamp too: a fixture regenerated in
+    // place mid-JVM rebuilds the index instead of serving a stale one
+    val key = s"$dir:${Tables.pathStamp(s"$dir/documents.parquet")}"
+    val root = corpusIndexDirs.computeIfAbsent(key, { _ =>
       val d = java.nio.file.Files.createTempDirectory("graft_corpus_idx_")
       val idx = corpusIndex(sharedShingleHashes(s, dir))
       idx.sh.write.mode("overwrite").parquet(d.resolve("sh").toString)

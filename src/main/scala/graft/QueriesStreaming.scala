@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import NamedQuery.{decSum, sqlDecSum}
+import QueriesCore.withConfs
 
 /** Streaming-mode registry entries: each runs a REAL Structured Streaming
   * query (readStream → stateful aggregation → memory sink) to completion
@@ -34,9 +35,10 @@ object QueriesStreaming {
     sys.env.get("SPARK_GRAFT_STREAM_TIMEOUT_MS").map(_.toLong)
       .getOrElse(180000L)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` = `n`, restoring the
-    * session value after. Streaming state stores carry FIXED per-partition
-    * cost every micro-batch (delta file + snapshot + maintenance per
+  /** `spark.sql.shuffle.partitions` = `n`, scoped by
+    * [[QueriesCore.withConfs]] around a stream's definition. Streaming
+    * state stores carry FIXED per-partition cost every micro-batch (delta
+    * file + snapshot + maintenance per
     * store; a stream-stream join runs FOUR stores per partition), so state
     * partitions are sized to key cardinality — the standard per-stream ops
     * knob, set here once at stream definition (a restarted stream keeps
@@ -51,19 +53,20 @@ object QueriesStreaming {
     * state-per-partition, e.g. thousands of partitions for billions of
     * keys). Batch entries keep the session default (= cores).
     *
-    * SEQUENTIAL-ONLY: this mutates the shared session conf and restores it
-    * in `finally`, which is safe under the harness's one-query-at-a-time
+    * SEQUENTIAL-ONLY: `withConfs` mutates the shared session conf and
+    * restores it in `finally`, which is safe under the harness's one-query-at-a-time
     * execution (Verify/Bench/specs all run entries sequentially). If
     * concurrent query execution on one session is ever introduced, scope
     * the setting per stream instead (e.g. the SQLConf-tagged
     * `RuntimeConfig` clone or a dedicated session via `newSession()`).
     */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
+  private def statePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+
+  /** RocksDB state store, for the state-v2 entries (see s17). */
+  private val rocksDbState: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Run `df` (a streaming frame) to completion into a memory sink and
     * return the sink table. The sink name is derived from the fixture dir
@@ -196,7 +199,7 @@ object QueriesStreaming {
     // SQL. decSum keeps the double aggregation order-insensitive across
     // micro-batch merge order (same technique as the batch queries).
     NamedQuery("s01_stream_daily_stats",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val agg = eventsStream(s, dir)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
@@ -215,7 +218,7 @@ object QueriesStreaming {
     // stateful operator merges sessions incrementally across micro-batches;
     // the oracle derives identical extents from the batch formulation.
     NamedQuery("s02_stream_sessions",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val agg = eventsStream(s, dir)
           .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
           .agg(count(lit(1)).as("n"))
@@ -252,7 +255,7 @@ object QueriesStreaming {
     // doesn't grow with stream length; unbounded state is fine for a
     // finite backfill like this one.
     NamedQuery("s03_stream_dedup",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val dedup = eventsStream(s, dir)
           .select(col("user_id"), col("event_type"))
           .dropDuplicates("user_id", "event_type")
@@ -271,7 +274,7 @@ object QueriesStreaming {
     // exactly the matched pairs regardless of micro-batch cut points, so
     // the streamed result set equals the batch theta-join the oracle runs.
     NamedQuery("s04_stream_stream_join",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         // stream-stream watermarks require TIMESTAMP (not NTZ); the session
         // is pinned to UTC everywhere, so the NTZ→TZ→NTZ round-trip is the
         // identity on the underlying instant
@@ -300,7 +303,7 @@ object QueriesStreaming {
     // table. ts is unique per user, so the argmax is merge-order
     // independent and the result equals the batch oracle bit-for-bit.
     NamedQuery("s05_stream_latest_by_key",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val agg = eventsStream(s, dir)
           .groupBy(col("user_id"))
           .agg(max(col("ts")).as("last_ts"),
@@ -330,7 +333,7 @@ object QueriesStreaming {
     // processAllAvailable (not AvailableNow) so the growing head is chased
     // to quiescence — the live-topic catch-up shape.
     NamedQuery("s06_stream_kafka_log",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
         val schema = StructType(Seq(
           StructField("user_id", LongType),
@@ -389,7 +392,7 @@ object QueriesStreaming {
     // total_value is deliberately NOT an output column: per-session double
     // accumulation order is tie-dependent; counts and ms bounds are exact.
     NamedQuery("s07_stream_custom_sessions",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import s.implicits._
         val gapMs = 6L * 3600 * 1000
         val ev = eventsStream(s, dir)
@@ -451,7 +454,7 @@ object QueriesStreaming {
     // read-back is materialized, so concurrent runs can never clobber or
     // replay each other's output.
     NamedQuery("s08_stream_foreachbatch_sink",
-      (s, dir) => withStatePartitions(s, 2) {
+      (s, dir) => withConfs(s, statePartitions(2)) {
         val outDir = java.nio.file.Files.createTempDirectory(
           java.nio.file.Paths.get(if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
             System.getProperty("java.io.tmpdir")), "graft_s08_out_")
@@ -555,7 +558,7 @@ object QueriesStreaming {
     // the same closed-form (partition, offset) log as s06, replayed by the
     // oracle with generate_series.
     NamedQuery("s09_stream_dsv2_microbatch",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val tag = java.util.UUID
           .nameUUIDFromBytes(s"s09:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
           .toString.replace("-", "").take(12)
@@ -616,7 +619,7 @@ object QueriesStreaming {
     // cutoff, [StateStoreSaveExec]'s non-strict `end <= watermark`
     // eviction predicate on ms-floored event time.
     NamedQuery("s10_stream_tumbling_append",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
           val agg = ev
             .withColumn("ts", col("ts").cast("timestamp"))
@@ -649,7 +652,7 @@ object QueriesStreaming {
     // an unbounded 100 TB stream. Oracle: s02's relational sessionization
     // restricted to the same `end <= watermark` cutoff on ms-floored time.
     NamedQuery("s11_stream_sessions_append",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
           val agg = ev
             .withColumn("ts", col("ts").cast("timestamp"))
@@ -697,7 +700,7 @@ object QueriesStreaming {
     // micro-batch (multi-batch cadence is s09's job); the caller-side
     // `_offset` window filter evaluates on the decoded stream.
     NamedQuery("s12_stream_dsv2_avro",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val tag = java.util.UUID
           .nameUUIDFromBytes(s"s12:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
           .toString.replace("-", "").take(12)
@@ -764,7 +767,7 @@ object QueriesStreaming {
     // horizon stay in state forever — exactly what an unbounded production
     // stream would do. Oracle replays the ms-floored cutoff (s10's rule).
     NamedQuery("s14_stream_outer_join",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev0 =>
           // The join's effective watermark is the MIN over the two sides,
           // and EACH SIDE TRACKS ONLY ITS OWN ROWS: even with
@@ -844,7 +847,7 @@ object QueriesStreaming {
     // slowly-changing joins). The join is on the dim's key, every event
     // matches (FK-complete fixture), and the rollup is merge-order-free.
     NamedQuery("s13_stream_static_enrichment",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val dim = broadcast(Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_nationkey")))
         val agg = eventsStream(s, dir)
@@ -876,7 +879,7 @@ object QueriesStreaming {
     // (s10 gates that path); update mode without one suits a finite
     // backfill or a keyed table whose key space is the bound.
     NamedQuery("s15_stream_update_mode",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val outDir = java.nio.file.Files.createTempDirectory("graft_s15_out_")
         try withStagedEventsStream(s, dir, 4) { ev =>
           val agg = ev
@@ -927,7 +930,7 @@ object QueriesStreaming {
     // exactly in days (both epoch-aligned), day closed ⇔ its end cleared
     // the final watermark (max ts − 1h), replaying s10's cutoff rule.
     NamedQuery("s16_stream_chained_aggs",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
           val sixHour = ev
             .withColumn("ts", col("ts").cast("timestamp"))
@@ -970,28 +973,21 @@ object QueriesStreaming {
     // composes multiple typed state variables + TTL where fMGWS forces
     // one state blob. The provider conf is scoped to this entry and
     // restored after (sequential harness, same discipline as
-    // withStatePartitions).
+    // statePartitions).
     NamedQuery("s17_stream_state_v2_sessions",
-      (s, dir) => withStatePartitions(s, 4) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.get(key,
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import s.implicits._
-          val gapMs = 6L * 3600 * 1000
-          val ev = eventsStream(s, dir)
-            .select(col("user_id"), col("event_type"),
-              col("ts").cast("timestamp").as("ts"), col("value"))
-            .as[graft.streaming.EventStreams.Event]
-          val sessions = graft.streaming.EventStreams
-            .sessionizeV2(ev, gapMs = gapMs, watermark = "1 hour")
-          runToTable(s, sink("s17", dir), sessions.toDF(), mode = "append")
-            .select(col("user_id"), col("start").as("s_start"),
-              col("end").as("s_end"), col("n_events"))
-            .orderBy(col("user_id"), col("s_start"))
-        } finally s.conf.set(key, prev)
+      (s, dir) => withConfs(s, statePartitions(4), rocksDbState) {
+        import s.implicits._
+        val gapMs = 6L * 3600 * 1000
+        val ev = eventsStream(s, dir)
+          .select(col("user_id"), col("event_type"),
+            col("ts").cast("timestamp").as("ts"), col("value"))
+          .as[graft.streaming.EventStreams.Event]
+        val sessions = graft.streaming.EventStreams
+          .sessionizeV2(ev, gapMs = gapMs, watermark = "1 hour")
+        runToTable(s, sink("s17", dir), sessions.toDF(), mode = "append")
+          .select(col("user_id"), col("start").as("s_start"),
+            col("end").as("s_end"), col("n_events"))
+          .orderBy(col("user_id"), col("s_start"))
       },
       Some("""WITH e AS (
                SELECT user_id, epoch_ms(ts) AS ms FROM events),
@@ -1027,23 +1023,16 @@ object QueriesStreaming {
     // order can't move the result; the oracle replays the timer cutoff:
     // a window emits iff its end is at or below the final watermark.
     NamedQuery("s18_stream_mapstate_windows",
-      (s, dir) => withStatePartitions(s, 8) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.get(key,
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import s.implicits._
-          val ev = eventsStream(s, dir)
-            .select(col("user_id"), col("event_type"),
-              col("ts").cast("timestamp").as("ts"), col("value"))
-            .as[graft.streaming.EventStreams.Event]
-          val wins = graft.streaming.EventStreams
-            .mapStateWindows(ev, windowMs = 6L * 3600 * 1000, watermark = "1 hour")
-          runToTable(s, sink("s18", dir), wins.toDF(), mode = "append")
-            .orderBy(col("user_id"), col("w_start"))
-        } finally s.conf.set(key, prev)
+      (s, dir) => withConfs(s, statePartitions(8), rocksDbState) {
+        import s.implicits._
+        val ev = eventsStream(s, dir)
+          .select(col("user_id"), col("event_type"),
+            col("ts").cast("timestamp").as("ts"), col("value"))
+          .as[graft.streaming.EventStreams.Event]
+        val wins = graft.streaming.EventStreams
+          .mapStateWindows(ev, windowMs = 6L * 3600 * 1000, watermark = "1 hour")
+        runToTable(s, sink("s18", dir), wins.toDF(), mode = "append")
+          .orderBy(col("user_id"), col("w_start"))
       },
       Some("""WITH wm AS (
                SELECT max(epoch_ms(ts)) - 3600000 AS w FROM events),
@@ -1071,58 +1060,51 @@ object QueriesStreaming {
     // through the streaming engine and one batch job + catch-up from an
     // offset.
     NamedQuery("s19_stream_seeded_bootstrap",
-      (s, dir) => withStatePartitions(s, 4) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.get(key,
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import s.implicits._
-          import org.apache.spark.sql.expressions.Window
-          val gapMs = 6L * 3600 * 1000
-          val ev = Tables.load(s, dir, "events")
-            .select(col("user_id"), col("event_type"),
-              col("ts").cast("timestamp").as("ts"), col("value"))
-          val bounds = ev.agg(min(unix_millis(col("ts"))).as("lo"),
-            max(unix_millis(col("ts"))).as("hi")).head()
-          val cutMs = (bounds.getLong(0) + bounds.getLong(1)) / 2
-          val w = Window.partitionBy(col("user_id")).orderBy(col("ms"))
-          val sess = ev.filter(unix_millis(col("ts")) < cutMs)
-            .select(col("user_id"), unix_millis(col("ts")).as("ms"), col("value"))
-            .withColumn("new_s", when(lag(col("ms"), 1).over(w).isNull
-              || col("ms") - lag(col("ms"), 1).over(w) > gapMs, 1).otherwise(0))
-            .withColumn("sid", sum(col("new_s"))
-              .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-            .groupBy(col("user_id"), col("sid"))
-            .agg(min(col("ms")).as("sms"), max(col("ms")).as("ems"),
-              count(lit(1)).as("n"), sum(col("value")).as("total"))
-          // a session is closed by the cut iff no post-cut event can
-          // extend it: lastMs + gap < cut. At most one per user survives
-          // open (any earlier session is gap-separated from a later
-          // pre-cut start, hence closed).
-          val closed = sess.filter(col("ems") + gapMs < cutMs)
-            .select(col("user_id"), timestamp_millis(col("sms")).as("s_start"),
-              timestamp_millis(col("ems")).as("s_end"), col("n").as("n_events"))
-          val seed = sess.filter(col("ems") + gapMs >= cutMs)
-            .select(col("user_id"), col("sms"), col("ems"), col("n"), col("total"))
-            .as[(Long, Long, Long, Long, Double)]
-            .map { case (u, sms, ems, n, tot) =>
-              (u, graft.streaming.EventStreams.SessionBuf(sms, ems, n, tot)) }
-            .groupByKey(_._1).mapValues(_._2)
-          val post = eventsStream(s, dir)
-            .select(col("user_id"), col("event_type"),
-              col("ts").cast("timestamp").as("ts"), col("value"))
-            .filter(unix_millis(col("ts")) >= cutMs)
-            .as[graft.streaming.EventStreams.Event]
-          val streamed = graft.streaming.EventStreams
-            .sessionizeV2Seeded(post, seed, gapMs = gapMs, watermark = "1 hour")
-          val streamPart = runToTable(s, sink("s19", dir), streamed.toDF(), mode = "append")
-            .select(col("user_id"), col("start").as("s_start"),
-              col("end").as("s_end"), col("n_events"))
-          closed.unionByName(streamPart)
-            .orderBy(col("user_id"), col("s_start"))
-        } finally s.conf.set(key, prev)
+      (s, dir) => withConfs(s, statePartitions(4), rocksDbState) {
+        import s.implicits._
+        import org.apache.spark.sql.expressions.Window
+        val gapMs = 6L * 3600 * 1000
+        val ev = Tables.load(s, dir, "events")
+          .select(col("user_id"), col("event_type"),
+            col("ts").cast("timestamp").as("ts"), col("value"))
+        val bounds = ev.agg(min(unix_millis(col("ts"))).as("lo"),
+          max(unix_millis(col("ts"))).as("hi")).head()
+        val cutMs = (bounds.getLong(0) + bounds.getLong(1)) / 2
+        val w = Window.partitionBy(col("user_id")).orderBy(col("ms"))
+        val sess = ev.filter(unix_millis(col("ts")) < cutMs)
+          .select(col("user_id"), unix_millis(col("ts")).as("ms"), col("value"))
+          .withColumn("new_s", when(lag(col("ms"), 1).over(w).isNull
+            || col("ms") - lag(col("ms"), 1).over(w) > gapMs, 1).otherwise(0))
+          .withColumn("sid", sum(col("new_s"))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .groupBy(col("user_id"), col("sid"))
+          .agg(min(col("ms")).as("sms"), max(col("ms")).as("ems"),
+            count(lit(1)).as("n"), sum(col("value")).as("total"))
+        // a session is closed by the cut iff no post-cut event can
+        // extend it: lastMs + gap < cut. At most one per user survives
+        // open (any earlier session is gap-separated from a later
+        // pre-cut start, hence closed).
+        val closed = sess.filter(col("ems") + gapMs < cutMs)
+          .select(col("user_id"), timestamp_millis(col("sms")).as("s_start"),
+            timestamp_millis(col("ems")).as("s_end"), col("n").as("n_events"))
+        val seed = sess.filter(col("ems") + gapMs >= cutMs)
+          .select(col("user_id"), col("sms"), col("ems"), col("n"), col("total"))
+          .as[(Long, Long, Long, Long, Double)]
+          .map { case (u, sms, ems, n, tot) =>
+            (u, graft.streaming.EventStreams.SessionBuf(sms, ems, n, tot)) }
+          .groupByKey(_._1).mapValues(_._2)
+        val post = eventsStream(s, dir)
+          .select(col("user_id"), col("event_type"),
+            col("ts").cast("timestamp").as("ts"), col("value"))
+          .filter(unix_millis(col("ts")) >= cutMs)
+          .as[graft.streaming.EventStreams.Event]
+        val streamed = graft.streaming.EventStreams
+          .sessionizeV2Seeded(post, seed, gapMs = gapMs, watermark = "1 hour")
+        val streamPart = runToTable(s, sink("s19", dir), streamed.toDF(), mode = "append")
+          .select(col("user_id"), col("start").as("s_start"),
+            col("end").as("s_end"), col("n_events"))
+        closed.unionByName(streamPart)
+          .orderBy(col("user_id"), col("s_start"))
       },
       Some("""WITH e AS (
                SELECT user_id, epoch_ms(ts) AS ms FROM events),
@@ -1164,7 +1146,7 @@ object QueriesStreaming {
     // gated: which physical row survives dedup is processing-order-
     // dependent, so per-row `ts` is dropped before the sink.
     NamedQuery("s20_stream_dedup_within_wm",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val dedup = eventsStream(s, dir)
           .select(col("user_id"), col("event_type"),
             col("ts").cast("timestamp").as("ts"))
@@ -1190,7 +1172,7 @@ object QueriesStreaming {
     // This is the continuous-ingest shape of a production corpus: dedup
     // runs as data lands, not as a nightly full-corpus job.
     NamedQuery("s21_stream_ingest_dedup",
-      (s, dir) => withStatePartitions(s, 8) {
+      (s, dir) => withConfs(s, statePartitions(8)) {
         val stage = java.nio.file.Files.createTempDirectory("graft_s21_stage_")
         val outDir = java.nio.file.Files.createTempDirectory("graft_s21_out_")
         try {
@@ -1248,7 +1230,7 @@ object QueriesStreaming {
     // (blocklists are benchmark-sized), refreshed by restarting the
     // query — the same slowly-changing-dim story as s13.
     NamedQuery("s22_stream_static_anti",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val stage = java.nio.file.Files.createTempDirectory("graft_s22_stage_")
         try {
           val pfx = concat_ws(" ",
@@ -1293,29 +1275,22 @@ object QueriesStreaming {
     // O(events): the 100 TB property that distinguishes this from
     // collect-and-sort.
     NamedQuery("s23_stream_liststate_topk",
-      (s, dir) => withStatePartitions(s, 4) {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.get(key,
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-        s.conf.set(key,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          import s.implicits._
-          import org.apache.spark.sql.expressions.Window
-          // 3 staged chunks → the per-key snapshot really REFINES across
-          // micro-batches (single-file streaming would make this one batch)
-          withStagedEventsStream(s, dir, 3) { evs =>
-            val ev = evs.select(col("user_id"), col("event_id"), col("value"))
-              .as[graft.streaming.EventStreams.EventIdVal]
-            val snaps = graft.streaming.EventStreams.listStateTopK(ev).toDF()
-            val latest = Window.partitionBy(col("user_id"))
-              .orderBy(col("n_seen").desc)
-            runToTable(s, sink("s23", dir), snaps, mode = "update")
-              .withColumn("rk", row_number().over(latest))
-              .filter(col("rk") === 1).drop("rk")
-              .orderBy(col("user_id"))
-          }
-        } finally s.conf.set(key, prev)
+      (s, dir) => withConfs(s, statePartitions(4), rocksDbState) {
+        import s.implicits._
+        import org.apache.spark.sql.expressions.Window
+        // 3 staged chunks → the per-key snapshot really REFINES across
+        // micro-batches (single-file streaming would make this one batch)
+        withStagedEventsStream(s, dir, 3) { evs =>
+          val ev = evs.select(col("user_id"), col("event_id"), col("value"))
+            .as[graft.streaming.EventStreams.EventIdVal]
+          val snaps = graft.streaming.EventStreams.listStateTopK(ev).toDF()
+          val latest = Window.partitionBy(col("user_id"))
+            .orderBy(col("n_seen").desc)
+          runToTable(s, sink("s23", dir), snaps, mode = "update")
+            .withColumn("rk", row_number().over(latest))
+            .filter(col("rk") === 1).drop("rk")
+            .orderBy(col("user_id"))
+        }
       },
       Some("""WITH r AS (
                SELECT user_id, value, row_number() OVER (
@@ -1338,7 +1313,7 @@ object QueriesStreaming {
     // in DuckDB (q86's oracle shape). Three deterministically malformed
     // rows are injected pre-staging, identically in both engines.
     NamedQuery("s24_stream_dead_letter",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import s.implicits._
         val stage = java.nio.file.Files.createTempDirectory("graft_s24_stage_")
         val cleanDir = java.nio.file.Files.createTempDirectory("graft_s24_clean_")
@@ -1415,7 +1390,7 @@ object QueriesStreaming {
     // top-k (s23's ListState) is the fallback. Tie-break on event_type
     // keeps the limit deterministic.
     NamedQuery("s25_stream_complete_topk",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 3) { evs =>
           val ranked = evs.groupBy(col("event_type"))
             .agg(count(lit(1)).as("n"))
@@ -1443,7 +1418,7 @@ object QueriesStreaming {
     // the same job. At 100 TB the overwrite becomes Delta/Iceberg MERGE
     // or s08's partition overwrite; the loop semantics are identical.
     NamedQuery("s26_stream_cdc_apply",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import org.apache.spark.sql.expressions.Window
         val target = java.nio.file.Files.createTempDirectory("graft_s26_target_")
         try {
@@ -1499,7 +1474,7 @@ object QueriesStreaming {
     // first match arrives, and chunking can't change the SET of matched
     // clicks. Oracle: the equivalent EXISTS.
     NamedQuery("s27_stream_semi_join",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val ev = eventsStream(s, dir).withColumn("ts", col("ts").cast("timestamp"))
         val c = ev.filter(col("event_type") === "click")
           .withWatermark("ts", "1 hour")
@@ -1542,7 +1517,7 @@ object QueriesStreaming {
     // event time minus its delay, global = least of the two, emitted =
     // window end ≤ global (StateStoreSaveExec's non-strict predicate).
     NamedQuery("s28_stream_union_min_wm",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
           val in = ev.withColumn("ts", col("ts").cast("timestamp"))
           val clicks = in.filter(col("event_type") === "click")
@@ -1585,7 +1560,7 @@ object QueriesStreaming {
     // micro-batch chunking. The encode/decode pair is per-row codegen'd
     // map work; the only shuffle is the final per-user rollup.
     NamedQuery("s29_stream_sink_roundtrip",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 3) { ev =>
           import graft.functions.{AvroSchemas, GraftFunctions => GF}
           import org.apache.spark.sql.types.StructType
@@ -1625,7 +1600,7 @@ object QueriesStreaming {
     // foreachBatch sink exactly-once. State (the dedup key set) rides
     // the checkpoint across the restart.
     NamedQuery("s30_stream_checkpoint_resume",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
         val root = Files.createTempDirectory("graft_s30_")
         try {
@@ -1688,7 +1663,7 @@ object QueriesStreaming {
     // integer seconds plus the terminal ms-floored cutoff against the
     // bucket's offset end.
     NamedQuery("s31_stream_origin_windows",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         withStagedEventsStream(s, dir, 4) { ev =>
           val agg = ev
             .withColumn("ts", col("ts").cast("timestamp"))
@@ -1729,7 +1704,7 @@ object QueriesStreaming {
     // append mode
     // end-to-end (the only legal mode for chained stateful operators).
     NamedQuery("s32_stream_join_then_agg",
-      (s, dir) => withStatePartitions(s, 2) {
+      (s, dir) => withConfs(s, statePartitions(2)) {
         withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { evRaw =>
           val ev = evRaw.withColumn("ts", col("ts").cast("timestamp"))
           val joined = graft.streaming.EventStreams.clickErrorJoin(
@@ -1782,7 +1757,7 @@ object QueriesStreaming {
     // s30's per-batchId dirs). This is how a 100 TB continuously-updated
     // table survives executor/driver loss without a full rebuild.
     NamedQuery("s33_stream_restart_overwrite",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
         val root = Files.createTempDirectory("graft_s33_")
         try {
@@ -1873,7 +1848,7 @@ object QueriesStreaming {
     // watermark-bounded; chunks are range-staged so every upserted window
     // is final once its state evicts.
     NamedQuery("s34_jdbc_txn_sink",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
         val root = Files.createTempDirectory("graft_s34_")
         val db = root.resolve("db").toString
@@ -1954,7 +1929,7 @@ object QueriesStreaming {
     // bucket key is the shard path and this IS the writer-side integrity
     // ledger that p68 audits after the fact.
     NamedQuery("s35_stream_bucket_manifest",
-      (s, dir) => withStatePartitions(s, 4) {
+      (s, dir) => withConfs(s, statePartitions(4)) {
         val stage = java.nio.file.Files.createTempDirectory("graft_s35_stage_")
         try {
           Tables.load(s, dir, "documents")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential-test runner: read a JSON object of {name: sql} (shared
   * Spark/DuckDB dialect), run each statement against the registered fixture
   * views, dump one parquet dir per query. `tools/fuzz_oracle.py` generates
@@ -13,15 +11,7 @@ import org.apache.spark.sql.SparkSession
 object RunSql {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, queryFile, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4, "graft-runsql")
     // ANSI-parity mode for the differential fuzzer: DuckDB (the comparison
     // engine) follows the standard's empty-input grand-total rule, so the
     // fuzzer exercises graft.plans.StandardGroupingSets on every random

@@ -920,101 +920,93 @@ object StreamFuzz {
         .map(_.toLong).getOrElse(600000L)), s"stream did not finish: ${plan.desc}")
       finally q.stop()
     }
-    // capture-and-restore with unset (not a hardcoded default literal):
-    // if the key was never set, pinning today's default would drift
-    // silently if Spark's default provider ever changes (r12 ADVICE; the
-    // same discipline as StreamTriggerRegime.withConf)
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val provPrev = s.conf.getOption(provKey)
-    plan.provider.foreach(p => s.conf.set(provKey, p))
-    val cp = java.nio.file.Files.createTempDirectory("graft_fuzz_cp_")
-    try {
-      val files = graft.util.Fs.listDir(stage)(
-        _.filter(_.toString.endsWith(".parquet")).map(_.toString))
-      // copy `srcFiles` progressively into `live` with staggered mtimes
-      // (FileStreamSource orders by modification time — stagedDir's note)
-      def copyUpTo(live: java.nio.file.Path, srcFiles: Seq[String])(n: Int): Unit =
-        srcFiles.take(n).zipWithIndex.foreach { case (f, i) =>
-          val src = java.nio.file.Paths.get(f)
-          val dst = live.resolve(src.getFileName)
-          if (!java.nio.file.Files.exists(dst)) {
-            java.nio.file.Files.copy(src, dst)
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(
-                1000000000000L + i * 60000L))
-          }
-        }
-      val extra: Seq[Row] = plan.boot match {
-        case None =>
-          if (plan.restartAt == 0) run(stage.toString, cp.toString)
-          else {
-            val live = java.nio.file.Files.createTempDirectory("graft_fuzz_live_")
-            try {
-              val arm = copyUpTo(live, files) _
-              arm(plan.restartAt)
-              run(live.toString, cp.toString)
-              arm(files.size)
-              run(live.toString, cp.toString)
-            } finally graft.util.Fs.deleteRecursively(live)
-          }
-          Nil
-        case Some(bt) =>
-          // family I: batch-compute the pre-cut sessions, seed the open
-          // ones, stream the post-cut files only; the CLOSED pre-cut
-          // sessions join the stream's emissions driver-side (exact by
-          // construction — see Boot's scaladoc). SPARK_GRAFT_FUZZ_MUTATE
-          // wires the deliberate seam mutations: M1 seed_halfgap shrinks
-          // the openness horizon to gap/2 (a truly-open spanning session
-          // is wrongly closed and fragments away from its post-cut
-          // continuation), M2 seed_double_emit emits every seeded-open
-          // session ALSO as a closed row; M3 seed_no_timer and M4
-          // seed_stale_timer are handled in the processor (seededStream
-          // routes them). The knob must only ever be set for kill runs,
-          // never in the standing gate; main() rejects unknown values up
-          // front (r14 ADVICE — a typo'd knob silently ran unmutated and
-          // read as "mutation not killed").
-          import s.implicits._
-          val (pre, post, cutMs) = bootSplit(s, dir, plan, bt)
-          val preDf = Tables.normalizeTs(s.read.parquet(pre: _*), "ts")
-            .withColumn("ts", col("ts").cast("timestamp"))
-          val mutate = sys.env.getOrElse("SPARK_GRAFT_FUZZ_MUTATE", "")
-          val horizonMs = if (mutate == "seed_halfgap") bt.gapMs / 2 else bt.gapMs
-          val sess = sessTwin(bt.gapMs, bt.bucket)(preDf)
-          val openCond = col("e") + horizonMs >= cutMs
-          val closedRows =
-            (if (mutate == "seed_double_emit") sess else sess.filter(!openCond))
-              .collect().toIndexedSeq
-          val seeds = sess.filter(openCond)
-            .as[(Long, Long, Long, Long, Long)]
-            .map { case (k, st, en, n, se) => (k, FzSess(st, en, n, se)) }
-            .groupByKey(_._1).mapValues(_._2)
-          val live = java.nio.file.Files.createTempDirectory("graft_fuzz_boot_")
-          try {
-            val arm = copyUpTo(live, post) _
-            val mk: DataFrame => DataFrame = ev => bt.stream(ev, seeds)
-            if (plan.restartAt == 0) {
-              arm(post.size)
-              run(live.toString, cp.toString, mk)
-            } else {
-              arm(plan.restartAt)
-              run(live.toString, cp.toString, mk)
-              arm(post.size)
-              run(live.toString, cp.toString, mk)
+    val provider = plan.provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
+    QueriesCore.withConfs(s, provider.toSeq: _*) {
+      val cp = java.nio.file.Files.createTempDirectory("graft_fuzz_cp_")
+      try {
+        val files = graft.util.Fs.listDir(stage)(
+          _.filter(_.toString.endsWith(".parquet")).map(_.toString))
+        // copy `srcFiles` progressively into `live` with staggered mtimes
+        // (FileStreamSource orders by modification time — stagedDir's note)
+        def copyUpTo(live: java.nio.file.Path, srcFiles: Seq[String])(n: Int): Unit =
+          srcFiles.take(n).zipWithIndex.foreach { case (f, i) =>
+            val src = java.nio.file.Paths.get(f)
+            val dst = live.resolve(src.getFileName)
+            if (!java.nio.file.Files.exists(dst)) {
+              java.nio.file.Files.copy(src, dst)
+              java.nio.file.Files.setLastModifiedTime(dst,
+                java.nio.file.attribute.FileTime.fromMillis(
+                  1000000000000L + i * 60000L))
             }
-          } finally graft.util.Fs.deleteRecursively(live)
-          closedRows
-      }
-      extra ++ collected.synchronized(collected.values.flatten.toSeq)
-    } finally {
-      // stop state-store maintenance and close providers BEFORE deleting
-      // the checkpoint dir — same post-stop compaction race as the
-      // trigger-regime gate (verdict r13 #3)
-      org.apache.spark.sql.execution.streaming.state
-        .GraftStateStoreHygiene.quiesce()
-      graft.util.Fs.deleteRecursively(cp)
-      if (plan.provider.isDefined) provPrev match {
-        case Some(v) => s.conf.set(provKey, v)
-        case None => s.conf.unset(provKey)
+          }
+        val extra: Seq[Row] = plan.boot match {
+          case None =>
+            if (plan.restartAt == 0) run(stage.toString, cp.toString)
+            else {
+              val live = java.nio.file.Files.createTempDirectory("graft_fuzz_live_")
+              try {
+                val arm = copyUpTo(live, files) _
+                arm(plan.restartAt)
+                run(live.toString, cp.toString)
+                arm(files.size)
+                run(live.toString, cp.toString)
+              } finally graft.util.Fs.deleteRecursively(live)
+            }
+            Nil
+          case Some(bt) =>
+            // family I: batch-compute the pre-cut sessions, seed the open
+            // ones, stream the post-cut files only; the CLOSED pre-cut
+            // sessions join the stream's emissions driver-side (exact by
+            // construction — see Boot's scaladoc). SPARK_GRAFT_FUZZ_MUTATE
+            // wires the deliberate seam mutations: M1 seed_halfgap shrinks
+            // the openness horizon to gap/2 (a truly-open spanning session
+            // is wrongly closed and fragments away from its post-cut
+            // continuation), M2 seed_double_emit emits every seeded-open
+            // session ALSO as a closed row; M3 seed_no_timer and M4
+            // seed_stale_timer are handled in the processor (seededStream
+            // routes them). The knob must only ever be set for kill runs,
+            // never in the standing gate; main() rejects unknown values up
+            // front (r14 ADVICE — a typo'd knob silently ran unmutated and
+            // read as "mutation not killed").
+            import s.implicits._
+            val (pre, post, cutMs) = bootSplit(s, dir, plan, bt)
+            val preDf = Tables.normalizeTs(s.read.parquet(pre: _*), "ts")
+              .withColumn("ts", col("ts").cast("timestamp"))
+            val mutate = sys.env.getOrElse("SPARK_GRAFT_FUZZ_MUTATE", "")
+            val horizonMs = if (mutate == "seed_halfgap") bt.gapMs / 2 else bt.gapMs
+            val sess = sessTwin(bt.gapMs, bt.bucket)(preDf)
+            val openCond = col("e") + horizonMs >= cutMs
+            val closedRows =
+              (if (mutate == "seed_double_emit") sess else sess.filter(!openCond))
+                .collect().toIndexedSeq
+            val seeds = sess.filter(openCond)
+              .as[(Long, Long, Long, Long, Long)]
+              .map { case (k, st, en, n, se) => (k, FzSess(st, en, n, se)) }
+              .groupByKey(_._1).mapValues(_._2)
+            val live = java.nio.file.Files.createTempDirectory("graft_fuzz_boot_")
+            try {
+              val arm = copyUpTo(live, post) _
+              val mk: DataFrame => DataFrame = ev => bt.stream(ev, seeds)
+              if (plan.restartAt == 0) {
+                arm(post.size)
+                run(live.toString, cp.toString, mk)
+              } else {
+                arm(plan.restartAt)
+                run(live.toString, cp.toString, mk)
+                arm(post.size)
+                run(live.toString, cp.toString, mk)
+              }
+            } finally graft.util.Fs.deleteRecursively(live)
+            closedRows
+        }
+        extra ++ collected.synchronized(collected.values.flatten.toSeq)
+      } finally {
+        // stop state-store maintenance and close providers BEFORE deleting
+        // the checkpoint dir — same post-stop compaction race as the
+        // trigger-regime gate (verdict r13 #3)
+        org.apache.spark.sql.execution.streaming.state
+          .GraftStateStoreHygiene.quiesce()
+        graft.util.Fs.deleteRecursively(cp)
       }
     }
   }
@@ -1146,17 +1138,10 @@ object StreamFuzz {
         s"unknown SPARK_GRAFT_FUZZ_MUTATE '$mv' - known mutations: " +
           knownMutations.toSeq.sorted.mkString(", "))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      // 4 state partitions: the s-family's measured sweet spot for this
-      // key cardinality (QueriesStreaming.withStatePartitions scaladoc)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4, "graft-streamfuzz")
+    // 4 state partitions: the s-family's measured sweet spot for this key
+    // cardinality (QueriesStreaming.StatePartitions scaladoc)
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     println(s"[streamfuzz] dir=$dir plans=$n seed=$seed")
     val rng = new Random(seed)
     var failed = 0

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import QueriesCore.withConfs
 
 /** Many-trigger regime gate (verdict r11 #2). Every standing streaming
   * measurement runs 3–6 AvailableNow chunks, so a per-trigger O(state)
@@ -65,15 +67,6 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object StreamTriggerRegime {
 
-  private def withConf[T](s: SparkSession, kv: (String, String)*)(body: => T): T = {
-    val prev = kv.map { case (k, _) => k -> s.conf.getOption(k) }
-    kv.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/tmp/graft_sf1"
     val chunks = if (args.length > 1) args(1).toInt else 64
@@ -90,16 +83,8 @@ object StreamTriggerRegime {
       java.nio.file.Paths.get(sys.env("SPARK_GRAFT_STREAM_METRICS")))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(sys.env("SPARK_GRAFT_STREAM_METRICS") + ".modes"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.streaming.StreamMetricsListener.attachIfConfigured(spark)
+    // every drive below sets its own 8 state partitions
+    val spark = Harness.session(8, "graft-triggerregime")
 
     val stage = QueriesStreaming.stagedDir(spark, dir, chunks)
     val schema = spark.read.parquet(stage.toString).schema
@@ -169,7 +154,7 @@ object StreamTriggerRegime {
     }
 
     // s11 shape: gap sessions, append mode, 1 h watermark
-    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       drive("tr_s11_session_append",
         events()
           .withWatermark("ts", "1 hour")
@@ -181,7 +166,7 @@ object StreamTriggerRegime {
     // s02 shape: same store, complete mode (sink output O(total sessions)
     // per trigger by semantics; "complete" in the name exempts its wall
     // trend in the checker)
-    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       drive("tr_s02_sessions_complete",
         events()
           .groupBy(session_window(col("ts"), "6 hours"), col("user_id"))
@@ -191,7 +176,7 @@ object StreamTriggerRegime {
 
     // s14 shape: left-outer stream-stream join, errors within the hour
     // before each click, both sides watermarked off the same source
-    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       val ev = events().withWatermark("ts", "1 hour")
       val c = ev.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("click_ts"))
@@ -209,7 +194,7 @@ object StreamTriggerRegime {
     // s18 shape: transformWithState MapState windows + creation-armed
     // timers on RocksDB — the mechanism whose pre-r11 form this gate
     // exists to catch
-    withConf(spark,
+    withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -228,7 +213,7 @@ object StreamTriggerRegime {
     // s20 shape: watermark-bounded dedup with a horizon nothing evicts
     // inside — state grows monotonically all run; updates must stay
     // point-ops
-    withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+    withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       drive("tr_s20_dedup",
         events()
           .select(col("user_id"), col("event_type"), col("ts"))
@@ -242,7 +227,7 @@ object StreamTriggerRegime {
     // event-time timer per key (SessionProcessor) — closure emits via
     // handleExpiredTimer; per-key batch work is the carried buffer merge,
     // O(batch rows per key), never a sweep of other keys' state
-    withConf(spark,
+    withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -268,7 +253,7 @@ object StreamTriggerRegime {
     // double staging + seed aggregation are the expensive part at the
     // large events fixtures, and a TR_ONLY diagnostic subset must not
     // pay them for a deselected topology.
-    if (selected("tr_s19_initial_state")) withConf(spark,
+    if (selected("tr_s19_initial_state")) withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -326,7 +311,7 @@ object StreamTriggerRegime {
     // TimeMode.None / Update mode — the list is READ AND REWRITTEN for
     // every key in every batch, which is exactly why it belongs here: the
     // gate keeps it O(k + batch rows per key), not O(events seen per key)
-    withConf(spark,
+    withConfs(spark,
       "spark.sql.shuffle.partitions" -> "8",
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -343,7 +328,7 @@ object StreamTriggerRegime {
     // resumed — per-trigger flatness must survive the state-store reload
     // (block gated on selection — the live-dir staging copies the whole
     // staged fixture, which a TR_ONLY subset must not pay)
-    if (selected("tr_s30_resume")) withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+    if (selected("tr_s30_resume")) withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       import java.nio.file.{Files, Paths}
       val root = Files.createTempDirectory("graft_trigreg_")
       try {

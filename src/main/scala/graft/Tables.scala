@@ -47,38 +47,31 @@ object Tables {
     * plan reuse, not result reuse: every action still scans the parquet.
     * Keyed per (session, dir, name); entries of stopped sessions are
     * dropped on access so the map can't pin dead contexts. Fixtures are
-    * read-only by contract, so a cached listing can never go stale.
+    * read-only by contract; [[pathStamp]] still catches one regenerated in
+    * place.
     */
   private val planCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), ((Long, Long), DataFrame)]
 
-  /** Cheap staleness guard for the plan cache: one stat of the table path
-    * (size + mtime — a directory's mtime changes when part files are
-    * added/removed). Fixtures are read-only by contract, but the corpus
-    * index learned in advice r7 that "regenerated in place mid-JVM" must
-    * not silently serve stale bytes — the same rule applies here, at the
-    * cost of a single stat instead of the full listing+footer read.
+  /** Staleness guard for the plan cache and the corpus index: total size
+    * and latest mtime of every file and directory under `path` (a parquet
+    * "file" written by Spark is a directory tree, with partition
+    * subdirectories where it is partitioned). An in-place rewrite of any
+    * part file, at any depth, changes the stamp even where it leaves
+    * every directory's own size and mtime alone. A missing path stamps
+    * (-1, -1).
     */
-  private def pathStamp(path: String): (Long, Long) =
+  private[graft] def pathStamp(path: String): (Long, Long) =
     try {
-      val p = java.nio.file.Paths.get(path)
-      val a = java.nio.file.Files.readAttributes(
-        p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      if (a.isDirectory) {
-        // ADVICE r15: an in-place rewrite of an existing part file changes
-        // neither the directory's size nor its mtime — fold the direct
-        // children's sizes and max mtime into the stamp (one shallow
-        // listing; parquet "files" written by Spark are directories).
-        var (sz, mt) = (a.size, a.lastModifiedTime.toMillis)
-        val st = java.nio.file.Files.list(p)
-        try st.forEach { c =>
-          val ca = java.nio.file.Files.readAttributes(
-            c, classOf[java.nio.file.attribute.BasicFileAttributes])
-          sz += ca.size
-          mt = math.max(mt, ca.lastModifiedTime.toMillis)
-        } finally st.close()
-        (sz, mt)
-      } else (a.size, a.lastModifiedTime.toMillis)
+      var (sz, mt) = (0L, 0L)
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      try walk.forEach { f =>
+        val a = java.nio.file.Files.readAttributes(
+          f, classOf[java.nio.file.attribute.BasicFileAttributes])
+        sz += a.size
+        mt = math.max(mt, a.lastModifiedTime.toMillis)
+      } finally walk.close()
+      (sz, mt)
     } catch { case _: Exception => (-1L, -1L) }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {

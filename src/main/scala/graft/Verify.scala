@@ -1,46 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs the bench's
+  * session and entry loop, so the verified plans are the benched plans.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same extensions as Bench/localSession: the verified plans must BE the
-    // benched plans (incl. PruneAvroDecode rewrites)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same SMJ→SHJ AQE rewrite as Bench/localSession (r16): the
-      // verified plans must be the benched plans
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        GraftEngine.shjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // second-decade streaming audit: SPARK_GRAFT_STREAM_METRICS=<file>
-    // captures per-trigger state rows/bytes + durations for every stream
-    graft.streaming.StreamMetricsListener.attachIfConfigured(spark)
+    val spark = Harness.session(4, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // local-iteration knob (driver never sets it): comma-separated name
-    // prefixes, e.g. SPARK_GRAFT_VERIFY_ONLY=s08,q63 — mirrors the bench's
-    // SPARK_GRAFT_BENCH_ONLY
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def keep(name: String): Boolean = only.forall(_.exists(name.startsWith))
-    val ran = Seq.newBuilder[String]
-    SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        ran += name
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    // SPARK_GRAFT_ONLY=s08,q63 selects a local-iteration subset
+    val names = Harness.entries
+    val ran = Harness.runEntries(spark, names, "verify") { name =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      df
+    }.collect { case (name, Some(_)) => name }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -53,15 +28,14 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => keep(kv._1))
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // manifest of the entries THIS run wrote — lets check_oracle.py scope
     // its no-oracle sweep to fresh outputs instead of tripping over stale
     // dirs left in outDir by an earlier full run (the bogus subset-mode
     // "FAIL q06/q69 NO-ORACLE 0 rows" lines)
-    Files.writeString(Paths.get(s"$outDir/ran.json"),
-      ran.result().sorted.map(q).mkString("[", ",", "]"))
+    Files.writeString(Paths.get(s"$outDir/ran.json"), ran.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
   }
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{
   * topology per trigger (verdict r10 #1) — q91 proved design arguments
   * only get tested by a decade jump.
   *
-  * Registered by Verify/Bench ONLY when SPARK_GRAFT_STREAM_METRICS names a
-  * file; the listener bus delivers events asynchronously, so writes are
+  * Registered by every `Harness.session` ONLY when SPARK_GRAFT_STREAM_METRICS
+  * names a file; the listener bus delivers events asynchronously, so writes are
   * serialized on a lock and the file is opened in append mode per event
   * (tens of triggers per topology — durability over buffering).
   */

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one per suite, UTC, small shuffle
-  * fan-out (local mode ≠ 200 partitions).
+/** Shared local session for specs: one per suite, built by the engine's
+  * own factory on 4 cores, so specs plan under the conf the mains run.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
@@ -12,16 +12,5 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftEngine.localSession(4, "graft-test")
 }

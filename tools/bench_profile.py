@@ -71,7 +71,7 @@ def main():
     # a profiled entry ABSENT from the run (load() drops failed -1 entries,
     # and a renamed/deleted entry vanishes from the JSON) is the worst
     # regression of all and must not pass silently. Only enforced when the
-    # run covers most of the profile — a SPARK_GRAFT_BENCH_ONLY subset run
+    # run covers most of the profile — a SPARK_GRAFT_ONLY subset run
     # legitimately omits entries.
     missing = sorted(set(prof) - set(cur))
     full_run = len(cur) >= 0.9 * len(prof)

@@ -67,12 +67,12 @@ if "--skip-verify" not in sys.argv:
     env = dict(os.environ)
     # p03 rides along for its oracle SQL (Verify filters oracle_sql.json to
     # the ONLY set); its Spark side shares the pair cache p17 builds anyway
-    env["SPARK_GRAFT_VERIFY_ONLY"] = ",".join(CC_ENTRIES + [PAIRS_ENTRY])
+    env["SPARK_GRAFT_ONLY"] = ",".join(CC_ENTRIES + [PAIRS_ENTRY])
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
         capture_output=True, text=True, cwd="/root/repo", env=env)
     errs = [l for l in (r.stdout + r.stderr).splitlines()
-            if "[verify]" in l or "error" in l.lower()]
+            if ("[verify]" in l and " failed:" in l) or "error" in l.lower()]
     for l in errs[:30]:
         print(l)
     if r.returncode != 0:

@@ -5,7 +5,7 @@ replay every oracle SQL in DuckDB over the same fixture tables and compare
     python3 tools/check_oracle.py [sfDir] [--skip-verify] [--only=a,b,..]
 
 --only scopes the DUCKDB comparison loop (and is forwarded to Verify via
-SPARK_GRAFT_VERIFY_ONLY unless --skip-verify). DuckDB's spill is capped
+SPARK_GRAFT_ONLY unless --skip-verify). DuckDB's spill is capped
 (GRAFT_DUCK_TEMP_CAP, default 30GiB) so one pathological oracle at a big
 synthesized fixture fails fast with a recorded error instead of filling
 the disk — the r8 100x run hit 66GB of spill on a single pairwise-dedup
@@ -32,11 +32,13 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 if "--skip-verify" not in sys.argv:
     env = dict(os.environ)
     if ONLY:
-        env["SPARK_GRAFT_VERIFY_ONLY"] = ",".join(sorted(ONLY))
+        env["SPARK_GRAFT_ONLY"] = ",".join(sorted(ONLY))
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF_DIR} {OUT}'],
         capture_output=True, text=True, cwd="/root/repo", env=env)
-    errs = [l for l in (r.stdout + r.stderr).splitlines() if "[verify]" in l or "error" in l.lower()]
+    # Verify logs every entry's time on "[verify]" lines; show only failures
+    errs = [l for l in (r.stdout + r.stderr).splitlines()
+            if ("[verify]" in l and " failed:" in l) or "error" in l.lower()]
     for l in errs[:30]:
         print(l)
     if r.returncode != 0:
@@ -58,7 +60,7 @@ oracles = json.load(open(f"{OUT}/oracle_sql.json"))
 
 
 def only_match(name):
-    # Verify matches SPARK_GRAFT_VERIFY_ONLY by name PREFIX (startsWith);
+    # Verify matches SPARK_GRAFT_ONLY by name PREFIX (startsWith);
     # this loop must use the same rule or a prefix like --only=p3 runs
     # Verify for p30..p39 yet compares none of them, reporting a green
     # pass over zero entries.
