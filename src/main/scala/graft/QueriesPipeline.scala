@@ -45,10 +45,9 @@ object QueriesPipeline {
   val JaccardDfCap = 6
 
   /** p02's Jaccard near-dup cut and p41's containment cut, ONE definition
-    * each (r16 review): [[sharedPairStats]]' survivor prefilter is the
-    * disjunction of these consumer thresholds, so a drifting copy would
-    * silently narrow a consumer's input. The Spark prefilter, both
-    * consumer filters, and the oracle SQL twins all interpolate these.
+    * each (r16 review). The consumers' keep columns, whose disjunction is
+    * [[sharedPairStats]]' survivor prefilter ([[pairStatsKeep]]), and the
+    * oracle SQL twins all interpolate these.
     */
   val JaccardCut = 0.6
   val ContainmentMinSize = 5
@@ -190,31 +189,68 @@ object QueriesPipeline {
     * persisted frame is a few thousand survivor rows, so the lone-run
     * cost is negligible.
     *
-    * COUPLING NOTE: the keep-predicate below is the disjunction of the
-    * consumer thresholds — [[JaccardCut]] (p02) and
-    * [[ContainmentMinSize]]/[[ContainmentCut]] (p41, either orientation).
-    * Prefilter and consumers interpolate the SAME constants, so a
-    * threshold change cannot drift them apart; a NEW consumer must still
-    * extend the disjunction or lose rows silently.
+    * The keep-predicate is [[pairStatsKeep]], the disjunction of the
+    * consumers' own keeps ([[jaccardKeep]] for p02, [[containmentKeep]] for
+    * p41 in either orientation); a NEW consumer must extend it or lose
+    * rows silently. `PairStatsKeepSpec` checks both answers against the
+    * unfiltered table.
     */
   private val interCache = new SharedPlanCache(persistAtHit = 1)
   private[graft] def sharedPairStats(s: SparkSession, dir: String): DataFrame =
-    interCache.get(s, dir, () => {
-      val sh = sharedShingleHashes(s, dir)
-      val sizes = sharedShingleSizes(s, dir)
-      val inter = sh.select(col("doc_id").as("id_a"), col("h"))
-        .join(sh.select(col("doc_id").as("id_b"), col("h")), Seq("h"))
-        .filter(col("id_a") < col("id_b"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
-      val jac = col("ni").cast("double") / (col("na") + col("nb") - col("ni"))
-      def cont(n: Column): Column =
-        n >= ContainmentMinSize && col("ni").cast("double") / n >= ContainmentCut
-      inter
-        .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-        .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
-        .filter(jac >= JaccardCut || cont(col("na")) || cont(col("nb")))
-        .select(col("id_a"), col("id_b"), col("ni"), col("na"), col("nb"))
-    })
+    interCache.get(s, dir, () => pairStats(s, dir).filter(pairStatsKeep))
+
+  /** Every shingle-sharing pair's stats `(id_a, id_b, ni, na, nb)`, id_a <
+    * id_b, unfiltered: ni shared shingles, na and nb the two documents'
+    * shingle counts.
+    */
+  private[graft] def pairStats(s: SparkSession, dir: String): DataFrame = {
+    val sh = sharedShingleHashes(s, dir)
+    val sizes = sharedShingleSizes(s, dir)
+    sh.select(col("doc_id").as("id_a"), col("h"))
+      .join(sh.select(col("doc_id").as("id_b"), col("h")), Seq("h"))
+      .filter(col("id_a") < col("id_b"))
+      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("ni"))
+      .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
+      .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
+      .select(col("id_a"), col("id_b"), col("ni"), col("na"), col("nb"))
+  }
+
+  /** A pair's Jaccard resemblance |A∩B| / |A∪B| over its stats. */
+  private val jaccard: Column = col("ni").cast("double") / (col("na") + col("nb") - col("ni"))
+
+  /** p02's keep: the pair is a Jaccard near-duplicate. */
+  private val jaccardKeep: Column = jaccard >= JaccardCut
+
+  /** p41's keep for the document of `n` shingles: it is contained in the
+    * other one.
+    */
+  private def containmentKeep(n: Column): Column =
+    n >= ContainmentMinSize && col("ni").cast("double") / n >= ContainmentCut
+
+  /** [[sharedPairStats]]' keep: a pair either consumer keeps, p41 reading
+    * both orientations.
+    */
+  private[graft] val pairStatsKeep: Column =
+    jaccardKeep || containmentKeep(col("na")) || containmentKeep(col("nb"))
+
+  /** p02's answer over pair stats: the Jaccard near-duplicate pairs. */
+  private[graft] def jaccardPairs(stats: DataFrame): DataFrame =
+    stats.filter(jaccardKeep)
+      .select(col("id_a"), col("id_b"), jaccard.as("jac"))
+      .orderBy(col("id_a"), col("id_b"))
+
+  /** p41's answer over pair stats: directed pairs, id_a contained in id_b.
+    * Intersection counts are symmetric, so the other orientation is the
+    * table mirrored, (na, nb) swapped along with the ids.
+    */
+  private[graft] def containedPairs(stats: DataFrame): DataFrame =
+    stats.unionAll(stats.select(
+        col("id_b").as("id_a"), col("id_a").as("id_b"), col("ni"),
+        col("nb").as("na"), col("na").as("nb")))
+      .filter(containmentKeep(col("na")))
+      .select(col("id_a"), col("id_b"),
+        (col("ni").cast("double") / col("na")).as("containment"))
+      .orderBy(col("id_a"), col("id_b"))
 
   /** Norm-annotated corpus vectors, shared by the whole embedding family
     * (p05/p06/p07/p14/p20/p22): the exact-decimal self-dot behind `norm` is
@@ -945,11 +981,7 @@ object QueriesPipeline {
         // the whole family via [[sharedPairStats]], and since r16 the size
         // joins ride that shared build too; this entry is the exact
         // Jaccard cut over the survivor stats).
-        sharedPairStats(s, dir)
-          .select(col("id_a"), col("id_b"),
-            (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jac"))
-          .filter(col("jac") >= JaccardCut)
-          .orderBy(col("id_a"), col("id_b"))
+        jaccardPairs(sharedPairStats(s, dir))
       },
       Some(s"""WITH $sqlShingleCtes,
              inter AS (
@@ -2466,20 +2498,9 @@ object QueriesPipeline {
     NamedQuery("p41_dedup_containment",
       (s, dir) => {
         // the =!= orientation is the shared ordered survivor-stats table
-        // plus its mirror — intersection counts are symmetric, so the
-        // expensive inverted-index self-join is not re-run here (r15);
-        // sizes now arrive pre-joined on the shared table (r16), so the
-        // mirror just swaps (na, nb) along with the ids
-        val ordered = sharedPairStats(s, dir)
-        val inter = ordered.unionAll(ordered.select(
-          col("id_b").as("id_a"), col("id_a").as("id_b"), col("ni"),
-          col("nb").as("na"), col("na").as("nb")))
-        inter
-          .filter(col("na") >= ContainmentMinSize &&
-            col("ni").cast("double") / col("na") >= ContainmentCut)
-          .select(col("id_a"), col("id_b"),
-            (col("ni").cast("double") / col("na")).as("containment"))
-          .orderBy(col("id_a"), col("id_b"))
+        // plus its mirror, so the expensive inverted-index self-join is not
+        // re-run here (r15); sizes arrive pre-joined on the shared table (r16)
+        containedPairs(sharedPairStats(s, dir))
       },
       Some(s"""WITH $sqlShingleCtes,
              inter AS (

@@ -547,8 +547,8 @@ object QueriesStreaming {
     // with FakeKafka swapped in) — the round-4 gap where GraftLogTable had
     // no MicroBatchStream and streaming required the engine API. The scan
     // decodes AT THE READER with the same FrameDecoder as the batch scan
-    // (for JSON, a RowPipeline compiled from decodeRaw; malformed
-    // payloads drop in-flight), offset bookkeeping is the raw connector's
+    // (JSON parsed by Spark's from_json straight into the scan's row;
+    // malformed payloads drop in-flight), offset bookkeeping is the raw connector's
     // own (checkpoint/replay untouched), and the head grows 1500 offsets
     // per micro-batch to 6000 so the run REALLY progresses through four
     // micro-batches chased to quiescence by processAllAvailable. The

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.plans.{OffsetRange, OffsetRangePlanner}
-import graft.sources.{EventSource, KafkaEventSource, LogMicroBatchStream, OffsetAddressedSource}
+import graft.sources.{EventSource, LogMicroBatchStream, OffsetAddressedSource}
 
 /** DSv2 table for an offset-addressed event LOG: `_offset` predicates from
   * ANY `spark.sql` query are pushed into the scan as pruned
@@ -96,9 +96,22 @@ object GraftLogTable {
     val pruned =
       if (ranges == OffsetRangePlanner.Full) full
       else full.filter(Bridge.column(
-        KafkaEventSource.rangePredicate(Bridge.expression(col(SystemColumns.Offset)), ranges)))
+        rangePredicate(Bridge.expression(col(SystemColumns.Offset)), ranges)))
     pruned.select(columns.fieldNames.map(col).toSeq: _*)
   }
+
+  /** `offset ∈ ranges` as a Catalyst predicate: the residual that makes a
+    * superset read (a file scan) honor a multi-range pruned window exactly.
+    * No ranges keep nothing.
+    */
+  def rangePredicate(offset: ce.Expression, ranges: Seq[OffsetRange]): ce.Expression =
+    ranges
+      .map { r =>
+        val from = ce.GreaterThanOrEqual(offset, ce.Literal(r.start))
+        r.end.fold[ce.Expression](from)(e => ce.And(from, ce.LessThan(offset, ce.Literal(e))))
+      }
+      .reduceOption[ce.Expression](ce.Or(_, _))
+      .getOrElse(ce.Literal(false))
 }
 
 final class GraftLogScanBuilder(

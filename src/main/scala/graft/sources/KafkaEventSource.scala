@@ -2,53 +2,38 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThan, Literal, Or}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.json.JsonToStructsEvaluator
 import org.apache.spark.sql.connector.catalog.{SupportsRead, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.execution.datasources.DataSource
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.{GraftLogTable, SystemColumns}
-import graft.functions.{AvroReadPlan, AvroSchemas, GraftFunctions => GF}
+import graft.functions.{AvroReadPlan, AvroSchemas}
 import graft.plans.{OffsetRange, OffsetRangePlanner}
 
-/** Payload codec: Kafka `value` bytes → typed struct (null on malformed).
-  * The reference's live path decoded Avro (`KafkaConnectorPageSource.java:298`)
-  * while its test harness produced JSON (`EmbeddedKafka.java:135`,
-  * `JsonEncoder.java:34-43`); the rebuild supports both behind one interface.
+/** Payload codec of a Kafka log: how its readers decode `value` bytes
+  * ([[KafkaEventSource.frameDecoder]]). The reference's live path decoded
+  * Avro (`KafkaConnectorPageSource.java:298`) while its test harness
+  * produced JSON (`EmbeddedKafka.java:135`, `JsonEncoder.java:34-43`); the
+  * rebuild reads both.
   */
-sealed trait PayloadCodec {
-  def decode(value: Column, schema: StructType): Column
-}
+sealed trait PayloadCodec
 
-/** Avro with metastore writer schema; projection pushdown via
-  * [[graft.plans.PruneAvroDecode]] once only some fields are referenced.
-  */
-case object AvroPayloadCodec extends PayloadCodec {
-  override def decode(value: Column, schema: StructType): Column =
-    GF.from_avro(value, AvroSchemas.toAvro(schema).toString)
-}
+/** Avro with the metastore's writer schema. */
+case object AvroPayloadCodec extends PayloadCodec
 
-/** JSON. PERMISSIVE `from_json` yields an all-null struct (not null) on
-  * malformed input, which would be indistinguishable from a legitimate
-  * all-null record — so a corrupt-record marker column distinguishes them
-  * and malformed rows decode to a null struct (drop semantics).
+/** JSON, parsed as PERMISSIVE `from_json`. That yields an all-null struct
+  * (not null) on malformed input, which would be indistinguishable from a
+  * legitimate all-null record, so a corrupt-record marker field tells them
+  * apart and malformed payloads are dropped.
   */
-case object JsonPayloadCodec extends PayloadCodec {
-  private val Corrupt = "_graft_corrupt"
-  override def decode(value: Column, schema: StructType): Column = {
-    val aug = schema.add(Corrupt, org.apache.spark.sql.types.StringType)
-    val parsed = from_json(value.cast("string"), aug,
-      Map("columnNameOfCorruptRecord" -> Corrupt))
-    when(parsed.getField(Corrupt).isNull, parsed.dropFields(Corrupt))
-      .otherwise(lit(null).cast(schema))
-  }
-}
+case object JsonPayloadCodec extends PayloadCodec
 
 /** Kafka source over `<project>_<collection>` topics (reference C2–C8).
   * Spark's Kafka connector supplies partition discovery, replica failover,
@@ -75,12 +60,12 @@ case object JsonPayloadCodec extends PayloadCodec {
   *    messages per split. Ranges without an end, and streams, keep one
   *    split per topic partition; an explicit `minPartitions` wins.
   *  - codec decode with schema resolution + malformed-row drop (C6) and
-  *    hidden system-column synthesis (C7), declared once in [[decodeRaw]]
-  *    and run at the reader ([[KafkaEventSource.frameDecoder]]), with the
-  *    window as a residual there: Avro payloads straight into the scan's
-  *    output row through an [[graft.functions.AvroReadPlan]] compiled once
-  *    per collection and column set, JSON through a [[RowPipeline]]
-  *    analyzed once per collection.
+  *    hidden system-column synthesis (C7), run once per message at the
+  *    reader ([[KafkaEventSource.frameDecoder]]) with the window as a
+  *    residual there: either codec's payload decodes straight into the
+  *    scan's output row, Avro through an [[graft.functions.AvroReadPlan]]
+  *    compiled once per collection and column set, JSON through Spark's own
+  *    `from_json` parser.
   *  - buffer/timeout knobs default to the reference's
   *    (`KafkaConnectorPageSource.java:62` 1 MB fetch,
   *    `KafkaConnectorConfig.java:44-49` 64 KB socket / 10 s connect).
@@ -250,19 +235,6 @@ object KafkaEventSource {
     })
   }
 
-  /** `offset ∈ ranges` as a Catalyst predicate — the residual that makes a
-    * superset read (an unbounded stream, a file scan) honor a multi-range
-    * pruned window exactly. No ranges keep nothing.
-    */
-  def rangePredicate(offset: Expression, ranges: Seq[OffsetRange]): Expression =
-    ranges
-      .map { r =>
-        val from = GreaterThanOrEqual(offset, Literal(r.start))
-        r.end.fold[Expression](from)(e => And(from, LessThan(offset, Literal(e))))
-      }
-      .reduceOption[Expression](Or(_, _))
-      .getOrElse(Literal(false))
-
   private val providers = new java.util.concurrent.ConcurrentHashMap[String, Class[_]]
 
   /** The `TableProvider` class of a source format, looked up once per format
@@ -283,7 +255,7 @@ object KafkaEventSource {
 
   private val compilations = new java.util.concurrent.atomic.AtomicLong
 
-  /** Reader decodes compiled so far in this JVM (cache misses of
+  /** Avro read plans compiled so far in this JVM (cache misses of
     * [[frameDecoder]]).
     */
   def decodeCompilations: Long = compilations.get()
@@ -297,54 +269,35 @@ object KafkaEventSource {
     }.asInstanceOf[T]
 
   /** The reader-side decode of a log scan, from raw frames to rows of
-    * `requiredSchema` in `ranges`, with [[decodeRaw]]'s answers and
-    * malformed verdicts. Both codecs decode the full writer record, so a
-    * payload is dropped as malformed exactly when `decodeRaw` drops it,
-    * whichever columns a scan reads, and both compile once into a bounded
-    * LRU cache, so scans plan without analysis:
-    *  - Avro payloads decode straight into the output row through an
-    *    [[AvroReadPlan]], compiled once per (collection, schema, columns);
-    *  - JSON runs [[decodeRaw]] as a [[RowPipeline]], analyzed once per
-    *    (collection, schema, session time zone) over an empty raw relation,
-    *    whose filter is the malformed-row verdict; the `ranges` residual
-    *    (unless [[OffsetRangePlanner.Full]]) and the projection extend it.
+    * `requiredSchema` in `ranges`, dropping a message as malformed
+    * (reference `KafkaConnectorPageSource.java:300-307`) whichever columns
+    * the scan reads. Neither codec analyzes anything:
+    *  - Avro payloads decode through an [[AvroReadPlan]], compiled once per
+    *    (collection, schema, columns) into a bounded LRU cache;
+    *  - JSON payloads parse with the `from_json` evaluator of the schema plus
+    *    a corrupt-record marker, under the session time zone; a payload is
+    *    malformed when the parse is null or the marker is set.
     */
   def frameDecoder(spark: SparkSession, project: String, collection: String,
                    schema: StructType, requiredSchema: StructType,
-                   ranges: Seq[OffsetRange], codec: PayloadCodec): FrameDecoder = codec match {
-    case AvroPayloadCodec =>
-      val columns = requiredSchema.fieldNames.toIndexedSeq
-      val plan = cached((project, collection, schema, columns)) {
-        val avro = AvroSchemas.toAvro(schema)
-        AvroReadPlan.compile(avro, avro, columns)
-      }
-      FrameDecoder.Avro(plan, requiredSchema, project, collection, ranges)
-    case JsonPayloadCodec =>
-      val decode = cached((project, collection, schema, codec,
-          spark.conf.get("spark.sql.session.timeZone"))) {
-        val raw = spark.createDataFrame(new java.util.ArrayList[Row](), FakeKafka.frameSchema)
-        RowPipeline.analyzed(decodeRaw(raw, project, collection, schema, codec))
-      }
-      val window =
-        if (ranges == OffsetRangePlanner.Full) None
-        else Some(rangePredicate(decode.output.find(_.name == SystemColumns.Offset).get, ranges))
-      RowPipeline.pipeline(decode, window, requiredSchema.fieldNames.toIndexedSeq)
-  }
-
-  /** Kafka-shaped rows (`value` binary, `offset` long) → the engine's table
-    * shape: system columns first, decoded user fields after, malformed rows
-    * dropped (reference `KafkaConnectorPageSource.java:300-307`).
-    */
-  def decodeRaw(raw: DataFrame, project: String, collection: String,
-                schema: StructType, codec: PayloadCodec): DataFrame = {
-    val decoded = raw.select(
-      col("offset").cast("long").as(SystemColumns.Offset),
-      lit(project).as(SystemColumns.Project),
-      lit(collection).as(SystemColumns.Collection),
-      codec.decode(col("value"), schema).as("__event"))
-    decoded
-      .filter(col("__event").isNotNull)
-      .select(
-        (SystemColumns.fields.map(f => col(f.name)) :+ col("__event.*")): _*)
+                   ranges: Seq[OffsetRange], codec: PayloadCodec): FrameDecoder = {
+    val columns = requiredSchema.fieldNames.toIndexedSeq
+    val payload = codec match {
+      case AvroPayloadCodec =>
+        FrameDecoder.Avro(cached((project, collection, schema, columns)) {
+          val avro = AvroSchemas.toAvro(schema)
+          AvroReadPlan.compile(avro, avro, columns)
+        })
+      case JsonPayloadCodec =>
+        val conf = spark.sessionState.conf
+        val corrupt = "_graft_corrupt"
+        val parser = JsonToStructsEvaluator(Map("columnNameOfCorruptRecord" -> corrupt),
+          Bridge.asNullable(schema.add(corrupt, StringType)), conf.columnNameOfCorruptRecord,
+          Some(conf.sessionLocalTimeZone), conf.getConf(SQLConf.VARIANT_ALLOW_DUPLICATE_KEYS))
+        FrameDecoder.Json(parser, schema.length,
+          columns.map(schema.fieldNames.indexOf(_)).toArray,
+          requiredSchema.fields.map(_.dataType))
+    }
+    FrameDecoder(payload, requiredSchema, project, collection, ranges)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 /** DSv2 [[Batch]] over an offset-addressed log: the raw source's own scans,
   * one per pruned offset range (Spark's Kafka connector in production,
   * [[FakeKafka]] in tests), with every raw record decoded at the reader by
-  * `decoder` (for Avro, straight into the scan's output row).
+  * `decoder`, straight into the scan's output row.
   * The reference connector had the same split of work: the engine planned a
   * table handle and the connector turned offsets into splits
   * (`KafkaSplitManager.java:93-106`) and decoded in its page source

@@ -280,63 +280,49 @@ class FakeKafkaSpec extends SparkTestBase {
     } finally graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(ckpt))
   }
 
-  /** One good Avro payload and one garbage payload (must drop) as raw
-    * Kafka-shaped rows, with the batch DataFrame path's decode of them.
+  /** One good payload of `codec` and one garbage payload (must drop) as raw
+    * Kafka-shaped rows, with the reference DataFrame decode of them.
     */
-  private def avroFrames() = {
+  private def rawFrames(codec: graft.sources.PayloadCodec) = {
     import graft.functions.{AvroSchemas, GraftFunctions => GF}
     val s0 = spark
     import s0.implicits._
     val schema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_type", StringType)))
-    val avroJson = AvroSchemas.toAvro(schema).toString
-    val bytes = s0.range(1).select(GF.to_avro(
-      org.apache.spark.sql.functions.struct(
-        org.apache.spark.sql.functions.lit(7L).as("user_id"),
-        org.apache.spark.sql.functions.lit("click").as("event_type")),
-      avroJson).as("b")).head().getAs[Array[Byte]]("b")
+    val bytes = codec match {
+      case graft.sources.AvroPayloadCodec =>
+        s0.range(1).select(GF.to_avro(
+          org.apache.spark.sql.functions.struct(
+            org.apache.spark.sql.functions.lit(7L).as("user_id"),
+            org.apache.spark.sql.functions.lit("click").as("event_type")),
+          AvroSchemas.toAvro(schema).toString).as("b")).head().getAs[Array[Byte]]("b")
+      case JsonPayloadCodec => """{"user_id": 7, "event_type": "click"}""".getBytes("UTF-8")
+    }
     val raw = Seq(
       (Option.empty[Array[Byte]], bytes, "t", 0, 5L, 0L, 0),
       (Option.empty[Array[Byte]], "!garbage!".getBytes, "t", 0, 6L, 0L, 0))
       .toDF("key", "value", "topic", "partition", "offset", "tsraw", "timestampType")
       .withColumn("timestamp", org.apache.spark.sql.functions.timestamp_micros($"tsraw"))
       .select("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
-    val batch = graft.sources.KafkaEventSource
-      .decodeRaw(raw, "p", "c", schema, graft.sources.AvroPayloadCodec).collect()
+    val batch = graft.sources.ReferenceDecode
+      .decodeRaw(raw, "p", "c", schema, codec).collect()
     (schema, raw, batch)
   }
 
-  private def assertMatchesBatch(decoded: Seq[org.apache.spark.sql.catalyst.InternalRow],
-                                 batch: Array[org.apache.spark.sql.Row]): Unit = {
-    assert(batch.length == 1 && decoded.length == 1)   // garbage dropped on both paths
-    assert(decoded.head.getLong(0) == 5L)              // _offset
-    assert(decoded.head.getLong(3) == batch.head.getLong(3)
-      && decoded.head.getLong(3) == 7L)                // user_id
-    assert(decoded.head.getUTF8String(4).toString == "click")
-  }
-
-  test("RowPipeline decodes Avro payloads bit-identically to the batch DataFrame path") {
-    // scans decode Avro through the frame reader, but RowPipeline still
-    // compiles any Project/Filter decode chain, the Avro one included
-    val (schema, raw, batch) = avroFrames()
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), FakeKafka.frameSchema)
-    val decode = graft.sources.RowPipeline.analyzed(graft.sources.KafkaEventSource
-      .decodeRaw(empty, "p", "c", schema, graft.sources.AvroPayloadCodec))
-    val pipeline = graft.sources.RowPipeline.pipeline(decode, None, decode.output.map(_.name))
-    val eval = new graft.sources.RowPipeline.Eval(pipeline.decode ++ pipeline.select)
-    val decoded = raw.queryExecution.toRdd.collect().toSeq.flatMap(r => Option(eval(r)).map(_.copy()))
-    assertMatchesBatch(decoded, batch)
-  }
-
   test("the Avro frame reader decodes payloads bit-identically to the batch DataFrame path") {
-    val (schema, raw, batch) = avroFrames()
-    val frames = graft.sources.KafkaEventSource.frameDecoder(spark, "p", "c", schema,
-      StructType(graft.catalog.SystemColumns.fields ++ schema.fields),
-      graft.plans.OffsetRangePlanner.Full, graft.sources.AvroPayloadCodec).open()
-    val decoded = raw.queryExecution.toRdd.collect().toSeq
-      .flatMap(r => if (frames.decode(r)) Some(frames.row().copy()) else None)
-    assertMatchesBatch(decoded, batch)
+    for (codec <- Seq(graft.sources.AvroPayloadCodec, JsonPayloadCodec)) {
+      val (schema, raw, batch) = rawFrames(codec)
+      val frames = graft.sources.KafkaEventSource.frameDecoder(spark, "p", "c", schema,
+        StructType(graft.catalog.SystemColumns.fields ++ schema.fields),
+        graft.plans.OffsetRangePlanner.Full, codec).open()
+      val decoded = raw.queryExecution.toRdd.collect().toSeq
+        .flatMap(r => if (frames.decode(r)) Some(frames.row().copy()) else None)
+      assert(batch.length == 1 && decoded.length == 1, codec) // garbage dropped on both paths
+      assert(decoded.head.getLong(0) == 5L)              // _offset
+      assert(decoded.head.getLong(3) == batch.head.getLong(3)
+        && decoded.head.getLong(3) == 7L)                // user_id
+      assert(decoded.head.getUTF8String(4).toString == "click")
+    }
   }
 
   test("fake.payload=avro round-trips the closed-form log through AvroPayloadCodec") {

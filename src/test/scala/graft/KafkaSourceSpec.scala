@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-import graft.catalog.SystemColumns
+import graft.catalog.{GraftLogTable, SystemColumns}
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
 import graft.plans.OffsetRange
-import graft.sources.{AvroPayloadCodec, JsonPayloadCodec, KafkaEventSource}
+import graft.sources.{AvroPayloadCodec, JsonPayloadCodec, KafkaEventSource, ReferenceDecode}
 
 class KafkaSourceSpec extends SparkTestBase {
 
@@ -28,7 +28,7 @@ class KafkaSourceSpec extends SparkTestBase {
   }
 
   test("decodeRaw: system columns first, fields decoded, offsets preserved") {
-    val df = KafkaEventSource.decodeRaw(kafkaShaped, "proj", "events", schema, AvroPayloadCodec)
+    val df = ReferenceDecode.decodeRaw(kafkaShaped, "proj", "events", schema, AvroPayloadCodec)
     assert(df.columns.toSeq ==
       Seq(SystemColumns.Offset, SystemColumns.Project, SystemColumns.Collection,
         "user_id", "event_type"))
@@ -40,7 +40,7 @@ class KafkaSourceSpec extends SparkTestBase {
   test("decodeRaw drops malformed avro payloads (reference drop semantics)") {
     val junk = kafkaShaped.unionAll(
       kafkaShaped.limit(1).select(lit(99L).as("offset"), lit(Array[Byte](7)).as("value")))
-    val df = KafkaEventSource.decodeRaw(junk, "p", "c", schema, AvroPayloadCodec)
+    val df = ReferenceDecode.decodeRaw(junk, "p", "c", schema, AvroPayloadCodec)
     assert(df.count() == 3)
   }
 
@@ -51,7 +51,7 @@ class KafkaSourceSpec extends SparkTestBase {
       (0L, """{"user_id": 5, "event_type": "click"}"""),
       (1L, """not json at all""")
     ).toDF("offset", "payload").select(col("offset"), col("payload").cast("binary").as("value"))
-    val df = KafkaEventSource.decodeRaw(raw, "p", "c", schema, JsonPayloadCodec)
+    val df = ReferenceDecode.decodeRaw(raw, "p", "c", schema, JsonPayloadCodec)
     val rows = df.collect()
     assert(rows.length == 1 && rows(0).getLong(3) == 5L)
   }
@@ -72,7 +72,7 @@ class KafkaSourceSpec extends SparkTestBase {
     import s0.implicits._
     val df = (0L until 50L).toDF("_offset")
     def in(ranges: Seq[OffsetRange]) =
-      Bridge.column(KafkaEventSource.rangePredicate(Bridge.expression(col("_offset")), ranges))
+      Bridge.column(GraftLogTable.rangePredicate(Bridge.expression(col("_offset")), ranges))
     val ranges = Seq(OffsetRange(5, Some(10)), OffsetRange(20, Some(25)), OffsetRange(40, None))
     val kept = df.filter(in(ranges)).collect().map(_.getLong(0)).toSet
     assert(kept == ((5L until 10L) ++ (20L until 25L) ++ (40L until 50L)).toSet)
