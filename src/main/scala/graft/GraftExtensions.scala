@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-import graft.plans.{InlineLogScan, PruneAvroDecode, SessionWindowEndFilterGuard,
+import graft.plans.{PruneAvroDecode, ResolveFileTables, SessionWindowEndFilterGuard,
   StandardGroupingSets}
 
 /** Session extensions installing the engine's custom planner pieces.
@@ -11,11 +11,12 @@ import graft.plans.{InlineLogScan, PruneAvroDecode, SessionWindowEndFilterGuard,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // a file-backed collection resolves to its source's own read, which
+    // Catalyst optimizes with the query; without this rule, planning a
+    // scan of one fails
+    ext.injectResolutionRule(s => ResolveFileTables(s))
     ext.injectOptimizerRule(_ => PruneAvroDecode)
     ext.injectPostHocResolutionRule(s => new StandardGroupingSets(s))
-    // pre-CBO: replace a file-backed log table's V1-bridge execution
-    // (GraftFileScan) with the inner logical plan — native codegen/AQE
-    ext.injectPreCBORule(s => InlineLogScan(s))
     // fail loudly on the session_window end-filter pushdown hazard (the
     // shape Catalyst silently mis-optimizes; see SessionWindowGuard)
     ext.injectCheckRule(s => new SessionWindowEndFilterGuard(s))

@@ -5,6 +5,8 @@ import java.lang.management.ManagementFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.GraftStateStoreHygiene
 
+import graft.util.Cleanup
+
 /** What the project's mains share: the session, the fixture directory, the
   * fixture warm-up, registry-entry selection and the entry loop. Each is
   * defined once here, so a gate, the bench and the diagnostics run the
@@ -88,8 +90,7 @@ object Harness {
       val sec = (System.nanoTime() - t0) / 1e9
       log(f"$name $sec%.3fs")
       if (name.head == 's') {
-        df.foreach(d => try operators.Dedup.releaseCheckpoints(d)
-          catch { case _: Exception => () })
+        df.foreach(d => Cleanup.quietly(operators.Dedup.releaseCheckpoints(d)))
         releaseStreams(spark)
       }
       name -> df.map(_ => sec)
@@ -101,18 +102,19 @@ object Harness {
   /** Terminated streaming queries (each holds its last micro-batch) and the
     * state store providers loaded for them. */
   private def releaseStreams(spark: SparkSession): Unit = {
-    try spark.streams.resetTerminated() catch { case _: Exception => () }
-    try GraftStateStoreHygiene.unloadAll() catch { case _: Throwable => () }
+    Cleanup.quietly(spark.streams.resetTerminated())
+    Cleanup.quietlyAny(GraftStateStoreHygiene.unloadAll())
   }
 
   /** Drops the shared caches, anything still persisted (a leak, since no
     * plan is reused across families) and stream residue, then drives
     * ContextCleaner with a GC now instead of inside a later entry's timed
-    * region. */
+    * region. The logged `swallowed` is the JVM's count of release failures
+    * so far ([[Cleanup.swallowed]]). */
   private def reset(spark: SparkSession, what: String, log: String => Unit): Unit = {
     QueriesPipeline.releaseSharedCaches()
     spark.sparkContext.getPersistentRDDs.values.foreach(r =>
-      try r.unpersist(blocking = false) catch { case _: Exception => () })
+      Cleanup.quietly(r.unpersist(blocking = false)))
     releaseStreams(spark)
     System.gc()
     var (gcN, gcMs) = (0L, 0L)
@@ -122,6 +124,7 @@ object Harness {
     }
     val rt = Runtime.getRuntime
     val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
-    log(f"reset $what heapMB=$usedMb gcN=$gcN gcSec=${gcMs / 1000.0}%.1f")
+    log(f"reset $what heapMB=$usedMb gcN=$gcN gcSec=${gcMs / 1000.0}%.1f " +
+      s"swallowed=${Cleanup.swallowed}")
   }
 }

@@ -1315,10 +1315,11 @@ object QueriesCore {
     // The reference's primary query surface: plain SQL over
     // catalog.schema.table with the offset predicate pruned at the SCAN
     // (every Presto query got TupleDomain pruning, KafkaSplitManager.java:
-    // 93-106). Here the whole path is DSv2: GraftTableCatalog (metastore
-    // mode) resolves tpch.events to a GraftLogTable whose ScanBuilder
-    // translates the _offset filters through OffsetRangePlanner — q27 covers
-    // the engine API (offsetWindow); this covers the SQL surface.
+    // 93-106). Here GraftTableCatalog (metastore mode) resolves tpch.events
+    // to a parquet-backed GraftFileTable, which the analyzer replaces with
+    // the source's read, and Catalyst pushes the _offset filters through
+    // the system-column alias into the parquet scan — q27 covers the engine
+    // API (offsetWindow); this covers the SQL surface.
     NamedQuery("q40_sql_offset_pushdown",
       (s, dir) => {
         // catalog name and metastore dir are both derived from the corpus

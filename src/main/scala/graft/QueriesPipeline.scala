@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions => GF, PolyHash}
+import graft.util.Cleanup
 import NamedQuery.{decAvg, sqlDecAvg}
 
 /** LLM-data-pipeline operator inventory: deduplication, similarity search,
@@ -132,16 +133,13 @@ object QueriesPipeline {
     * tokenize→shingle→hash→distinct scan each time is the family's
     * dominant cost at scale. The local analogue of the 100 TB design (a
     * bucketed write of the index shared by every downstream consumer) is a
-    * MEMORY_AND_DISK persist — applied only from the SECOND access on, so
-    * a standalone single-query run never pays a materialization it can't
-    * amortize (persist was measured a net loss for lone p03). The index is
-    * (doc_id, h) longs only: tiny relative to the corpus text it replaces.
+    * MEMORY_AND_DISK persist from the first access on. The index is
+    * (doc_id, h) longs only: its blocks are tiny relative to the
+    * tokenize→shingle→hash scan they replace, and the family members
+    * p02/p03/p04/p17/p19/p21 all hit it, so even the first consumer's
+    * materialization cost is amortized at once.
     */
-  // persist-at-1st-access: the index is (doc_id, h) longs only — blocks are
-  // tiny relative to the tokenize→shingle→hash scan they replace, and five
-  // family members (p02/p03/p04/p17/p19/p21) hit it, so even the first
-  // consumer's materialization cost is amortized immediately
-  private val shCache = new SharedPlanCache(persistAtHit = 1)
+  private val shCache = new SharedPlanCache
   private[graft] def sharedShingleHashes(s: SparkSession, dir: String): DataFrame =
     shCache.get(s, dir, () => shingleHashes(Corpus.docs(s, dir)))
 
@@ -151,7 +149,7 @@ object QueriesPipeline {
     * aggregation pass per consumer. One tiny result (a row per doc), so
     * persist from the first access; consumers rename `n` as needed.
     */
-  private val sizesCache = new SharedPlanCache(persistAtHit = 1)
+  private val sizesCache = new SharedPlanCache
   private[graft] def sharedShingleSizes(s: SparkSession, dir: String): DataFrame =
     sizesCache.get(s, dir, () => sharedShingleHashes(s, dir)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
@@ -181,13 +179,11 @@ object QueriesPipeline {
     * is KEPT, which at 100 TB is the difference between materializing a
     * near-quadratic candidate table and materializing the survivors.
     *
-    * persistAtHit = 1 deliberately: with exactly two consumers, persisting
-    * from the second access would re-execute the join for the second
-    * consumer and lose the sharing entirely. The lone-run tradeoff (a
-    * SPARK_GRAFT_ONLY=p02 run persists a table nothing reuses) is the same one
-    * pairsCache/scoredPairsCache already accept — and post-r16 the
-    * persisted frame is a few thousand survivor rows, so the lone-run
-    * cost is negligible.
+    * Persisted from the first access, like every shared cache here: with
+    * exactly two consumers, the second reuses the first's execution of the
+    * join. A lone run (SPARK_GRAFT_ONLY=p02) persists a table nothing
+    * reuses, but post-r16 that frame is a few thousand survivor rows, so
+    * the cost is negligible.
     *
     * The keep-predicate is [[pairStatsKeep]], the disjunction of the
     * consumers' own keeps ([[jaccardKeep]] for p02, [[containmentKeep]] for
@@ -195,7 +191,7 @@ object QueriesPipeline {
     * rows silently. `PairStatsKeepSpec` checks both answers against the
     * unfiltered table.
     */
-  private val interCache = new SharedPlanCache(persistAtHit = 1)
+  private val interCache = new SharedPlanCache
   private[graft] def sharedPairStats(s: SparkSession, dir: String): DataFrame =
     interCache.get(s, dir, () => pairStats(s, dir).filter(pairStatsKeep))
 
@@ -261,40 +257,35 @@ object QueriesPipeline {
     * instead of re-scanning parquet and re-folding norms. The 100 TB
     * analogue is a bucketed norms-annotated materialization of the corpus.
     */
-  private val vecCache = new SharedPlanCache(persistAtHit = 1)
+  private val vecCache = new SharedPlanCache
   private def sharedNormVecs(s: SparkSession, dir: String): DataFrame =
     vecCache.get(s, dir, () => withNorm(Corpus.vecs(s, dir)))
 
-  /** Per-(session, dir) plan cache with persist-on-Nth-access and a
-    * bounded size (eldest entry unpersisted on eviction, so cached blocks
-    * can't accumulate across many sessions/corpora in one JVM).
-    *
-    * `persistAtHit = 2` (default) suits MID-PIPELINE intermediates whose
-    * materialization has real cost a lone consumer can't amortize;
-    * `persistAtHit = 1` suits tiny RESULT sets (persisting them is free —
-    * the first consumer executes the plan anyway and the blocks are a few
-    * rows) so the second consumer reuses the first's execution.
+  /** Per-(session, dir) plan cache of the shared family intermediates. An
+    * entry is persisted MEMORY_AND_DISK when it is built: every one is a
+    * small result that a later family member reuses, and the first consumer
+    * executes the plan anyway, so the second reuses the first's execution.
+    * At most `MaxEntries` entries are kept (the least recently used one is
+    * unpersisted on eviction), so cached blocks can't accumulate across
+    * many sessions/corpora in one JVM.
     */
-  private final class SharedPlanCache(maxEntries: Int = 8, persistAtHit: Int = 2) {
-    private final class Entry(val df: DataFrame) {
-      var hits = 0
-      var persisted = false
-    }
+  private final class SharedPlanCache {
+    private val MaxEntries = 8
     private val entries =
       // accessOrder = true: eviction is least-RECENTLY-used — FIFO would
       // evict the hottest (first-inserted, many-hit) index first
-      new java.util.LinkedHashMap[(SparkSession, String), Entry](16, 0.75f, true) {
+      new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, String), Entry]): Boolean = {
-          val evict = size() > maxEntries
-          if (evict && e.getValue.persisted) {
+            e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
+          val evict = size() > MaxEntries
+          if (evict) {
             // unpersist only: recompute-safe for any consumer still holding
             // the df. localCheckpoint blocks (keeperCache) are NOT released
             // here — a holder's plan reads them with truncated lineage, so
             // releasing mid-run would fail that consumer unrecoverably
             // rather than recompute. They are freed in releaseAll(), the
             // explicit end-of-family cleanup where no consumer remains.
-            try e.getValue.df.unpersist(blocking = false) catch { case _: Exception => () }
+            Cleanup.quietly(e.getValue.unpersist(blocking = false))
           }
           evict
         }
@@ -307,17 +298,12 @@ object QueriesPipeline {
         entries.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
         // explicit get-then-put (not computeIfAbsent) so the access is
         // recorded in the LRU order for existing entries
-        var e = entries.get((s, dir))
-        if (e == null) {
-          e = new Entry(build())
-          entries.put((s, dir), e)
+        var df = entries.get((s, dir))
+        if (df == null) {
+          df = build().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          entries.put((s, dir), df)
         }
-        e.hits += 1
-        if (e.hits >= persistAtHit && !e.persisted) {
-          e.df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          e.persisted = true
-        }
-        e.df
+        df
       }
 
     /** End-of-family cleanup: drop every entry, unpersisting cached blocks
@@ -327,14 +313,10 @@ object QueriesPipeline {
       * query families so one family's pinned memory can't degrade the next.
       */
     def releaseAll(): Unit = entries.synchronized {
-      entries.values().forEach { e =>
-        val sc = e.df.sparkSession.sparkContext
-        if (!sc.isStopped) {
-          if (e.persisted) {
-            try e.df.unpersist(blocking = false) catch { case _: Exception => () }
-          }
-          try graft.operators.Dedup.releaseCheckpoints(e.df)
-          catch { case _: Exception => () }
+      entries.values().forEach { df =>
+        if (!df.sparkSession.sparkContext.isStopped) {
+          Cleanup.quietly(df.unpersist(blocking = false))
+          Cleanup.quietly(graft.operators.Dedup.releaseCheckpoints(df))
         }
       }
       entries.clear()
@@ -374,14 +356,14 @@ object QueriesPipeline {
     * selection consumes the IDENTICAL pair set. Returns (id_a, id_b, jac)
     * with id_a < id_b, jac ≥ 0.6, ordered.
     */
-  private val pairsCache = new SharedPlanCache(persistAtHit = 1)
+  private val pairsCache = new SharedPlanCache
 
   /** Keeper decision over [[minhashPairs]] — the ITERATIVE
     * connected-components loop runs real jobs per round, so its (tiny,
     * one-row-per-paired-doc) result is shared: p17 emits it, p19 anti-joins
     * it. Persist-at-1st-access like the pair set itself.
     */
-  private val keeperCache = new SharedPlanCache(persistAtHit = 1)
+  private val keeperCache = new SharedPlanCache
   private def sharedKeepers(s: SparkSession, dir: String): DataFrame =
     keeperCache.get(s, dir, () => graft.operators.Dedup
       .connectedComponents(minhashPairs(s, dir).select(col("id_a"), col("id_b"))))
@@ -457,7 +439,7 @@ object QueriesPipeline {
         expr("bit_xor(h)").as("checksum"))
   }
 
-  private val scoredPairsCache = new SharedPlanCache(persistAtHit = 1)
+  private val scoredPairsCache = new SharedPlanCache
   /** ALL band-candidate pairs with their shingle-intersection count and
     * doc sizes — the one pair-score table every LSH consumer derives
     * from: [[minhashPairs]] applies the ≥0.6 verification cut, p54 buckets

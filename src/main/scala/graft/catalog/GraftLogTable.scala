@@ -2,53 +2,71 @@ package graft.catalog
 
 import java.util
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{expressions => ce}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.metric.CustomMetric
-import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.plans.{OffsetRange, OffsetRangePlanner}
 import graft.sources.{EventSource, LogMicroBatchStream, OffsetAddressedSource}
 
-/** DSv2 table for an offset-addressed event LOG: `_offset` predicates from
-  * ANY `spark.sql` query are pushed into the scan as pruned
+/** DSv2 table for an offset-addressed event LOG (Kafka): `_offset`
+  * predicates from ANY `spark.sql` query are pushed into the scan as pruned
   * [[OffsetRange]]s — the reference got this for free on every SQL query
   * from Presto's TupleDomain (`KafkaSplitManager.java:93-106`); here
   * [[GraftLogScanBuilder.pushFilters]] is that hook, with
   * [[OffsetRangePlanner]] as the filter→range translator.
   *
-  * Execution depends on the collection's [[EventSource]]:
+  * Its scan is [[GraftLogScan]], a native DSv2 batch and micro-batch scan:
+  * the raw source's own scans over the pruned ranges, decoded at the
+  * reader. The planner sees one scan node and optimizes the query once.
+  * The engine API's Kafka reads are this table too, built without a
+  * catalog (`KafkaEventSource.read`), and their scans start from the
+  * source's own window. (A file-backed collection is a [[GraftFileTable]]
+  * instead.)
   *
-  *  - an [[OffsetAddressedSource]] (Kafka) gets [[GraftLogScan]], a native
-  *    DSv2 batch and micro-batch scan: the raw source's own scans over the
-  *    pruned ranges, decoded at the reader. The planner sees one scan node
-  *    and optimizes the query once. The engine API's Kafka reads are this
-  *    table too, built without a catalog (`KafkaEventSource.read`), and
-  *    their scans start from the source's own window.
-  *  - a file source gets [[GraftFileScan]], a [[V1Scan]] over the source's
-  *    DataFrame read (Spark's own JDBC-connector pattern), which
-  *    [[graft.plans.InlineLogScan]] replaces with the native file scan when
-  *    the session has [[graft.GraftExtensions]].
-  *
-  * Pruning can only ever drop rows the predicate excludes. Over a file
-  * source every filter also stays a Spark-side residual (the planner's
-  * sound over-approximation). [[GraftLogScan]] instead enforces its ranges
-  * in the reader; they hold exactly the rows of the source's window that
-  * the filters `pushFilters` translated keep, so only the untranslated
-  * filters stay residual. (A residual's per-query offset bounds would land
-  * in the query's generated code and compile a new class for every
-  * window.)
+  * Pruning can only ever drop rows the predicate excludes. The scan
+  * enforces its ranges in the reader; they hold exactly the rows of the
+  * source's window that the filters `pushFilters` translated keep, so only
+  * the untranslated filters stay residual. (A residual's per-query offset
+  * bounds would land in the query's generated code and compile a new class
+  * for every window.)
   */
 final class GraftLogTable(
+    tableName: String,
+    project: String,
+    collection: String,
+    userSchema: StructType,
+    source: OffsetAddressedSource)
+    extends Table with SupportsRead {
+
+  private val fullSchema = StructType(SystemColumns.fields ++ userSchema.fields)
+
+  override def name(): String = tableName
+  override def schema(): StructType = fullSchema
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftLogScanBuilder(project, collection, userSchema, fullSchema, source)
+}
+
+/** DSv2 table for a file-backed collection (metastore mode with `source` =
+  * parquet | json | csv | orc): its name, schema and the source's own read.
+  * It has no scan of its own. [[graft.plans.ResolveFileTables]] (installed
+  * by [[graft.GraftExtensions]]) resolves it at analysis to [[read]], so
+  * the query is optimized once and Catalyst pushes `_offset` predicates
+  * through the system-column alias into the native file scan, on the
+  * collection's offset stand-in column. A session without the extensions
+  * fails loudly when it plans a scan of it.
+  */
+final class GraftFileTable(
     tableName: String,
     project: String,
     collection: String,
@@ -56,62 +74,17 @@ final class GraftLogTable(
     source: EventSource)
     extends Table with SupportsRead {
 
-  private val fullSchema = StructType(SystemColumns.fields ++ userSchema.fields)
-
-  /** Whether the table reads through [[GraftLogScan]] rather than a
-    * DataFrame.
-    */
-  def offsetAddressed: Boolean = source.isInstanceOf[OffsetAddressedSource]
-
   override def name(): String = tableName
-  override def schema(): StructType = fullSchema
+  override def schema(): StructType = StructType(SystemColumns.fields ++ userSchema.fields)
   override def capabilities(): util.Set[TableCapability] =
-    if (offsetAddressed)
-      util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
-    else util.EnumSet.of(TableCapability.BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  /** The collection's rows: the system columns, then the user fields. */
+  def read(spark: SparkSession): DataFrame = source.read(spark, project, collection, userSchema)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftLogScanBuilder(project, collection, userSchema, fullSchema, source)
-
-  /** A file-backed table's read at full schema, pruned to `ranges`, as a
-    * DataFrame — what [[graft.plans.InlineLogScan]] splices into query
-    * plans in place of this relation.
-    */
-  def innerFrame(spark: org.apache.spark.sql.classic.SparkSession,
-                 ranges: Seq[OffsetRange]): org.apache.spark.sql.DataFrame =
-    GraftLogTable.fileFrame(spark, source, project, collection, userSchema, ranges, fullSchema)
-}
-
-object GraftLogTable {
-
-  /** A file source's read pruned to `ranges` and projected to `columns`: the
-    * source read, the ranges as an `_offset` residual (Catalyst pushes it
-    * into the file scan via the offset-column alias), the projection.
-    */
-  def fileFrame(spark: org.apache.spark.sql.classic.SparkSession, source: EventSource,
-                project: String, collection: String, userSchema: StructType,
-                ranges: Seq[OffsetRange],
-                columns: StructType): org.apache.spark.sql.DataFrame = {
-    val full = source.read(spark, project, collection, userSchema)
-    val pruned =
-      if (ranges == OffsetRangePlanner.Full) full
-      else full.filter(Bridge.column(
-        rangePredicate(Bridge.expression(col(SystemColumns.Offset)), ranges)))
-    pruned.select(columns.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** `offset ∈ ranges` as a Catalyst predicate: the residual that makes a
-    * superset read (a file scan) honor a multi-range pruned window exactly.
-    * No ranges keep nothing.
-    */
-  def rangePredicate(offset: ce.Expression, ranges: Seq[OffsetRange]): ce.Expression =
-    ranges
-      .map { r =>
-        val from = ce.GreaterThanOrEqual(offset, ce.Literal(r.start))
-        r.end.fold[ce.Expression](from)(e => ce.And(from, ce.LessThan(offset, ce.Literal(e))))
-      }
-      .reduceOption[ce.Expression](ce.Or(_, _))
-      .getOrElse(ce.Literal(false))
+    throw new UnsupportedOperationException(s"$tableName is a file-backed collection: it is " +
+      "read only in sessions with graft.GraftExtensions (spark.sql.extensions=graft.GraftExtensions)")
 }
 
 final class GraftLogScanBuilder(
@@ -119,16 +92,13 @@ final class GraftLogScanBuilder(
     collection: String,
     userSchema: StructType,
     fullSchema: StructType,
-    source: EventSource)
+    source: OffsetAddressedSource)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var requiredSchema: StructType = fullSchema
   // the source's own window (the whole log unless the engine API was given
   // ranges); pushed filters narrow it
-  private var ranges: Seq[OffsetRange] = source match {
-    case log: OffsetAddressedSource => log.offsetRanges
-    case _ => OffsetRangePlanner.Full
-  }
+  private var ranges: Seq[OffsetRange] = source.offsetRanges
   private var accepted: Array[Filter] = Array.empty
 
   private val offset = ce.AttributeReference(SystemColumns.Offset, LongType, nullable = false)()
@@ -177,10 +147,7 @@ final class GraftLogScanBuilder(
       ranges = OffsetRangePlanner.normalize(OffsetRangePlanner.intersectAll(ranges,
         OffsetRangePlanner.fromExpression(translated.map(_._2).reduce(ce.And(_, _)))))
     }
-    source match {
-      case _: OffsetAddressedSource => filters.filterNot(accepted.contains)
-      case _ => filters
-    }
+    filters.filterNot(accepted.contains)
   }
 
   override def pushedFilters(): Array[Filter] = accepted
@@ -193,12 +160,8 @@ final class GraftLogScanBuilder(
     requiredSchema = StructType(fullSchema.filter(f => names(f.name)))
   }
 
-  override def build(): Scan = source match {
-    case log: OffsetAddressedSource =>
-      new GraftLogScan(project, collection, userSchema, requiredSchema, ranges, log)
-    case _ =>
-      new GraftFileScan(project, collection, userSchema, requiredSchema, ranges, source)
-  }
+  override def build(): Scan =
+    new GraftLogScan(project, collection, userSchema, requiredSchema, ranges, source)
 }
 
 /** Native DSv2 scan of an offset-addressed log: the batch is the source's
@@ -253,38 +216,4 @@ final class GraftLogScan(
 object GraftLogScan {
   def rangesString(ranges: Seq[OffsetRange]): String =
     ranges.map(r => s"[${r.start},${r.end.map(_.toString).getOrElse("∞")})").mkString(",")
-}
-
-/** Scan of a file-backed log table: a [[V1Scan]] whose relation runs
-  * [[GraftLogTable.fileFrame]] — the fallback for sessions without
-  * [[graft.GraftExtensions]], whose [[graft.plans.InlineLogScan]] splices
-  * the same read into the plan natively.
-  */
-final class GraftFileScan(
-    project: String,
-    collection: String,
-    userSchema: StructType,
-    requiredSchema: StructType,
-    ranges: Seq[OffsetRange],
-    source: EventSource)
-    extends V1Scan {
-
-  override def readSchema(): StructType = requiredSchema
-
-  override def description(): String =
-    s"GraftFileScan $project.$collection ranges=${GraftLogScan.rangesString(ranges)}"
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T = {
-    val scan = this
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = requiredSchema
-      override def toString: String = scan.description()
-      override def buildScan(): RDD[Row] = {
-        val spark = context.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        GraftLogTable.fileFrame(spark, source, project, collection, userSchema, ranges,
-          requiredSchema).asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].rdd
-      }
-    }.asInstanceOf[T]
-  }
 }

@@ -27,11 +27,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  2. '''Metastore mode''' (`spark.sql.catalog.graft.metastore = <dir>`):
   *     projects/collections resolve through a [[FileMetastore]] — the
   *     reference's primary naming surface, `catalog.schema.table` over
-  *     declared topics (`KafkaMetadata.java:155-175`) — and tables are
-  *     [[GraftLogTable]]s over the configured [[graft.sources.EventSource]]
-  *     (`source` = `parquet` | `json` | `csv` | `kafka`, with `sourceRoot`
-  *     resp. `bootstrap`), so every `spark.sql` query gets `_offset`
-  *     pushdown exactly like every Presto query got TupleDomain pruning.
+  *     declared topics (`KafkaMetadata.java:155-175`) — over the configured
+  *     [[graft.sources.EventSource]] (`source` = `kafka` with `bootstrap`,
+  *     or `parquet` | `json` | `csv` | `orc` with `sourceRoot`), so every
+  *     `spark.sql` query gets `_offset` pushdown exactly like every Presto
+  *     query got TupleDomain pruning. A Kafka collection is a
+  *     [[GraftLogTable]], whose scan prunes the broker read; a file-backed
+  *     one is a [[GraftFileTable]], which resolves at analysis to the
+  *     source's own read, where Catalyst pushes `_offset` into the file
+  *     scan (this needs [[graft.GraftExtensions]]).
   *
   * Read-only by design, exactly like the reference
   * (`KafkaConnector.java:29-30,83-87`): every mutation throws.
@@ -138,8 +142,12 @@ class GraftTableCatalog extends TableCatalog with SupportsNamespaces {
       val schema = ms.schemaOf(project, ident.name).getOrElse(
         // parity: TableNotFoundException (KafkaMetadata.java:159-161)
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
-      new GraftLogTable(
-        s"$catalogName.$project.${ident.name}", project, ident.name, schema, eventSource.get)
+      val name = s"$catalogName.$project.${ident.name}"
+      eventSource.get match {
+        case log: graft.sources.OffsetAddressedSource =>
+          new GraftLogTable(name, project, ident.name, schema, log)
+        case files => new GraftFileTable(name, project, ident.name, schema, files)
+      }
     case None =>
       val p = pathFor(ident)
       if (!java.nio.file.Files.exists(p)) {

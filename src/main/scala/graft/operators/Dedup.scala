@@ -169,5 +169,5 @@ object Dedup {
   def releaseCheckpoints(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(r => try r.unpersist(blocking = false) catch { case _: Exception => () })
+    }.foreach(r => graft.util.Cleanup.quietly(r.unpersist(blocking = false)))
 }

@@ -17,12 +17,14 @@ trait EventSource {
            schema: StructType): DataFrame
 }
 
-/** A source whose rows are addressed by log offset (Kafka). Its reads are
+/** A source whose rows are addressed by log offset (Kafka). Its collections
+  * are [[graft.catalog.GraftLogTable]]s, read by
   * [[graft.catalog.GraftLogScan]]s: the raw source's own scans over the
   * pruned windows, decoded at the reader to `requiredSchema` (a projection
   * of system columns + user fields). `_offset` filters prune such a scan
-  * (reference C3); a columnar file source instead relies on Catalyst's
-  * filter pushdown into its file scan.
+  * (reference C3). Any other source is file-backed: its collections are
+  * [[graft.catalog.GraftFileTable]]s, which resolve to [[read]], and
+  * Catalyst pushes `_offset` filters into the file scan.
   */
 trait OffsetAddressedSource extends EventSource {
 

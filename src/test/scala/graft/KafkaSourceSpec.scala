@@ -1,10 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-import graft.catalog.{GraftLogTable, SystemColumns}
+import graft.catalog.SystemColumns
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
 import graft.plans.OffsetRange
 import graft.sources.{AvroPayloadCodec, JsonPayloadCodec, KafkaEventSource, ReferenceDecode}
@@ -65,19 +64,6 @@ class KafkaSourceSpec extends SparkTestBase {
     assert(opts("kafka.receive.buffer.bytes") == "65536") // KafkaConnectorConfig.java:49
     assert(opts("minPartitions") == "8")
     assert(opts("subscribe") == "proj_events")
-  }
-
-  test("rangePredicate restores multi-range semantics on a superset stream") {
-    val s0 = spark
-    import s0.implicits._
-    val df = (0L until 50L).toDF("_offset")
-    def in(ranges: Seq[OffsetRange]) =
-      Bridge.column(GraftLogTable.rangePredicate(Bridge.expression(col("_offset")), ranges))
-    val ranges = Seq(OffsetRange(5, Some(10)), OffsetRange(20, Some(25)), OffsetRange(40, None))
-    val kept = df.filter(in(ranges)).collect().map(_.getLong(0)).toSet
-    assert(kept == ((5L until 10L) ++ (20L until 25L) ++ (40L until 50L)).toSet)
-    // no ranges -> nothing passes (matches the empty batch relation)
-    assert(df.filter(in(Nil)).count() == 0)
   }
 
   test("avro round-trip: encode(decode) is lossless incl. nulls") {

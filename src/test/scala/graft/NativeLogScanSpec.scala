@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.execution.SparkOptimizer
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, MicroBatchScanExec}
 import org.apache.spark.sql.functions._
@@ -11,7 +10,7 @@ import org.apache.spark.sql.types._
 
 import graft.catalog.{FileMetastore, InMemoryMetastore, SchemaField}
 import graft.functions.{AvroSchemas, GraftFunctions}
-import graft.plans.{InlineLogScan, OffsetRangePlanner}
+import graft.plans.{OffsetRangePlanner, ResolveFileTables}
 import graft.sources.{AvroPayloadCodec, DecodingReaderFactory, FakeKafka, KafkaEventSource, RangePartition}
 
 /** `spark.sql` over a Kafka-format log table reads through the native DSv2
@@ -133,8 +132,9 @@ class NativeLogScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("a session without GraftExtensions gets the same answers") {
-    val withExt = spark.sessionState.optimizer.asInstanceOf[SparkOptimizer].preCBORules
-    assert(withExt.exists(_.isInstanceOf[InlineLogScan]))
+    def resolvesFileTables(s: SparkSession): Boolean =
+      s.sessionState.analyzer.extendedResolutionRules.exists(_.isInstanceOf[ResolveFileTables])
+    assert(resolvesFileTables(spark))
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val plain = try SparkSession.builder().getOrCreate() finally {
@@ -142,8 +142,7 @@ class NativeLogScanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       SparkSession.setActiveSession(spark)
     }
     assert(plain ne spark)
-    assert(!plain.sessionState.optimizer.asInstanceOf[SparkOptimizer].preCBORules
-      .exists(_.isInstanceOf[InlineLogScan]))
+    assert(!resolvesFileTables(plain))
     val cat = catalog(plain, "graftplain")
     for ((name, ranges) <- windows) {
       val w = sqlWindow(ranges)

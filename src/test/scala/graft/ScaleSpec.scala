@@ -48,10 +48,10 @@ class ScaleSpec extends SparkTestBase {
 
   test("q40: spark.sql _offset predicate reaches the native parquet scan, no V1 bridge") {
     val p = plan("q40_sql_offset_pushdown")
-    // InlineLogScan replaces the DSv2 V1-bridge scan with the inner plan:
+    // the file-backed table resolves at analysis to the source's own read:
     // the _offset bounds push through the system-column alias into the
     // parquet scan itself, the reader schema is pruned to the referenced
-    // columns, and no RDD conversion node remains
+    // columns, and no RDD conversion node appears
     assert(p.contains("GreaterThanOrEqual(event_id,2000)")
       && p.contains("LessThan(event_id,7000)"), p)
     assert(p.contains("ReadSchema: struct<event_id:bigint,event_type:string>"), p)

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.SparkOptimizer
 
-import graft.plans.{InlineLogScan, PruneAvroDecode, SessionWindowEndFilterGuard,
+import graft.plans.{PruneAvroDecode, ResolveFileTables, SessionWindowEndFilterGuard,
   StandardGroupingSets}
 
 /** The one-factory rule: `GraftEngine.localSession` is the only session
@@ -29,8 +29,8 @@ class SessionConfSpec extends SparkTestBase {
     assert(sc.getConf.get("spark.ui.enabled") == "false" && sc.uiWebUrl.isEmpty)
     val opt = s.sessionState.optimizer.asInstanceOf[SparkOptimizer]
     assert(opt.extendedOperatorOptimizationRules.contains(PruneAvroDecode))
-    assert(opt.preCBORules.exists(_.isInstanceOf[InlineLogScan]))
     val analyzer = s.sessionState.analyzer
+    assert(analyzer.extendedResolutionRules.exists(_.isInstanceOf[ResolveFileTables]))
     assert(analyzer.postHocResolutionRules.exists(_.isInstanceOf[StandardGroupingSets]))
     assert(analyzer.extendedCheckRules.exists(_.isInstanceOf[SessionWindowEndFilterGuard]))
   }

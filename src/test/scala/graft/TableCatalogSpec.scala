@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 class TableCatalogSpec extends SparkTestBase {
@@ -61,9 +62,9 @@ class TableCatalogSpec extends SparkTestBase {
       val q = spark.sql(
         "SELECT count(*) AS n FROM graftms.tpch.events WHERE _offset >= 2000 AND _offset < 7000")
       val plan = q.queryExecution.executedPlan.toString
-      // InlineLogScan splices the native parquet read in: the _offset bounds
+      // the table resolves to the native parquet read: the _offset bounds
       // are pushed through the system-column alias into the FILE scan (on
-      // the offset stand-in column) and the V1 RDD bridge is gone entirely
+      // the offset stand-in column), with no RDD conversion node
       assert(plan.contains("GreaterThanOrEqual(event_id,2000)")
         && plan.contains("LessThan(event_id,7000)"), plan)
       assert(plan.contains("FileScan parquet") && !plan.contains("RowDataSourceScan"), plan)
@@ -71,6 +72,73 @@ class TableCatalogSpec extends SparkTestBase {
         .filter(col("event_id") >= 2000 && col("event_id") < 7000).count()
       assert(q.head().getLong(0) == expected)
     }
+  }
+
+  /** A parquet-backed metastore catalog `name` in session `s` over the
+    * fixtures in `dir`, declaring `events`. Spark caches catalogs by name
+    * per session, so a name serves one `dir`.
+    */
+  private def parquetCatalog(name: String, dir: String, s: SparkSession = spark): String = {
+    val ms = java.nio.file.Files.createTempDirectory(s"graft-ms-$name").toString
+    new graft.catalog.FileMetastore(ms).createCollection("tpch", "events",
+      graft.catalog.SchemaField.fromStructType(Tables.load(spark, dir, "events").schema))
+    Map("" -> "graft.catalog.GraftTableCatalog", ".metastore" -> ms, ".source" -> "parquet",
+      ".sourceRoot" -> dir).foreach { case (k, v) => s.conf.set(s"spark.sql.catalog.$name$k", v) }
+    name
+  }
+
+  // sf0.01 events carry event_id 0..9999, so every range below holds rows
+  private val sf0_01 = "/root/testdata/sf0.01"
+
+  /** The rows of `sql` over the catalog table `cat.tpch.events`, and of the
+    * same query over `Tables.load` with `_offset` spelled `event_id`.
+    */
+  private def againstLoad(cat: String, sql: String): (Seq[String], Seq[String]) = {
+    Tables.load(spark, sf0_01, "events").createOrReplaceTempView("events_ref")
+    def rows(q: String) = spark.sql(q).collect().map(_.toString).toSeq.sorted
+    (rows(sql.replace("$t", s"$cat.tpch.events")),
+      rows(sql.replace("$t", "events_ref").replace("_offset", "event_id")))
+  }
+
+  test("metastore mode: a self-join of a file-backed table matches the source read") {
+    val cat = parquetCatalog("graftself", sf0_01)
+    val sql = """SELECT a._offset, a.user_id, a.event_type, b._offset AS prev, b.user_id, b.event_type
+                 FROM $t a JOIN $t b ON a._offset = b._offset + 1
+                 WHERE a._offset >= 2000 AND a._offset < 2500"""
+    val (got, want) = againstLoad(cat, sql)
+    assert(got.size == 500 && got == want)
+    // both sides read one cached source plan; resolved in the Resolution
+    // batch, they get disjoint attribute ids like any repeated relation
+    val reads = spark.sql(sql.replace("$t", s"$cat.tpch.events")).queryExecution.analyzed
+      .collectLeaves().map(_.output.map(_.exprId).toSet)
+    assert(reads.size == 2 && (reads.head & reads.last).isEmpty, reads)
+  }
+
+  test("metastore mode: a multi-range OR window over a file-backed table matches the source read") {
+    val cat = parquetCatalog("graftor", sf0_01)
+    val q = spark.sql(s"SELECT _offset FROM $cat.tpch.events " +
+      "WHERE _offset < 100 OR (_offset >= 2000 AND _offset < 2500) OR _offset >= 9000")
+    assert(q.collect().map(_.getLong(0)).toSet ==
+      ((0L until 100L) ++ (2000L until 2500L) ++ (9000L until 10000L)).toSet)
+    val (got, want) = againstLoad(cat,
+      """SELECT _offset, event_type, user_id FROM $t
+         WHERE _offset < 100 OR (_offset >= 2000 AND _offset < 2500) OR _offset >= 9000""")
+    assert(got.size == 1600 && got == want)
+  }
+
+  test("a session without GraftExtensions fails loudly on a file-backed table") {
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = try SparkSession.builder().getOrCreate() finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+    assert(plain ne spark)
+    val cat = parquetCatalog("graftfp", sfDir, plain)
+    val e = intercept[Exception](plain.sql(s"SELECT count(*) FROM $cat.tpch.events").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null && m.contains("graft.GraftExtensions") &&
+      m.contains("spark.sql.extensions")), msgs)
   }
 
   test("metastore mode resolves a NON-parquet (json) collection") {
