@@ -62,13 +62,13 @@ object Harness {
     * failed:`). Between entries, outside the timed region, it releases
     * what one entry leaves behind in the shared JVM:
     *   - at each family boundary (the first letter: all p-entries, whose
-    *     shared caches persist MEMORY_AND_DISK and localCheckpoint blocks,
-    *     sort before q and s) and at the end, [[reset]];
+    *     shared intermediates persist MEMORY_AND_DISK and localCheckpoint
+    *     blocks, sort before q and s) and at the end, [[reset]];
     *   - after each s-entry, the checkpoint blocks of its returned frame
     *     (nothing shares them) and its stream residue.
     * Unreleased, this residue slowed later, unchanged entries 3-10x in one
-    * full-registry run. No result depends on it: every shared cache
-    * rebuilds on demand.
+    * full-registry run. No result depends on it: every shared
+    * intermediate rebuilds on demand.
     */
   def runEntries(spark: SparkSession, names: Seq[String], tag: String)(
       run: String => DataFrame): Seq[(String, Option[Double])] = {
@@ -106,15 +106,15 @@ object Harness {
     Cleanup.quietlyAny(GraftStateStoreHygiene.unloadAll())
   }
 
-  /** Drops the shared caches, anything still persisted (a leak, since no
-    * plan is reused across families) and stream residue, then drives
-    * ContextCleaner with a GC now instead of inside a later entry's timed
-    * region. The logged `swallowed` is the JVM's count of release failures
-    * so far ([[Cleanup.swallowed]]). */
+  /** Drops the shared intermediates and anything else still cached or
+    * persisted ([[QueriesPipeline.releaseShared]]; no plan is reused across
+    * families) and stream residue, then drives ContextCleaner with a GC now
+    * instead of inside a later entry's timed region. The logged
+    * `pinnedRdds` is the number of RDDs still persisted after the release,
+    * and `swallowed` the JVM's count of release failures so far
+    * ([[Cleanup.swallowed]]). */
   private def reset(spark: SparkSession, what: String, log: String => Unit): Unit = {
-    QueriesPipeline.releaseSharedCaches()
-    spark.sparkContext.getPersistentRDDs.values.foreach(r =>
-      Cleanup.quietly(r.unpersist(blocking = false)))
+    QueriesPipeline.releaseShared(spark)
     releaseStreams(spark)
     System.gc()
     var (gcN, gcMs) = (0L, 0L)
@@ -125,6 +125,6 @@ object Harness {
     val rt = Runtime.getRuntime
     val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
     log(f"reset $what heapMB=$usedMb gcN=$gcN gcSec=${gcMs / 1000.0}%.1f " +
-      s"swallowed=${Cleanup.swallowed}")
+      s"pinnedRdds=${spark.sparkContext.getPersistentRDDs.size} swallowed=${Cleanup.swallowed}")
   }
 }

@@ -22,8 +22,9 @@ object ProfilePipeline {
     }
     (1 to passes).foreach { p =>
       System.err.println(s"[pp] ----- pass $p -----")
-      // fresh caches each pass: same discipline as the bench family reset
-      QueriesPipeline.releaseSharedCaches()
+      // fresh shared intermediates each pass: the release point of the
+      // bench's family reset
+      QueriesPipeline.releaseShared(spark)
       time("corpus docs")(Corpus.docs(spark, sfDir).count())
       time("shingle index (shared)")(QueriesPipeline.sharedShingleHashes(spark, sfDir).count())
       time("shingle index again")(QueriesPipeline.sharedShingleHashes(spark, sfDir).count())

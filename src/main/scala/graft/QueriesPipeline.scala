@@ -101,7 +101,7 @@ object QueriesPipeline {
     * shrinks the shuffle payload; hash collisions are deterministic and
     * identical in the oracle (same hash), so results still match exactly.
     */
-  private def shingleHashes(corpus: DataFrame): DataFrame = {
+  private[graft] def shingleHashes(corpus: DataFrame): DataFrame = {
     val ht = col("ht")
     // hash each TOKEN once, then combine the three per-token hashes
     // arithmetically per shingle position: ((h1·B + h2) mod M · B + h3)
@@ -127,31 +127,86 @@ object QueriesPipeline {
   private val ShingleB = 1000003L
   private val ShingleM = graft.functions.PolyHash.Mod
 
-  /** The shingle inverted index, shared across the whole dedup family.
-    * p02/p03/p04/p17 together reference the index ~9× (signatures,
-    * candidate joins, size counts, verify); recomputing the
-    * tokenize→shingle→hash→distinct scan each time is the family's
-    * dominant cost at scale. The local analogue of the 100 TB design (a
-    * bucketed write of the index shared by every downstream consumer) is a
-    * MEMORY_AND_DISK persist from the first access on. The index is
-    * (doc_id, h) longs only: its blocks are tiny relative to the
-    * tokenize→shingle→hash scan they replace, and the family members
-    * p02/p03/p04/p17/p19/p21 all hit it, so even the first consumer's
-    * materialization cost is amortized at once.
+  /** The shared intermediates of the dedup and embedding families, one
+    * entry per (name, session, fixture dir), built by `build` on first
+    * access. Each is a small result that several family members read (each
+    * intermediate names its readers), and the first reader executes its
+    * plan anyway, so the entry is persisted MEMORY_AND_DISK when it is
+    * built and later readers reuse that execution. The 100 TB analogue is
+    * a bucketed materialization that every downstream consumer reads.
+    *
+    * An entry carries the [[corpusStamp]] it was built at, so a rewritten
+    * input rebuilds it. When a dir's stamp changes, every entry of that
+    * (session, dir) is unpersisted BEFORE any rebuild: Spark's CacheManager
+    * matches a new plan over the same path to an old cached one
+    * (`InMemoryFileIndex` equality compares root paths only) and would hand
+    * the rebuild, or any fresh plan of the same shape, the stale blocks.
+    * Spark refreshes that cache only for paths its own writer writes, not
+    * for a fixture regenerated outside the JVM. Entries of stopped sessions
+    * are dropped on access.
+    *
+    * Builders nest (sizes and pair stats read the index, keepers read the
+    * pairs that read the scored pairs), so the map is a plain one under one
+    * lock with get-then-put: `ConcurrentHashMap.compute` throws on a build
+    * that updates the same map. Every caller holds one session and one
+    * fixture dir, so the registry holds at most one entry per name and
+    * needs no eviction; [[releaseShared]] is its one release point.
     */
-  private val shCache = new SharedPlanCache
-  private[graft] def sharedShingleHashes(s: SparkSession, dir: String): DataFrame =
-    shCache.get(s, dir, () => shingleHashes(Corpus.docs(s, dir)))
+  private val registry = scala.collection.mutable.HashMap
+    .empty[(String, SparkSession, String), (Seq[(Long, Long)], DataFrame)]
 
-  /** Per-doc shingle-set sizes `(doc_id, n)` over the SHARED index
-    * (optimization r15, guide §2.4 "aggregate once"): p02/p21/p23/p24/p41/
-    * p72 each ran the identical groupBy over the shared index — one
-    * aggregation pass per consumer. One tiny result (a row per doc), so
-    * persist from the first access; consumers rename `n` as needed.
+  private def shared(name: String, s: SparkSession, dir: String)(
+      build: => DataFrame): DataFrame = registry.synchronized {
+    val stamp = corpusStamp(dir)
+    registry.filterInPlace { case ((_, owner, d), (built, df)) =>
+      if (owner.sparkContext.isStopped) false
+      else if (owner == s && d == dir && built != stamp) {
+        Cleanup.quietly(df.unpersist(blocking = false)); false
+      } else true
+    }
+    registry.get((name, s, dir)).fold {
+      val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      registry((name, s, dir)) = (stamp, df)
+      df
+    }(_._2)
+  }
+
+  /** The [[Tables.pathStamp]]s of the two fixture tables [[Corpus]] reads. */
+  private def corpusStamp(dir: String): Seq[(Long, Long)] =
+    Seq("documents", "embeddings").map(n => Tables.pathStamp(s"$dir/$n.parquet"))
+
+  /** Number of live registry entries. */
+  private[graft] def sharedEntries: Int = registry.synchronized(registry.size)
+
+  /** Drops every registry entry and everything still cached in `spark`:
+    * its dataset cache and every persistent RDD, which includes the
+    * localCheckpoint blocks behind scored pairs and keepers. The caller
+    * asserts that no reader still holds a returned frame (a checkpointed
+    * plan cannot recompute after this); the next access rebuilds.
     */
-  private val sizesCache = new SharedPlanCache
+  private[graft] def releaseShared(spark: SparkSession): Unit = {
+    registry.synchronized(registry.clear())
+    Cleanup.quietly(spark.catalog.clearCache())
+    spark.sparkContext.getPersistentRDDs.values.foreach(r =>
+      Cleanup.quietly(r.unpersist(blocking = false)))
+  }
+
+  /** The shingle inverted index `(doc_id, h)`, shared across the whole
+    * dedup family: p02/p03/p04/p17/p19/p21 together reference it ~9×
+    * (signatures, candidate joins, size counts, verify), and the
+    * tokenize→shingle→hash→distinct scan it replaces is the family's
+    * dominant cost at scale.
+    */
+  private[graft] def sharedShingleHashes(s: SparkSession, dir: String): DataFrame =
+    shared("shingleHashes", s, dir)(shingleHashes(Corpus.docs(s, dir)))
+
+  /** Per-doc shingle-set sizes `(doc_id, n)` over the shared index
+    * (optimization r15, guide §2.4 "aggregate once"): p02/p21/p23/p24/p41/
+    * p72 each ran the identical groupBy over the index. One row per doc;
+    * consumers rename `n` as needed.
+    */
   private[graft] def sharedShingleSizes(s: SparkSession, dir: String): DataFrame =
-    sizesCache.get(s, dir, () => sharedShingleHashes(s, dir)
+    shared("shingleSizes", s, dir)(sharedShingleHashes(s, dir)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
 
   /** Uncapped shingle-intersection SURVIVOR stats
@@ -178,12 +233,8 @@ object QueriesPipeline {
     * (the honest verification cost at any scale) — what changes is what
     * is KEPT, which at 100 TB is the difference between materializing a
     * near-quadratic candidate table and materializing the survivors.
-    *
-    * Persisted from the first access, like every shared cache here: with
-    * exactly two consumers, the second reuses the first's execution of the
-    * join. A lone run (SPARK_GRAFT_ONLY=p02) persists a table nothing
-    * reuses, but post-r16 that frame is a few thousand survivor rows, so
-    * the cost is negligible.
+    * A lone run (SPARK_GRAFT_ONLY=p02) persists a table nothing reuses,
+    * but that frame is a few thousand survivor rows.
     *
     * The keep-predicate is [[pairStatsKeep]], the disjunction of the
     * consumers' own keeps ([[jaccardKeep]] for p02, [[containmentKeep]] for
@@ -191,9 +242,8 @@ object QueriesPipeline {
     * rows silently. `PairStatsKeepSpec` checks both answers against the
     * unfiltered table.
     */
-  private val interCache = new SharedPlanCache
   private[graft] def sharedPairStats(s: SparkSession, dir: String): DataFrame =
-    interCache.get(s, dir, () => pairStats(s, dir).filter(pairStatsKeep))
+    shared("pairStats", s, dir)(pairStats(s, dir).filter(pairStatsKeep))
 
   /** Every shingle-sharing pair's stats `(id_a, id_b, ni, na, nb)`, id_a <
     * id_b, unfiltered: ni shared shingles, na and nb the two documents'
@@ -248,91 +298,13 @@ object QueriesPipeline {
         (col("ni").cast("double") / col("na")).as("containment"))
       .orderBy(col("id_a"), col("id_b"))
 
-  /** Norm-annotated corpus vectors, shared by the whole embedding family
-    * (p05/p06/p07/p14/p20/p22): the exact-decimal self-dot behind `norm` is
-    * the one genuinely expensive per-row kernel, and every member needs the
-    * identical (vec_id, embedding, norm) base. Persist-at-1st-access — the
-    * result is small (corpus × (vector + one double)) and the first
-    * consumer executes the scan anyway, so every later member reads blocks
-    * instead of re-scanning parquet and re-folding norms. The 100 TB
-    * analogue is a bucketed norms-annotated materialization of the corpus.
+  /** Norm-annotated corpus vectors `(vec_id, embedding, norm)`, shared by
+    * the whole embedding family (p05/p06/p07/p14/p20/p22): the
+    * exact-decimal self-dot behind `norm` is the one genuinely expensive
+    * per-row kernel, and every member needs the identical base.
     */
-  private val vecCache = new SharedPlanCache
   private def sharedNormVecs(s: SparkSession, dir: String): DataFrame =
-    vecCache.get(s, dir, () => withNorm(Corpus.vecs(s, dir)))
-
-  /** Per-(session, dir) plan cache of the shared family intermediates. An
-    * entry is persisted MEMORY_AND_DISK when it is built: every one is a
-    * small result that a later family member reuses, and the first consumer
-    * executes the plan anyway, so the second reuses the first's execution.
-    * At most `MaxEntries` entries are kept (the least recently used one is
-    * unpersisted on eviction), so cached blocks can't accumulate across
-    * many sessions/corpora in one JVM.
-    */
-  private final class SharedPlanCache {
-    private val MaxEntries = 8
-    private val entries =
-      // accessOrder = true: eviction is least-RECENTLY-used — FIFO would
-      // evict the hottest (first-inserted, many-hit) index first
-      new java.util.LinkedHashMap[(SparkSession, String), DataFrame](16, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean = {
-          val evict = size() > MaxEntries
-          if (evict) {
-            // unpersist only: recompute-safe for any consumer still holding
-            // the df. localCheckpoint blocks (keeperCache) are NOT released
-            // here — a holder's plan reads them with truncated lineage, so
-            // releasing mid-run would fail that consumer unrecoverably
-            // rather than recompute. They are freed in releaseAll(), the
-            // explicit end-of-family cleanup where no consumer remains.
-            Cleanup.quietly(e.getValue.unpersist(blocking = false))
-          }
-          evict
-        }
-      }
-    def get(s: SparkSession, dir: String, build: () => DataFrame): DataFrame =
-      entries.synchronized {
-        // entries of stopped sessions are dead weight (their blocks are gone
-        // with the context; unpersist would throw) — drop them eagerly so
-        // they don't occupy LRU slots or pin session objects
-        entries.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
-        // explicit get-then-put (not computeIfAbsent) so the access is
-        // recorded in the LRU order for existing entries
-        var df = entries.get((s, dir))
-        if (df == null) {
-          df = build().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          entries.put((s, dir), df)
-        }
-        df
-      }
-
-    /** End-of-family cleanup: drop every entry, unpersisting cached blocks
-      * AND releasing the localCheckpoint RDDs behind them. Caller asserts no
-      * consumer still holds a returned df (checkpointed plans are not
-      * recomputable after this). Single-JVM bench runs call this between
-      * query families so one family's pinned memory can't degrade the next.
-      */
-    def releaseAll(): Unit = entries.synchronized {
-      entries.values().forEach { df =>
-        if (!df.sparkSession.sparkContext.isStopped) {
-          Cleanup.quietly(df.unpersist(blocking = false))
-          Cleanup.quietly(graft.operators.Dedup.releaseCheckpoints(df))
-        }
-      }
-      entries.clear()
-    }
-  }
-
-  /** Release every shared family cache (shingle index, norm vectors, pair
-    * set, keeper decision) — blocks and checkpoint RDDs. For single-JVM
-    * multi-family runs (Bench); after this, the next access rebuilds.
-    */
-  private[graft] def releaseSharedCaches(): Unit = {
-    shCache.releaseAll(); vecCache.releaseAll()
-    pairsCache.releaseAll(); keeperCache.releaseAll()
-    scoredPairsCache.releaseAll()
-    sizesCache.releaseAll(); interCache.releaseAll()
-  }
+    shared("normVecs", s, dir)(withNorm(Corpus.vecs(s, dir)))
 
   /** DuckDB CTEs mirroring [[shingleHashes]] over the [[Corpus.docsSql]]
     * corpus: `corpus`, `sh` (doc_id, h), `sz` (doc_id, n).
@@ -352,32 +324,25 @@ object QueriesPipeline {
        sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
   }
 
-  /** p03's full MinHash→LSH→verify pipeline, factored out so p17's keeper
-    * selection consumes the IDENTICAL pair set. Returns (id_a, id_b, jac)
-    * with id_a < id_b, jac ≥ 0.6, ordered.
-    */
-  private val pairsCache = new SharedPlanCache
-
   /** Keeper decision over [[minhashPairs]] — the ITERATIVE
     * connected-components loop runs real jobs per round, so its (tiny,
     * one-row-per-paired-doc) result is shared: p17 emits it, p19 anti-joins
-    * it. Persist-at-1st-access like the pair set itself.
+    * it.
     */
-  private val keeperCache = new SharedPlanCache
   private def sharedKeepers(s: SparkSession, dir: String): DataFrame =
-    keeperCache.get(s, dir, () => graft.operators.Dedup
+    shared("keepers", s, dir)(graft.operators.Dedup
       .connectedComponents(minhashPairs(s, dir).select(col("id_a"), col("id_b"))))
 
+  /** p03's full MinHash→LSH→verify pipeline, shared verbatim by p03 (emits
+    * it), p17 (clusters it) and p19. Returns (id_a, id_b, jac) with id_a <
+    * id_b, jac ≥ 0.6, ordered. Derived from the SCORED candidate table (not
+    * a private jaccardOf run) so the verification join over the shingle
+    * index executes once for the whole LSH family — p54's precision audit
+    * reads the same scored rows instead of re-joining the index (measured
+    * −4 s).
+    */
   private[graft] def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    // the pair set is shared verbatim by p03 (emits it), p17 (clusters it)
-    // and p19; it is tiny (one row per near-dup pair), so persist from the
-    // FIRST access — the first consumer executes the pipeline anyway and
-    // later consumers reuse that execution instead of re-running it.
-    // Derived from the SCORED candidate table (not a private jaccardOf
-    // run) so the verification join over the shingle index executes once
-    // for the whole LSH family — p54's precision audit reads the same
-    // scored rows instead of re-joining the index (measured −4 s).
-    pairsCache.get(s, dir, () =>
+    shared("minhashPairs", s, dir)(
       sharedScoredPairs(s, dir)
         .select(col("id_a"), col("id_b"),
           (col("ni").cast("double") / (col("na") + col("nb") - col("ni"))).as("jac"))
@@ -439,16 +404,15 @@ object QueriesPipeline {
         expr("bit_xor(h)").as("checksum"))
   }
 
-  private val scoredPairsCache = new SharedPlanCache
   /** ALL band-candidate pairs with their shingle-intersection count and
     * doc sizes — the one pair-score table every LSH consumer derives
     * from: [[minhashPairs]] applies the ≥0.6 verification cut, p54 buckets
     * the full (pre-cut) distribution. Zero-intersection candidates are
     * KEPT (left join): the audit must see band collisions that share no
-    * shingle at all. One row per candidate pair → persist at first access.
+    * shingle at all. One row per candidate pair.
     */
   private[graft] def sharedScoredPairs(s: SparkSession, dir: String): DataFrame =
-    scoredPairsCache.get(s, dir, () => {
+    shared("scoredPairs", s, dir) {
       val sh = sharedShingleHashes(s, dir)
       // ONE aggregation pass over the index yields both the signatures
       // (→ band candidates) and the per-doc sizes — the sizes frame is a
@@ -462,8 +426,7 @@ object QueriesPipeline {
       // aggregate, the band self-join, the distinct) re-executed per
       // reference. localCheckpoint pins each to one execution — one row
       // per doc / per candidate pair, so the blocks are trivially small;
-      // they are released with the cache entry at the family boundary
-      // (releaseCheckpoints walks the plan for LogicalRDDs).
+      // releaseShared frees them at the family boundary.
       val sigN = minhashSigN(sh).localCheckpoint()
       val sizes = sigN.select(col("doc_id"), col("n"))
       val cand = bandCandidatesOfSig(sigN).localCheckpoint()
@@ -476,7 +439,7 @@ object QueriesPipeline {
         .join(sizes.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
         .join(sizes.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
         .select(col("id_a"), col("id_b"), col("ni"), col("na"), col("nb"))
-    })
+    }
 
   /** Distinct LSH band-collision candidate pairs (id_a < id_b) of a
     * (doc_id, h) shingle frame — the pre-verification half of
@@ -803,9 +766,9 @@ object QueriesPipeline {
   }
 
   private[graft] def materializedCorpusIndex(s: SparkSession, dir: String): CorpusIndex = {
-    // keyed on the documents table's stamp too: a fixture regenerated in
-    // place mid-JVM rebuilds the index instead of serving a stale one
-    val key = s"$dir:${Tables.pathStamp(s"$dir/documents.parquet")}"
+    // keyed on the corpus stamp too: a fixture regenerated in place
+    // mid-JVM rebuilds the index instead of serving a stale one
+    val key = s"$dir:${corpusStamp(dir)}"
     val root = corpusIndexDirs.computeIfAbsent(key, { _ =>
       val d = java.nio.file.Files.createTempDirectory("graft_corpus_idx_")
       val idx = corpusIndex(sharedShingleHashes(s, dir))

@@ -24,8 +24,13 @@ class HarnessSpec extends SparkTestBase {
     var ran = Seq.empty[String]
     val out = Harness.runEntries(spark, Seq("a1", "a2", "b1"), "harness-spec") { name =>
       ran :+= name
+      if (name == "a1") QueriesPipeline.sharedShingleSizes(spark, sfDir).count()
       if (name == "a2") sys.error("boom")
-      if (name == "b1") assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      if (name == "b1") {
+        assert(QueriesPipeline.sharedEntries == 0)
+        assert(spark.sharedState.cacheManager.isEmpty)
+        assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      }
       spark.range(1).toDF()
     }
     assert(ran == Seq("a1", "a2", "b1"))

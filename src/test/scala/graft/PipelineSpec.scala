@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.DataFrame
 
 /** Semantic contracts of the pipeline operators on the planted-duplicate
@@ -370,5 +372,32 @@ class PipelineSpec extends SparkTestBase {
     assert(shape(mat.sh) == shape(fresh.sh))
     assert(shape(mat.bands) == shape(fresh.bands))
     assert(shape(mat.sizes) == shape(fresh.sizes))
+  }
+
+  test("a corpus rewritten in place rebuilds the shared intermediates over its new rows") {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val tmp = Files.createTempDirectory("graft-stale-corpus")
+    try {
+      val dir = tmp.toString
+      for (n <- Seq("documents", "embeddings"))
+        Files.copy(java.nio.file.Paths.get(s"$sfDir/$n.parquet"), tmp.resolve(s"$n.parquet"))
+      def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+      val sizes = rows(QueriesPipeline.sharedShingleSizes(spark, dir))
+      // rewritten behind Spark's back, as a regenerated fixture is: Spark's
+      // own writer would refresh the caches over the path it writes
+      val next = tmp.resolve("next")
+      Tables.load(spark, sfDir, "documents").filter(col("doc_id") % 2 === 0)
+        .write.parquet(next.toString)
+      Files.delete(tmp.resolve("documents.parquet"))
+      Files.move(next, tmp.resolve("documents.parquet"))
+      // checkpointed, so no cached plan over the same path can serve it
+      val docs = Corpus.docs(spark, dir).localCheckpoint()
+      val wantSizes = rows(QueriesPipeline.shingleHashes(docs)
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
+      assert(wantSizes.nonEmpty && wantSizes.size < sizes.size)
+      // a stale entry served as is, or one rebuilt without unpersisting it
+      // first (Spark's cache matches the rebuilt plan to it), fails here
+      assert(rows(QueriesPipeline.sharedShingleSizes(spark, dir)) == wantSizes)
+    } finally graft.util.Fs.deleteRecursively(tmp)
   }
 }
