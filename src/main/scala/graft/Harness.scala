@@ -5,7 +5,7 @@ import java.lang.management.ManagementFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.state.GraftStateStoreHygiene
 
-import graft.util.Cleanup
+import graft.util.{Cleanup, Scratch}
 
 /** What the project's mains share: the session, the fixture directory, the
   * fixture warm-up, registry-entry selection and the entry loop. Each is
@@ -111,8 +111,9 @@ object Harness {
     * families) and stream residue, then drives ContextCleaner with a GC now
     * instead of inside a later entry's timed region. The logged
     * `pinnedRdds` is the number of RDDs still persisted after the release,
-    * and `swallowed` the JVM's count of release failures so far
-    * ([[Cleanup.swallowed]]). */
+    * `scratchMB` the disk the JVM's staged intermediates still hold
+    * ([[Scratch.bytes]]), and `swallowed` the JVM's count of release
+    * failures so far ([[Cleanup.swallowed]]). */
   private def reset(spark: SparkSession, what: String, log: String => Unit): Unit = {
     QueriesPipeline.releaseShared(spark)
     releaseStreams(spark)
@@ -125,6 +126,7 @@ object Harness {
     val rt = Runtime.getRuntime
     val usedMb = (rt.totalMemory - rt.freeMemory) / (1024 * 1024)
     log(f"reset $what heapMB=$usedMb gcN=$gcN gcSec=${gcMs / 1000.0}%.1f " +
-      s"pinnedRdds=${spark.sparkContext.getPersistentRDDs.size} swallowed=${Cleanup.swallowed}")
+      s"pinnedRdds=${spark.sparkContext.getPersistentRDDs.size} " +
+      f"scratchMB=${Scratch.bytes / 1048576.0}%.1f swallowed=${Cleanup.swallowed}")
   }
 }

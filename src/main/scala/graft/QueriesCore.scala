@@ -3220,52 +3220,38 @@ object QueriesCore {
   }
 
   /** Day-partitioned materialization of events (directory per day) — the
-    * event-log layout q106's dynamic partition pruning reads. Same JVM
-    * cache + pid-tagged name + shutdown cleanup as the bucketed tables.
+    * event-log layout q106's dynamic partition pruning reads. An external
+    * table over a [[graft.util.Scratch]] entry per (session, fixture): its
+    * catalog entry lives in the session, its files in the store, which
+    * rewrites it when `events` changes.
     */
-  private val dayPartCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]
-  private def dayPartitionedEvents(s: SparkSession, dir: String): String =
-    dayPartCache.computeIfAbsent((s, dir), { _ =>
-      val pid = ProcessHandle.current().pid()
-      val name = s"graft_day_events_${java.lang.Integer.toHexString(dir.hashCode)}_$pid"
+  private[graft] def dayPartitionedEvents(s: SparkSession, dir: String): String =
+    graft.util.Scratch.staged(("dayEvents", s, dir), Seq(s"$dir/events.parquet")) { d =>
+      val name = s"graft_day_events_${java.lang.Integer.toHexString(dir.hashCode)}"
       Tables.load(s, dir, "events")
         .withColumn("day", col("ts").cast("date"))
-        .write.mode("overwrite").format("parquet")
+        .write.mode("overwrite").format("parquet").option("path", d.toString)
         .partitionBy("day").saveAsTable(name)
-      val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-      sys.addShutdownHook {
-        graft.util.Fs.deleteRecursively(java.nio.file.Paths.get(wh, name))
-      }
       name
-    })
+    }
 
   /** Bucketed+sorted materializations of orders/lineitem on orderkey —
-    * the co-location ETL q104 joins over. One write per (session, fixture)
-    * per JVM (cached like the streaming staging dirs); table names embed
-    * the fixture hash AND the pid so concurrent processes sharing the
-    * default warehouse directory never collide. Data files are removed by
-    * a shutdown hook (the in-memory catalog's metadata dies with the JVM).
+    * the co-location ETL q104 joins over: external tables over one
+    * [[graft.util.Scratch]] entry per (session, fixture), written once and
+    * rewritten when `orders` or `lineitem` changes.
     */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (String, String)]
-  private def bucketedOrderTables(s: SparkSession, dir: String): (String, String) =
-    bucketedCache.computeIfAbsent((s, dir), { _ =>
-      val pid = ProcessHandle.current().pid()
-      val tag = java.lang.Integer.toHexString(dir.hashCode) + "_" + pid
+  private[graft] def bucketedOrderTables(s: SparkSession, dir: String): (String, String) =
+    graft.util.Scratch.staged(("bucketedOrders", s, dir),
+        Seq("orders", "lineitem").map(n => s"$dir/$n.parquet")) { d =>
+      val tag = java.lang.Integer.toHexString(dir.hashCode)
       val (ordT, liT) = (s"graft_buck_ord_$tag", s"graft_buck_li_$tag")
       Tables.load(s, dir, "orders")
-        .write.mode("overwrite").format("parquet")
+        .write.mode("overwrite").format("parquet").option("path", d.resolve("orders").toString)
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(ordT)
       Tables.load(s, dir, "lineitem")
-        .write.mode("overwrite").format("parquet")
+        .write.mode("overwrite").format("parquet").option("path", d.resolve("lineitem").toString)
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(liT)
-      val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-      sys.addShutdownHook {
-        Seq(ordT, liT).foreach(n => graft.util.Fs.deleteRecursively(
-          java.nio.file.Paths.get(wh, n)))
-      }
       (ordT, liT)
-    })
+    }
 
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions => GF, PolyHash}
-import graft.util.Cleanup
+import graft.util.{Cleanup, Scratch}
 import NamedQuery.{decAvg, sqlDecAvg}
 
 /** LLM-data-pipeline operator inventory: deduplication, similarity search,
@@ -135,12 +135,13 @@ object QueriesPipeline {
     * built and later readers reuse that execution. The 100 TB analogue is
     * a bucketed materialization that every downstream consumer reads.
     *
-    * An entry carries the [[corpusStamp]] it was built at, so a rewritten
-    * input rebuilds it. When a dir's stamp changes, every entry of that
-    * (session, dir) is unpersisted BEFORE any rebuild: Spark's CacheManager
-    * matches a new plan over the same path to an old cached one
-    * (`InMemoryFileIndex` equality compares root paths only) and would hand
-    * the rebuild, or any fresh plan of the same shape, the stale blocks.
+    * An entry carries the [[Tables.pathStamp]]s of [[corpusTables]] it was
+    * built at, so a rewritten input rebuilds it. When a dir's stamp
+    * changes, every entry of that (session, dir) is unpersisted BEFORE any
+    * rebuild: Spark's CacheManager matches a new plan over the same path
+    * to an old cached one (`InMemoryFileIndex` equality compares root paths
+    * only) and would hand the rebuild, or any fresh plan of the same shape,
+    * the stale blocks.
     * Spark refreshes that cache only for paths its own writer writes, not
     * for a fixture regenerated outside the JVM. Entries of stopped sessions
     * are dropped on access.
@@ -157,7 +158,7 @@ object QueriesPipeline {
 
   private def shared(name: String, s: SparkSession, dir: String)(
       build: => DataFrame): DataFrame = registry.synchronized {
-    val stamp = corpusStamp(dir)
+    val stamp = corpusTables(dir).map(Tables.pathStamp)
     registry.filterInPlace { case ((_, owner, d), (built, df)) =>
       if (owner.sparkContext.isStopped) false
       else if (owner == s && d == dir && built != stamp) {
@@ -171,9 +172,9 @@ object QueriesPipeline {
     }(_._2)
   }
 
-  /** The [[Tables.pathStamp]]s of the two fixture tables [[Corpus]] reads. */
-  private def corpusStamp(dir: String): Seq[(Long, Long)] =
-    Seq("documents", "embeddings").map(n => Tables.pathStamp(s"$dir/$n.parquet"))
+  /** The two fixture tables [[Corpus]] reads. */
+  private def corpusTables(dir: String): Seq[String] =
+    Seq("documents", "embeddings").map(n => s"$dir/$n.parquet")
 
   /** Number of live registry entries. */
   private[graft] def sharedEntries: Int = registry.synchronized(registry.size)
@@ -756,27 +757,18 @@ object QueriesPipeline {
     * bench pass measured a cost no production deployment pays (profiled:
     * ~3 s of s21's first micro-batch was index construction). The first
     * access pays the build+write; subsequent accesses (later bench passes)
-    * read parquet. Scratch lives under a createTempDirectory root (no
-    * cross-process collision) and a shutdown hook removes it.
+    * read parquet. The copy is a [[Scratch]] entry keyed on the fixture
+    * dir alone (it outlives sessions) over the two tables [[Corpus]]
+    * reads, so a fixture regenerated in place rebuilds it.
     */
-  private val corpusIndexDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]
-  sys.addShutdownHook {
-    corpusIndexDirs.values.forEach(p => graft.util.Fs.deleteRecursively(p))
-  }
-
   private[graft] def materializedCorpusIndex(s: SparkSession, dir: String): CorpusIndex = {
-    // keyed on the corpus stamp too: a fixture regenerated in place
-    // mid-JVM rebuilds the index instead of serving a stale one
-    val key = s"$dir:${corpusStamp(dir)}"
-    val root = corpusIndexDirs.computeIfAbsent(key, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_corpus_idx_")
+    val root = Scratch.staged(("corpusIndex", dir), corpusTables(dir)) { d =>
       val idx = corpusIndex(sharedShingleHashes(s, dir))
       idx.sh.write.mode("overwrite").parquet(d.resolve("sh").toString)
       idx.bands.write.mode("overwrite").parquet(d.resolve("bands").toString)
       idx.sizes.write.mode("overwrite").parquet(d.resolve("sizes").toString)
       d
-    })
+    }
     CorpusIndex(
       s.read.parquet(root.resolve("sh").toString),
       s.read.parquet(root.resolve("bands").toString),

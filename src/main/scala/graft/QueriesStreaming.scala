@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import NamedQuery.{decSum, sqlDecSum}
 import QueriesCore.withConfs
+import graft.util.Scratch
 
 /** Streaming-mode registry entries: each runs a REAL Structured Streaming
   * query (readStream → stateful aggregation → memory sink) to completion
@@ -85,22 +86,25 @@ object QueriesStreaming {
   private def sink(tag: String, dir: String): String =
     tag + "_" + java.lang.Integer.toHexString(dir.hashCode)
 
-  /** Raw parquet schema per (session, path), memoized (optimization r15):
-    * every streaming entry re-read parquet footers just to seed
-    * `readStream.schema(...)` with the file's RAW schema — repeated
-    * driver-side work over read-only fixture/staging paths (~30–60 ms per
-    * read). Plan-level only; the streamed data is still read from the
-    * files on every run. Used ONLY for stable paths (the fixture dir and
-    * the per-JVM shared staged dirs) — entries whose stage is a fresh
-    * createTempDirectory per invocation read directly (a memo entry for a
-    * single-use path is pure churn). Entries of stopped sessions are
-    * dropped on access.
+  /** Raw parquet schema per (session, path, [[Tables.pathStamp]]),
+    * memoized (optimization r15): every streaming entry re-read parquet
+    * footers just to seed `readStream.schema(...)` with the file's RAW
+    * schema — repeated driver-side work over fixture/staging paths
+    * (~30–60 ms per read).
+    * Plan-level only; the streamed data is still read from the files on
+    * every run. Used ONLY for stable paths (the fixture dir and the staged
+    * dirs) — entries whose stage is a fresh dir per invocation read
+    * directly (a memo entry for a single-use path is pure churn). The
+    * stamp is in the key because a fixture rewritten in place with the
+    * other `ts` vintage (see Tables.normalizeTs) must not stream with the
+    * old raw schema. Entries of stopped sessions are dropped on access.
     */
   private val rawSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]
+    (SparkSession, String, (Long, Long)), org.apache.spark.sql.types.StructType]
   private def rawSchema(s: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
     rawSchemaCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    rawSchemaCache.computeIfAbsent((s, path), _ => s.read.parquet(path).schema)
+    rawSchemaCache.computeIfAbsent((s, path, Tables.pathStamp(path)),
+      _ => s.read.parquet(path).schema)
   }
 
   /** Streaming read of the events fixture with the same ns→µs TIMESTAMP_NTZ
@@ -120,8 +124,8 @@ object QueriesStreaming {
       "ts")
   }
 
-  /** Stage the single-file events fixture as `chunks` time-ranged files in
-    * a scratch dir and run `body` over a file stream reading them one per
+  /** The single-file events fixture staged as `chunks` time-ranged files
+    * (chunk k = k-th time slice), for a file stream reading them one per
     * micro-batch — the chunked-backfill shape: each chunk is a time slice
     * arriving in order, so watermarks advance batch-by-batch and
     * append-mode eviction happens INCREMENTALLY (mid-run emission), not
@@ -131,28 +135,15 @@ object QueriesStreaming {
     * path really executes (the late-DROP path is pinned separately by
     * StreamingSpec's MemoryStream tests).
     *
-    * The staged dir is per-(fixture, chunks) and cached for the JVM's
-    * lifetime (s08/s10/s11 and repeated bench passes share one staging
-    * write); the path embeds a createTempDirectory component, so
-    * concurrent PROCESSES never collide, and a shutdown hook removes it.
-    * Read-only after creation — callers stream from it but never write.
-    */
-  private val stagedDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.nio.file.Path]
-  sys.addShutdownHook {
-    stagedDirs.values.forEach(p => graft.util.Fs.deleteRecursively(p))
-  }
-
-  /** The cached range-staged dir itself (chunk k = k-th time slice).
-    * [[withStagedEventsStream]] streams straight from it; the restart
+    * [[withStagedEventsStream]] streams straight from the dir; the restart
     * topologies (s33/s34) instead COPY its chunk files into a private live
-    * dir one phase at a time — sharing this cache means the staging write
-    * happens once per (fixture, chunks) per JVM, not once per entry per
-    * bench pass.
+    * dir one phase at a time. It is staged once per (fixture, chunks) in
+    * the JVM's [[Scratch]] store, shared by every entry and bench pass (a
+    * rewritten `events` restages). Read-only after creation — callers
+    * stream from it but never write.
     */
   private[graft] def stagedDir(s: SparkSession, dir: String, chunks: Int): java.nio.file.Path =
-    stagedDirs.computeIfAbsent((dir, chunks), { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_stage_")
+    Scratch.staged(("events", dir, chunks), Seq(s"$dir/events.parquet")) { d =>
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       s.read.parquet(s"$dir/events.parquet")
         .repartitionByRange(chunks, col("ts"))
@@ -169,7 +160,7 @@ object QueriesStreaming {
           java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
       d
-    })
+    }
 
   /** `filesPerTrigger` sizes the micro-batches: the default 1 gives one
     * batch per staged chunk; the heavier stateful topologies (s08, s14,
@@ -450,87 +441,86 @@ object QueriesStreaming {
     // invariant across micro-batch merge order; the FILE output is read
     // back as the query result, so the oracle gate checks the whole loop:
     // incremental state → partition-overwrite sink → re-read. Scratch dirs
-    // are per-invocation (createTempDirectory) and deleted after the
+    // are per-invocation (Scratch.withDir) and deleted after the
     // read-back is materialized, so concurrent runs can never clobber or
     // replay each other's output.
     NamedQuery("s08_stream_foreachbatch_sink",
       (s, dir) => withConfs(s, statePartitions(2)) {
-        val outDir = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
-            System.getProperty("java.io.tmpdir")), "graft_s08_out_")
-        try withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
-          // hopping 2-day windows on a 1-day slide (2 hops/row): the same
-          // window family as q53 with half the per-row fan-out — the sink
-          // loop is what s08 demonstrates; per-batch partition-commit cost
-          // scales with touched (window, type) dirs, so the slide is sized
-          // to keep the fixture's dir count proportionate (~155 dirs at
-          // sf0.1 — profiled: parquet writer INIT, not bytes, is the unit
-          // of sink cost at fixture scale, so dir count is the knob; the
-          // mechanism — update-mode changed groups, dynamic overwrite of
-          // exactly the touched (window, type) dirs across ≥2 micro-batches
-          // — is unchanged, and at 100 TB dirs hold MBs and init amortizes)
-          val agg = ev
-            .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
-            .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
-            // partition key as epoch seconds: directory-name-stable, and
-            // session is UTC-pinned so ntz→tz is the identity instant
-            .select(unix_timestamp(col("window.start").cast("timestamp")).as("w_sec"),
-              col("event_type"), col("n"), col("sum_value"))
-          // explicit function type: foreachBatch is overloaded (Scala
-          // function vs Java VoidFunction2) and a bare lambda is ambiguous.
-          // ONE action per trigger, no emptiness probe: the write is the
-          // only action, so the micro-batch plan executes exactly once —
-          // an UNGUARDED dynamic overwrite of an empty changed-group set
-          // touches zero partitions (no-op commit), so the empty-trigger
-          // case (AvailableNow's terminal catch-up batch on a quiet live
-          // stream) costs one empty job, cheaper than the persist +
-          // isEmpty probe every DATA trigger paid to skip it (profiled:
-          // the probe was a net loss at any batch:empty ratio ≥ 1).
-          val writeBatch: (DataFrame, Long) => Unit = (batch, _) =>
-            batch
-              // decouple WRITE parallelism from state sizing: the state
-              // shuffle runs at 4 partitions (sized to key count), so the
-              // sink would write ~80 one-file partition dirs from 4
-              // sequential tasks; parquet writer init is the unit of cost
-              // here and it parallelizes — spread groups over 16 writers
-              .repartition(16, col("w_sec"), col("event_type"))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              // commit-protocol trims, propagated per-write via
-              // newHadoopConfWithOptions: v2 commits task files straight
-              // to their final dirs (no sequential job-commit rename
-              // sweep over every touched partition), and the _SUCCESS
-              // marker is dead weight for a sink re-read each trigger
-              .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-              .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-              .option("compression", "none")
+        Scratch.withDir("graft_s08_out_", inMemory = true) { outDir =>
+          withStagedEventsStream(s, dir, 4, filesPerTrigger = 2) { ev =>
+            // hopping 2-day windows on a 1-day slide (2 hops/row): the same
+            // window family as q53 with half the per-row fan-out — the sink
+            // loop is what s08 demonstrates; per-batch partition-commit cost
+            // scales with touched (window, type) dirs, so the slide is sized
+            // to keep the fixture's dir count proportionate (~155 dirs at
+            // sf0.1 — profiled: parquet writer INIT, not bytes, is the unit
+            // of sink cost at fixture scale, so dir count is the knob; the
+            // mechanism — update-mode changed groups, dynamic overwrite of
+            // exactly the touched (window, type) dirs across ≥2 micro-batches
+            // — is unchanged, and at 100 TB dirs hold MBs and init amortizes)
+            val agg = ev
+              .groupBy(window(col("ts"), "2 days", "1 day"), col("event_type"))
+              .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
+              // partition key as epoch seconds: directory-name-stable, and
+              // session is UTC-pinned so ntz→tz is the identity instant
+              .select(unix_timestamp(col("window.start").cast("timestamp")).as("w_sec"),
+                col("event_type"), col("n"), col("sum_value"))
+            // explicit function type: foreachBatch is overloaded (Scala
+            // function vs Java VoidFunction2) and a bare lambda is ambiguous.
+            // ONE action per trigger, no emptiness probe: the write is the
+            // only action, so the micro-batch plan executes exactly once —
+            // an UNGUARDED dynamic overwrite of an empty changed-group set
+            // touches zero partitions (no-op commit), so the empty-trigger
+            // case (AvailableNow's terminal catch-up batch on a quiet live
+            // stream) costs one empty job, cheaper than the persist +
+            // isEmpty probe every DATA trigger paid to skip it (profiled:
+            // the probe was a net loss at any batch:empty ratio ≥ 1).
+            val writeBatch: (DataFrame, Long) => Unit = (batch, _) =>
+              batch
+                // decouple WRITE parallelism from state sizing: the state
+                // shuffle runs at 4 partitions (sized to key count), so the
+                // sink would write ~80 one-file partition dirs from 4
+                // sequential tasks; parquet writer init is the unit of cost
+                // here and it parallelizes — spread groups over 16 writers
+                .repartition(16, col("w_sec"), col("event_type"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                // commit-protocol trims, propagated per-write via
+                // newHadoopConfWithOptions: v2 commits task files straight
+                // to their final dirs (no sequential job-commit rename
+                // sweep over every touched partition), and the _SUCCESS
+                // marker is dead weight for a sink re-read each trigger
+                .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+                .option("compression", "none")
               
-              .partitionBy("w_sec", "event_type")
-              .parquet(outDir.toString)
-          val q = agg.writeStream.queryName(sink("s08", dir))
-            .outputMode("update").trigger(Trigger.AvailableNow())
-            .foreachBatch(writeBatch)
-            .start()
-          try require(q.awaitTermination(streamTimeoutMs), "stream s08 did not finish")
-          finally q.stop()
-          // materialize the read-back (localCheckpoint pins the rows in the
-          // block manager) so the scratch dirs can be deleted immediately.
-          // Explicit schema: the table spans ~300 one-row-group files, so
-          // letting the reader infer schema from footers adds a
-          // planning-time sweep over every file; the layout is ours
-          // (partition dirs w_sec/event_type over data cols n, sum_value)
-          val readSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("sum_value", org.apache.spark.sql.types.DoubleType),
-            org.apache.spark.sql.types.StructField("w_sec", org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType)))
-          s.read.schema(readSchema).parquet(outDir.toString)
-            .select(timestamp_seconds(col("w_sec").cast("long"))
-              .cast("timestamp_ntz").as("w_start"),
-              col("event_type"), col("n"), col("sum_value"))
-            .localCheckpoint()
-            .orderBy(col("w_start"), col("event_type"))
-        } finally graft.util.Fs.deleteRecursively(outDir)
+                .partitionBy("w_sec", "event_type")
+                .parquet(outDir.toString)
+            val q = agg.writeStream.queryName(sink("s08", dir))
+              .outputMode("update").trigger(Trigger.AvailableNow())
+              .foreachBatch(writeBatch)
+              .start()
+            try require(q.awaitTermination(streamTimeoutMs), "stream s08 did not finish")
+            finally q.stop()
+            // materialize the read-back (localCheckpoint pins the rows in the
+            // block manager) so the scratch dirs can be deleted immediately.
+            // Explicit schema: the table spans ~300 one-row-group files, so
+            // letting the reader infer schema from footers adds a
+            // planning-time sweep over every file; the layout is ours
+            // (partition dirs w_sec/event_type over data cols n, sum_value)
+            val readSchema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("sum_value", org.apache.spark.sql.types.DoubleType),
+              org.apache.spark.sql.types.StructField("w_sec", org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType)))
+            s.read.schema(readSchema).parquet(outDir.toString)
+              .select(timestamp_seconds(col("w_sec").cast("long"))
+                .cast("timestamp_ntz").as("w_start"),
+                col("event_type"), col("n"), col("sum_value"))
+              .localCheckpoint()
+              .orderBy(col("w_start"), col("event_type"))
+          }
+        }
       },
       Some(s"""WITH wins AS (
                SELECT event_type, value,
@@ -880,36 +870,37 @@ object QueriesStreaming {
     // backfill or a keyed table whose key space is the bound.
     NamedQuery("s15_stream_update_mode",
       (s, dir) => withConfs(s, statePartitions(4)) {
-        val outDir = java.nio.file.Files.createTempDirectory("graft_s15_out_")
-        try withStagedEventsStream(s, dir, 4) { ev =>
-          val agg = ev
-            .groupBy(window(col("ts"), "1 day"), col("event_type"))
-            .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
-            .select(col("window.start").cast("date").as("day"),
-              col("event_type"), col("n"), col("sum_value"))
-          val writeBatch: (DataFrame, Long) => Unit = (batch, bid) =>
-            batch.withColumn("batch_id", lit(bid))
-              .write.mode("append").parquet(outDir.toString)
-          val q = agg.writeStream.queryName(sink("s15", dir))
-            .outputMode("update").trigger(Trigger.AvailableNow())
-            .foreachBatch(writeBatch)
-            .start()
-          try require(q.awaitTermination(streamTimeoutMs), "stream s15 did not finish")
-          finally q.stop()
-          val updates = s.read.parquet(outDir.toString).localCheckpoint()
-          val finals = updates
-            .groupBy(col("day"), col("event_type"))
-            .agg(max_by(struct(col("n"), col("sum_value")), col("batch_id"))
-              .as("last"))
-            .select(col("day"), col("event_type"),
-              col("last.n").as("n"), col("last.sum_value").as("sum_value"))
-            .localCheckpoint()
-          val emitted = updates.count()
-          val keys = finals.count()
-          require(emitted < 1.5 * keys,
-            s"update mode re-emitted untouched keys: $emitted updates for $keys keys")
-          finals.orderBy(col("day"), col("event_type"))
-        } finally graft.util.Fs.deleteRecursively(outDir)
+        Scratch.withDir("graft_s15_out_") { outDir =>
+          withStagedEventsStream(s, dir, 4) { ev =>
+            val agg = ev
+              .groupBy(window(col("ts"), "1 day"), col("event_type"))
+              .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
+              .select(col("window.start").cast("date").as("day"),
+                col("event_type"), col("n"), col("sum_value"))
+            val writeBatch: (DataFrame, Long) => Unit = (batch, bid) =>
+              batch.withColumn("batch_id", lit(bid))
+                .write.mode("append").parquet(outDir.toString)
+            val q = agg.writeStream.queryName(sink("s15", dir))
+              .outputMode("update").trigger(Trigger.AvailableNow())
+              .foreachBatch(writeBatch)
+              .start()
+            try require(q.awaitTermination(streamTimeoutMs), "stream s15 did not finish")
+            finally q.stop()
+            val updates = s.read.parquet(outDir.toString).localCheckpoint()
+            val finals = updates
+              .groupBy(col("day"), col("event_type"))
+              .agg(max_by(struct(col("n"), col("sum_value")), col("batch_id"))
+                .as("last"))
+              .select(col("day"), col("event_type"),
+                col("last.n").as("n"), col("last.sum_value").as("sum_value"))
+              .localCheckpoint()
+            val emitted = updates.count()
+            val keys = finals.count()
+            require(emitted < 1.5 * keys,
+              s"update mode re-emitted untouched keys: $emitted updates for $keys keys")
+            finals.orderBy(col("day"), col("event_type"))
+          }
+        }
       },
       Some(s"""SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
              count(*) AS n, ${sqlDecSum("value")} AS sum_value
@@ -1173,9 +1164,8 @@ object QueriesStreaming {
     // runs as data lands, not as a nightly full-corpus job.
     NamedQuery("s21_stream_ingest_dedup",
       (s, dir) => withConfs(s, statePartitions(8)) {
-        val stage = java.nio.file.Files.createTempDirectory("graft_s21_stage_")
-        val outDir = java.nio.file.Files.createTempDirectory("graft_s21_out_")
-        try {
+        Scratch.withDir("graft_s21_") { root =>
+          val (stage, outDir) = (root.resolve("stage"), root.resolve("out"))
           val d = Tables.load(s, dir, "documents").select(col("doc_id"), col("text"))
           QueriesPipeline.syntheticIngestBatch(d)
             // 2 chunks: multi-batch ingest (verdicts accumulate across
@@ -1211,9 +1201,6 @@ object QueriesStreaming {
             idx.sh.unpersist(false); idx.bands.unpersist(false)
             idx.sizes.unpersist(false)
           }
-        } finally {
-          graft.util.Fs.deleteRecursively(stage)
-          graft.util.Fs.deleteRecursively(outDir)
         }
       },
       Some(QueriesPipeline.IncrementalDedupOracleSql)),
@@ -1231,8 +1218,7 @@ object QueriesStreaming {
     // query — the same slowly-changing-dim story as s13.
     NamedQuery("s22_stream_static_anti",
       (s, dir) => withConfs(s, statePartitions(4)) {
-        val stage = java.nio.file.Files.createTempDirectory("graft_s22_stage_")
-        try {
+        Scratch.withDir("graft_s22_stage_") { stage =>
           val pfx = concat_ws(" ",
             slice(graft.functions.GraftFunctions.tokens(col("text")), 1, 10))
           val docs = Tables.load(s, dir, "documents")
@@ -1249,7 +1235,7 @@ object QueriesStreaming {
             .select(col("doc_id"), col("lang"), col("n_chars"))
           runToTable(s, sink("s22", dir), clean, mode = "append")
             .orderBy(col("doc_id"))
-        } finally graft.util.Fs.deleteRecursively(stage)
+        }
       },
       Some("""WITH pref AS (
                SELECT doc_id, lang, n_chars, source,
@@ -1315,10 +1301,10 @@ object QueriesStreaming {
     NamedQuery("s24_stream_dead_letter",
       (s, dir) => withConfs(s, statePartitions(4)) {
         import s.implicits._
-        val stage = java.nio.file.Files.createTempDirectory("graft_s24_stage_")
-        val cleanDir = java.nio.file.Files.createTempDirectory("graft_s24_clean_")
-        val dlqDir = java.nio.file.Files.createTempDirectory("graft_s24_dlq_")
-        try {
+        Scratch.withDir("graft_s24_") { root =>
+          val stage = root.resolve("stage")
+          val cleanDir = root.resolve("clean")
+          val dlqDir = root.resolve("dlq")
           val bad = Seq((900001L, "{bad"), (900002L, "[1, 2"), (900003L, ""))
             .toDF("event_id", "props")
           Tables.load(s, dir, "events").select(col("event_id"), col("props"))
@@ -1360,10 +1346,6 @@ object QueriesStreaming {
             .groupBy(col("status"))
             .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"))
             .orderBy(col("status"))
-        } finally {
-          graft.util.Fs.deleteRecursively(stage)
-          graft.util.Fs.deleteRecursively(cleanDir)
-          graft.util.Fs.deleteRecursively(dlqDir)
         }
       },
       Some("""WITH raw AS (
@@ -1420,8 +1402,7 @@ object QueriesStreaming {
     NamedQuery("s26_stream_cdc_apply",
       (s, dir) => withConfs(s, statePartitions(4)) {
         import org.apache.spark.sql.expressions.Window
-        val target = java.nio.file.Files.createTempDirectory("graft_s26_target_")
-        try {
+        Scratch.withDir("graft_s26_target_") { target =>
           withStagedEventsStream(s, dir, 3, filesPerTrigger = 2) { evs =>
             @volatile var hasTarget = false
             val latest = Window.partitionBy(col("user_id"))
@@ -1452,7 +1433,7 @@ object QueriesStreaming {
               .select(col("user_id"), col("seq"), col("value").as("last_value"))
               .orderBy(col("user_id"))
           }
-        } finally graft.util.Fs.deleteRecursively(target)
+        }
       },
       Some("""WITH r AS (
                SELECT user_id, event_id, value, event_type,
@@ -1602,8 +1583,7 @@ object QueriesStreaming {
     NamedQuery("s30_stream_checkpoint_resume",
       (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
-        val root = Files.createTempDirectory("graft_s30_")
-        try {
+        Scratch.withDir("graft_s30_") { root =>
           val stageAll = root.resolve("all")
           val live = root.resolve("live")
           val ckpt = root.resolve("ckpt").toString
@@ -1646,7 +1626,7 @@ object QueriesStreaming {
             .groupBy(col("event_type")).agg(count(lit(1)).as("n_users"))
             .localCheckpoint()
             .orderBy(col("event_type"))
-        } finally graft.util.Fs.deleteRecursively(root)
+        }
       },
       Some("""SELECT event_type, count(*) AS n_users
              FROM (SELECT DISTINCT user_id, event_type FROM events)
@@ -1759,8 +1739,7 @@ object QueriesStreaming {
     NamedQuery("s33_stream_restart_overwrite",
       (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
-        val root = Files.createTempDirectory("graft_s33_")
-        try {
+        Scratch.withDir("graft_s33_") { root =>
           val stageAll = stagedDir(s, dir, 4) // shared JVM staging cache
           val live = root.resolve("live")
           val ckpt = root.resolve("ckpt").toString
@@ -1820,7 +1799,7 @@ object QueriesStreaming {
               col("event_type"), col("n"), col("sum_value"))
             .localCheckpoint()
             .orderBy(col("w_start"), col("event_type"))
-        } finally graft.util.Fs.deleteRecursively(root)
+        }
       },
       Some(s"""WITH wins AS (
                SELECT event_type, value,
@@ -1850,64 +1829,62 @@ object QueriesStreaming {
     NamedQuery("s34_jdbc_txn_sink",
       (s, dir) => withConfs(s, statePartitions(4)) {
         import java.nio.file.{Files, Paths}
-        val root = Files.createTempDirectory("graft_s34_")
-        val db = root.resolve("db").toString
-        try {
-          val stageAll = stagedDir(s, dir, 4) // shared JVM staging cache
-          val live = root.resolve("live")
-          val ckpt = root.resolve("ckpt").toString
-          Files.createDirectories(live)
-          val chunks = graft.util.Fs.listDir(stageAll)(
-            _.filter(_.toString.endsWith(".parquet")).map(_.toString))
-          def arm(n: Int): Unit = chunks.take(n).zipWithIndex.foreach {
-            case (f, i) =>
-              val dst = live.resolve(s"chunk$i.parquet")
-              if (!Files.exists(dst)) Files.copy(Paths.get(f), dst)
-              Files.setLastModifiedTime(dst, java.nio.file.attribute
-                .FileTime.fromMillis(1000000000000L + i * 60000L))
-          }
-          val url = s"jdbc:derby:$db;create=true"
-          graft.sources.JdbcTxnSink.init(url)
-          def runPhase(): Unit = {
-            val ev = Tables.normalizeTs(
-              s.readStream
-                .schema(rawSchema(s, stageAll.toString))
-                // 2 files/trigger — s33's reasoning: the restart contract
-                // under gate lives at the phase boundary, and the ledger
-                // skip/apply paths are exercised per batch either way
-                .option("maxFilesPerTrigger", "2")
-                .parquet(live.toString),
-              "ts")
-            val agg = ev
-              .withColumn("ts", col("ts").cast("timestamp"))
-              .withWatermark("ts", "1 hour")
-              .groupBy(window(col("ts"), "1 day"), col("event_type"))
-              .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
-              .select(unix_timestamp(col("window.start")).as("w_sec"),
-                col("event_type"), col("n"), col("sum_value"))
-            val q = agg.writeStream.queryName(sink("s34", dir)).option("checkpointLocation", ckpt)
-              .outputMode("update").trigger(Trigger.AvailableNow())
-              .foreachBatch((batch: DataFrame, bid: Long) =>
-                graft.sources.JdbcTxnSink.upsertBatch(url, batch, bid))
-              .start()
-            try require(q.awaitTermination(streamTimeoutMs), "stream s34 did not finish")
-            finally q.stop()
-          }
-          arm(2); runPhase() // phase 1: first half of history
-          arm(4); runPhase() // fresh instance resumes from the checkpoint
-          s.read.format("jdbc")
-            .option("url", url)
-            .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-            .option("dbtable", "APP.AGG").load()
-            .select(timestamp_seconds(col("W_SEC"))
-              .cast("timestamp_ntz").as("w_start"),
-              col("EVENT_TYPE").as("event_type"), col("N").as("n"),
-              col("SUM_VALUE").as("sum_value"))
-            .localCheckpoint()
-            .orderBy(col("w_start"), col("event_type"))
-        } finally {
-          graft.sources.JdbcTxnSink.shutdown(db)
-          graft.util.Fs.deleteRecursively(root)
+        Scratch.withDir("graft_s34_") { root =>
+          val db = root.resolve("db").toString
+          try {
+            val stageAll = stagedDir(s, dir, 4) // shared JVM staging cache
+            val live = root.resolve("live")
+            val ckpt = root.resolve("ckpt").toString
+            Files.createDirectories(live)
+            val chunks = graft.util.Fs.listDir(stageAll)(
+              _.filter(_.toString.endsWith(".parquet")).map(_.toString))
+            def arm(n: Int): Unit = chunks.take(n).zipWithIndex.foreach {
+              case (f, i) =>
+                val dst = live.resolve(s"chunk$i.parquet")
+                if (!Files.exists(dst)) Files.copy(Paths.get(f), dst)
+                Files.setLastModifiedTime(dst, java.nio.file.attribute
+                  .FileTime.fromMillis(1000000000000L + i * 60000L))
+            }
+            val url = s"jdbc:derby:$db;create=true"
+            graft.sources.JdbcTxnSink.init(url)
+            def runPhase(): Unit = {
+              val ev = Tables.normalizeTs(
+                s.readStream
+                  .schema(rawSchema(s, stageAll.toString))
+                  // 2 files/trigger — s33's reasoning: the restart contract
+                  // under gate lives at the phase boundary, and the ledger
+                  // skip/apply paths are exercised per batch either way
+                  .option("maxFilesPerTrigger", "2")
+                  .parquet(live.toString),
+                "ts")
+              val agg = ev
+                .withColumn("ts", col("ts").cast("timestamp"))
+                .withWatermark("ts", "1 hour")
+                .groupBy(window(col("ts"), "1 day"), col("event_type"))
+                .agg(count(lit(1)).as("n"), decSum(col("value")).as("sum_value"))
+                .select(unix_timestamp(col("window.start")).as("w_sec"),
+                  col("event_type"), col("n"), col("sum_value"))
+              val q = agg.writeStream.queryName(sink("s34", dir)).option("checkpointLocation", ckpt)
+                .outputMode("update").trigger(Trigger.AvailableNow())
+                .foreachBatch((batch: DataFrame, bid: Long) =>
+                  graft.sources.JdbcTxnSink.upsertBatch(url, batch, bid))
+                .start()
+              try require(q.awaitTermination(streamTimeoutMs), "stream s34 did not finish")
+              finally q.stop()
+            }
+            arm(2); runPhase() // phase 1: first half of history
+            arm(4); runPhase() // fresh instance resumes from the checkpoint
+            s.read.format("jdbc")
+              .option("url", url)
+              .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+              .option("dbtable", "APP.AGG").load()
+              .select(timestamp_seconds(col("W_SEC"))
+                .cast("timestamp_ntz").as("w_start"),
+                col("EVENT_TYPE").as("event_type"), col("N").as("n"),
+                col("SUM_VALUE").as("sum_value"))
+              .localCheckpoint()
+              .orderBy(col("w_start"), col("event_type"))
+          } finally graft.sources.JdbcTxnSink.shutdown(db)
         }
       },
       Some(s"""SELECT TIMESTAMP '1970-01-01 00:00:00' +
@@ -1930,8 +1907,7 @@ object QueriesStreaming {
     // ledger that p68 audits after the fact.
     NamedQuery("s35_stream_bucket_manifest",
       (s, dir) => withConfs(s, statePartitions(4)) {
-        val stage = java.nio.file.Files.createTempDirectory("graft_s35_stage_")
-        try {
+        Scratch.withDir("graft_s35_stage_") { stage =>
           Tables.load(s, dir, "documents")
             .select(col("doc_id"), col("n_chars"), col("text"))
             .repartitionByRange(4, col("doc_id"))
@@ -1950,7 +1926,7 @@ object QueriesStreaming {
               expr("bit_xor(h)").as("checksum"))
           runToTable(s, sink("s35", dir), agg)
             .orderBy(col("bucket"))
-        } finally graft.util.Fs.deleteRecursively(stage)
+        }
       },
       Some(s"""SELECT doc_id // 100 AS bucket, count(*) AS n_docs,
                     sum(n_chars)::BIGINT AS chars,

@@ -13,6 +13,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, MapState,
 import scala.collection.mutable
 import scala.util.Random
 
+import graft.util.Scratch
+
 /** Differential STREAMING fuzzer (verdict r10 #4, extended r12 per verdict
   * r11 #1): generate randomized stateful micro-batch topologies — window
   * type × watermark delay × key × dedup × restart point, PLUS stream-stream
@@ -812,19 +814,6 @@ object StreamFuzz {
     }
   }
 
-  /** I-thin re-staged post-cut file lists, keyed by the staging geometry
-    * (one restage per (fixture, geometry) per JVM, like
-    * QueriesStreaming.stagedDirs); dirs are deleted at JVM exit.
-    */
-  private val thinStaged = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Long), Seq[String]]()
-  private val thinDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  sys.addShutdownHook {
-    thinDirs.forEach(p => graft.util.Fs.deleteRecursively(p))
-  }
-
   /** Pre/post split of a boot plan's staged chunk files, plus the exact
     * cut time (min event ms of the post half — range staging puts every
     * row of a ts value in one chunk, so the boundary is exact). Shared by
@@ -839,7 +828,9 @@ object StreamFuzz {
     * staging, so the re-stage must not normalize columns). Band ranges
     * all precede tail ranges and `Fs.listDir` sorts within each dir, so
     * the concatenated list is still in event-time order and the cut time
-    * (min ts of the post half) is unchanged.
+    * (min ts of the post half) is unchanged. The re-stage is a [[Scratch]]
+    * entry per (fixture, staging geometry), written once per JVM like the
+    * coarse staging it splits.
     */
   private def bootSplit(s: SparkSession, dir: String, plan: Plan, bt: Boot)
       : (Seq[String], Seq[String], Long) = {
@@ -851,10 +842,8 @@ object StreamFuzz {
       .agg(min(unix_millis(col("ts").cast("timestamp")))).first().getLong(0)
     val post =
       if (bt.bandSlices == 0) post0
-      else thinStaged.computeIfAbsent(
-        (dir, plan.chunks, bt.cutIdx, bt.bandSlices, bt.gapMs), { _ =>
-          val d = java.nio.file.Files.createTempDirectory("graft_fuzz_thin_")
-          thinDirs.add(d)
+      else Scratch.staged(("thin", dir, plan.chunks, bt.cutIdx, bt.bandSlices, bt.gapMs),
+          Seq(s"$dir/events.parquet")) { d =>
           val raw = s.read.parquet(post0: _*)
           // raw ts is LONG nanos (the fixture's physical type under
           // nanosAsLong) or a native timestamp — derive epoch-ms the same
@@ -874,7 +863,7 @@ object StreamFuzz {
           def part(sub: String) = graft.util.Fs.listDir(d.resolve(sub))(
             _.filter(_.toString.endsWith(".parquet")).map(_.toString))
           part("band") ++ part("tail")
-        })
+        }
     (pre, post, cutMs)
   }
 
@@ -922,69 +911,67 @@ object StreamFuzz {
     }
     val provider = plan.provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
     QueriesCore.withConfs(s, provider.toSeq: _*) {
-      val cp = java.nio.file.Files.createTempDirectory("graft_fuzz_cp_")
-      try {
-        val files = graft.util.Fs.listDir(stage)(
-          _.filter(_.toString.endsWith(".parquet")).map(_.toString))
-        // copy `srcFiles` progressively into `live` with staggered mtimes
-        // (FileStreamSource orders by modification time — stagedDir's note)
-        def copyUpTo(live: java.nio.file.Path, srcFiles: Seq[String])(n: Int): Unit =
-          srcFiles.take(n).zipWithIndex.foreach { case (f, i) =>
-            val src = java.nio.file.Paths.get(f)
-            val dst = live.resolve(src.getFileName)
-            if (!java.nio.file.Files.exists(dst)) {
-              java.nio.file.Files.copy(src, dst)
-              java.nio.file.Files.setLastModifiedTime(dst,
-                java.nio.file.attribute.FileTime.fromMillis(
-                  1000000000000L + i * 60000L))
+      Scratch.withDir("graft_fuzz_") { root =>
+        val cp = root.resolve("cp")
+        try {
+          val files = graft.util.Fs.listDir(stage)(
+            _.filter(_.toString.endsWith(".parquet")).map(_.toString))
+          // copy `srcFiles` progressively into `live` with staggered mtimes
+          // (FileStreamSource orders by modification time — stagedDir's note)
+          def copyUpTo(live: java.nio.file.Path, srcFiles: Seq[String])(n: Int): Unit =
+            srcFiles.take(n).zipWithIndex.foreach { case (f, i) =>
+              val src = java.nio.file.Paths.get(f)
+              val dst = live.resolve(src.getFileName)
+              if (!java.nio.file.Files.exists(dst)) {
+                java.nio.file.Files.copy(src, dst)
+                java.nio.file.Files.setLastModifiedTime(dst,
+                  java.nio.file.attribute.FileTime.fromMillis(
+                    1000000000000L + i * 60000L))
+              }
             }
-          }
-        val extra: Seq[Row] = plan.boot match {
-          case None =>
-            if (plan.restartAt == 0) run(stage.toString, cp.toString)
-            else {
-              val live = java.nio.file.Files.createTempDirectory("graft_fuzz_live_")
-              try {
+          val extra: Seq[Row] = plan.boot match {
+            case None =>
+              if (plan.restartAt == 0) run(stage.toString, cp.toString)
+              else {
+                val live = java.nio.file.Files.createDirectory(root.resolve("live"))
                 val arm = copyUpTo(live, files) _
                 arm(plan.restartAt)
                 run(live.toString, cp.toString)
                 arm(files.size)
                 run(live.toString, cp.toString)
-              } finally graft.util.Fs.deleteRecursively(live)
-            }
-            Nil
-          case Some(bt) =>
-            // family I: batch-compute the pre-cut sessions, seed the open
-            // ones, stream the post-cut files only; the CLOSED pre-cut
-            // sessions join the stream's emissions driver-side (exact by
-            // construction — see Boot's scaladoc). SPARK_GRAFT_FUZZ_MUTATE
-            // wires the deliberate seam mutations: M1 seed_halfgap shrinks
-            // the openness horizon to gap/2 (a truly-open spanning session
-            // is wrongly closed and fragments away from its post-cut
-            // continuation), M2 seed_double_emit emits every seeded-open
-            // session ALSO as a closed row; M3 seed_no_timer and M4
-            // seed_stale_timer are handled in the processor (seededStream
-            // routes them). The knob must only ever be set for kill runs,
-            // never in the standing gate; main() rejects unknown values up
-            // front (r14 ADVICE — a typo'd knob silently ran unmutated and
-            // read as "mutation not killed").
-            import s.implicits._
-            val (pre, post, cutMs) = bootSplit(s, dir, plan, bt)
-            val preDf = Tables.normalizeTs(s.read.parquet(pre: _*), "ts")
-              .withColumn("ts", col("ts").cast("timestamp"))
-            val mutate = sys.env.getOrElse("SPARK_GRAFT_FUZZ_MUTATE", "")
-            val horizonMs = if (mutate == "seed_halfgap") bt.gapMs / 2 else bt.gapMs
-            val sess = sessTwin(bt.gapMs, bt.bucket)(preDf)
-            val openCond = col("e") + horizonMs >= cutMs
-            val closedRows =
-              (if (mutate == "seed_double_emit") sess else sess.filter(!openCond))
-                .collect().toIndexedSeq
-            val seeds = sess.filter(openCond)
-              .as[(Long, Long, Long, Long, Long)]
-              .map { case (k, st, en, n, se) => (k, FzSess(st, en, n, se)) }
-              .groupByKey(_._1).mapValues(_._2)
-            val live = java.nio.file.Files.createTempDirectory("graft_fuzz_boot_")
-            try {
+              }
+              Nil
+            case Some(bt) =>
+              // family I: batch-compute the pre-cut sessions, seed the open
+              // ones, stream the post-cut files only; the CLOSED pre-cut
+              // sessions join the stream's emissions driver-side (exact by
+              // construction — see Boot's scaladoc). SPARK_GRAFT_FUZZ_MUTATE
+              // wires the deliberate seam mutations: M1 seed_halfgap shrinks
+              // the openness horizon to gap/2 (a truly-open spanning session
+              // is wrongly closed and fragments away from its post-cut
+              // continuation), M2 seed_double_emit emits every seeded-open
+              // session ALSO as a closed row; M3 seed_no_timer and M4
+              // seed_stale_timer are handled in the processor (seededStream
+              // routes them). The knob must only ever be set for kill runs,
+              // never in the standing gate; main() rejects unknown values up
+              // front (r14 ADVICE — a typo'd knob silently ran unmutated and
+              // read as "mutation not killed").
+              import s.implicits._
+              val (pre, post, cutMs) = bootSplit(s, dir, plan, bt)
+              val preDf = Tables.normalizeTs(s.read.parquet(pre: _*), "ts")
+                .withColumn("ts", col("ts").cast("timestamp"))
+              val mutate = sys.env.getOrElse("SPARK_GRAFT_FUZZ_MUTATE", "")
+              val horizonMs = if (mutate == "seed_halfgap") bt.gapMs / 2 else bt.gapMs
+              val sess = sessTwin(bt.gapMs, bt.bucket)(preDf)
+              val openCond = col("e") + horizonMs >= cutMs
+              val closedRows =
+                (if (mutate == "seed_double_emit") sess else sess.filter(!openCond))
+                  .collect().toIndexedSeq
+              val seeds = sess.filter(openCond)
+                .as[(Long, Long, Long, Long, Long)]
+                .map { case (k, st, en, n, se) => (k, FzSess(st, en, n, se)) }
+                .groupByKey(_._1).mapValues(_._2)
+              val live = java.nio.file.Files.createDirectory(root.resolve("live"))
               val arm = copyUpTo(live, post) _
               val mk: DataFrame => DataFrame = ev => bt.stream(ev, seeds)
               if (plan.restartAt == 0) {
@@ -996,17 +983,16 @@ object StreamFuzz {
                 arm(post.size)
                 run(live.toString, cp.toString, mk)
               }
-            } finally graft.util.Fs.deleteRecursively(live)
-            closedRows
+              closedRows
+          }
+          extra ++ collected.synchronized(collected.values.flatten.toSeq)
+        } finally {
+          // stop state-store maintenance and close providers BEFORE the
+          // checkpoint dir is deleted — same post-stop compaction race as
+          // the trigger-regime gate (verdict r13 #3)
+          org.apache.spark.sql.execution.streaming.state
+            .GraftStateStoreHygiene.quiesce()
         }
-        extra ++ collected.synchronized(collected.values.flatten.toSeq)
-      } finally {
-        // stop state-store maintenance and close providers BEFORE deleting
-        // the checkpoint dir — same post-stop compaction race as the
-        // trigger-regime gate (verdict r13 #3)
-        org.apache.spark.sql.execution.streaming.state
-          .GraftStateStoreHygiene.quiesce()
-        graft.util.Fs.deleteRecursively(cp)
       }
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import QueriesCore.withConfs
+import graft.util.Scratch
 
 /** Many-trigger regime gate (verdict r11 #2). Every standing streaming
   * measurement runs 3–6 AvailableNow chunks, so a per-trigger O(state)
@@ -287,8 +288,7 @@ object StreamTriggerRegime {
           (u, graft.streaming.EventStreams.SessionBuf(sms, ems, nn, tot)) }
         .groupByKey(_._1).mapValues(_._2)
       import java.nio.file.{Files, Paths}
-      val live = Files.createTempDirectory("graft_trigreg_seed_")
-      try {
+      Scratch.withDir("graft_trigreg_seed_") { live =>
         post.zipWithIndex.foreach { case (f, i) =>
           val src = Paths.get(f)
           val dst = live.resolve(src.getFileName)
@@ -304,7 +304,7 @@ object StreamTriggerRegime {
             .sessionizeV2Seeded(postEv, seed, gapMs = gapMs, watermark = "1 hour")
             .toDF(),
           "append")
-      } finally graft.util.Fs.deleteRecursively(live)
+      }
     }
 
     // s23 shape: ListState bounded top-k + ValueState counter,
@@ -330,8 +330,7 @@ object StreamTriggerRegime {
     // staged fixture, which a TR_ONLY subset must not pay)
     if (selected("tr_s30_resume")) withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       import java.nio.file.{Files, Paths}
-      val root = Files.createTempDirectory("graft_trigreg_")
-      try {
+      Scratch.withDir("graft_trigreg_") { root =>
         val live = root.resolve("live")
         Files.createDirectories(live)
         val files = graft.util.Fs.listDir(stage)(
@@ -352,7 +351,7 @@ object StreamTriggerRegime {
           "update", cp = Some(root.resolve("ckpt").toString))
         arm(files.size / 2); phase()
         arm(files.size); phase()
-      } finally graft.util.Fs.deleteRecursively(root)
+      }
     }
 
     spark.stop()
