@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 import graft.catalog.{InMemoryMetastore, Metastore, SchemaField, SystemColumns}
@@ -26,14 +28,15 @@ final class GraftEngine(
     * (`KafkaMetadata.java:165-167`; SURVEY.md §1.2).
     */
   def table(project: String, collection: String): DataFrame =
-    tableWithSystemColumns(project, collection)
-      .drop(SystemColumns.Offset, SystemColumns.Project, SystemColumns.Collection)
+    userView(project, collection, userSchema(project, collection))
 
   /** Table including `_offset`/`project`/`collection`. */
-  def tableWithSystemColumns(project: String, collection: String): DataFrame = {
-    val schema = userSchema(project, collection)
+  def tableWithSystemColumns(project: String, collection: String): DataFrame =
+    source.read(spark, project, collection, userSchema(project, collection))
+
+  private def userView(project: String, collection: String, schema: StructType): DataFrame =
     source.read(spark, project, collection, schema)
-  }
+      .drop(SystemColumns.Offset, SystemColumns.Project, SystemColumns.Collection)
 
   private def userSchema(project: String, collection: String): StructType =
     metastore.schemaOf(project, collection).getOrElse(
@@ -48,81 +51,35 @@ final class GraftEngine(
     table(project, collection)
       .createOrReplaceTempView(SystemColumns.topicFor(project, collection))
 
-  /** Generation at which [[sql]] last registered views; None = never (or
-    * the metastore can't track generations — negative — so always refresh).
-    */
-  @volatile private var registeredGeneration: Option[Long] = None
-
-  /** Collections whose registration failed at [[registeredGeneration]] —
-    * retried (alone) on each call so a transient failure heals without
-    * paying the full O(#collections) walk, and a PERMANENT failure
-    * doesn't disable the cache for everyone else.
-    */
-  @volatile private var failedRegistrations: Set[(String, String)] = Set.empty
-
-  /** Register every collection the metastore lists and run a SQL query over
-    * the `<project>_<collection>` views — discovery-driven, which the
-    * reference could never do (its listTables was empty by design,
-    * `KafkaMetadata.java:69-74,91-97`; SURVEY.md §4 known bugs).
+  /** Run a SQL query over the `<project>_<collection>` views, resolving only
+    * the tables it names, when it names them — as the reference resolved a
+    * table when Presto asked for it (`KafkaMetadata.java:155-175`).
     *
-    * Registration is CACHED on [[Metastore.generation]]: with thousands of
-    * collections, re-resolving every schema per query is O(#collections)
-    * driver latency — when the generation is unchanged the previous temp
-    * views are still exact, so the query planning starts immediately (only
-    * previously-FAILED collections are retried, see
-    * [[failedRegistrations]]).
+    * Every single-part relation name in the parsed query, its subqueries
+    * and its CTE bodies, lower-cased as the case-insensitive session does,
+    * is tried at each underscore as `(project, collection)`
+    * ([[SystemColumns.topicSplits]]). One hit is registered again on this call,
+    * so a schema change is always seen; several hits throw, naming each
+    * candidate; none leaves the name to Spark (a user view, table or CTE).
+    * Metastore work per query therefore follows the names the query uses,
+    * not the size of the registry.
     */
   def sql(query: String): DataFrame = {
-    // lock-free fast path for the common steady state; anything that
-    // MUTATES the cache state runs under the lock (with the generation
-    // re-read inside) so a concurrent DDL-triggered full walk and a
-    // failed-subset retry can't interleave their read-modify-writes and
-    // lose a failure that then would never be retried
-    val gen = metastore.generation
-    if (!(gen >= 0 && registeredGeneration.contains(gen)) ||
-        failedRegistrations.nonEmpty) {
-      this.synchronized {
-        val g = metastore.generation
-        if (g >= 0 && registeredGeneration.contains(g)) {
-          if (failedRegistrations.nonEmpty) {
-            failedRegistrations =
-              failedRegistrations.filterNot { case (p, c) => tryRegister(p, c) }
-          }
-        } else {
-          val all = for {
-            p <- metastore.listProjects
-            c <- metastore.listCollections(p)
-          } yield (p, c)
-          // topic naming is ambiguous under underscores (a.b_c and a_b.c
-          // both map to view a_b_c) — skip ONLY the colliding group (silent
-          // shadowing would return wrong data; failing everything would
-          // take down queries that never touch the ambiguous name, same
-          // principle as the stale-entry branch below)
-          val byView = all.groupBy { case (p, c) => SystemColumns.topicFor(p, c) }
-          byView.filter(_._2.size > 1).foreach { case (view, colls) =>
-            logWarning(s"skipping ambiguous view $view (collides: $colls)")
-          }
-          failedRegistrations = byView.filter(_._2.size == 1).values.flatten
-            .filterNot { case (p, c) => tryRegister(p, c) }.toSet
-          registeredGeneration = if (g >= 0) Some(g) else None
+    GraftEngine.relationNames(spark.sessionState.sqlParser.parsePlan(query))
+      .map(_.toLowerCase(java.util.Locale.ROOT)).distinct
+      .foreach { name =>
+        val hits = SystemColumns.topicSplits(name).flatMap { case (p, c) =>
+          metastore.schemaOf(p, c).map((p, c, _))
+        }
+        hits match {
+          case Seq() => ()
+          case Seq((p, c, schema)) => userView(p, c, schema).createOrReplaceTempView(name)
+          case _ => throw new IllegalArgumentException(s"table $name is ambiguous: it names " +
+            hits.map { case (p, c, _) => s"$p.$c" }.mkString(" and "))
         }
       }
-    }
     spark.sql(query)
   }
-
-  /** True if registered; a stale metastore entry (missing backing data)
-    * must not take down queries that never touch it.
-    */
-  private def tryRegister(p: String, c: String): Boolean =
-    try { register(p, c); true }
-    catch { case e: Exception =>
-      logWarning(s"skipping unreadable collection $p.$c: ${e.getMessage}")
-      false
-    }
-
-  private def logWarning(msg: String): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).warn(msg)
 
   /** Offset-windowed scan — the reference's core query shape (`SELECT …
     * WHERE _offset …`, C3): the table with system columns, filtered by
@@ -137,6 +94,17 @@ final class GraftEngine(
 }
 
 object GraftEngine {
+
+  /** Single-part relation names in `plan`, its expression subqueries and
+    * its CTE bodies (an `UnresolvedWith`'s inner children).
+    */
+  private def relationNames(plan: LogicalPlan): Seq[String] =
+    plan.flatMap {
+      case r: UnresolvedRelation =>
+        r.multipartIdentifier match { case Seq(name) => Seq(name); case _ => Nil }
+      case p =>
+        (p.subqueries ++ p.innerChildren.collect { case c: LogicalPlan => c }).flatMap(relationNames)
+    }
 
   /** Engine over the driver-generated parquet fixtures: derives each
     * collection's metastore schema from the parquet footer (the dynamic,

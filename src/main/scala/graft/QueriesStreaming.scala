@@ -86,6 +86,31 @@ object QueriesStreaming {
   private def sink(tag: String, dir: String): String =
     tag + "_" + java.lang.Integer.toHexString(dir.hashCode)
 
+  /** A metastore-mode catalog over a 2-partition FakeKafka topic holding
+    * `tpch.events(user_id, event_type)` in `codec`, with the FakeKafka
+    * options `fake`; returns the catalog's name. The name and the metastore
+    * dir derive from the entry and the fixture dir, because Spark keeps one
+    * catalog instance per name and session.
+    */
+  private def fakeKafkaCatalog(s: SparkSession, entry: String, dir: String, codec: String,
+                               fake: (String, String)*): String = {
+    val tag = java.util.UUID
+      .nameUUIDFromBytes(s"$entry:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .toString.replace("-", "").take(12)
+    val cat = s"graftstream_$tag"
+    val msDir = s"/tmp/graft_ms_$tag"
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    new graft.catalog.FileMetastore(msDir).createCollection("tpch", "events",
+      graft.catalog.SchemaField.fromStructType(StructType(Seq(
+        StructField("user_id", LongType), StructField("event_type", StringType)))))
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftTableCatalog")
+    (Seq("metastore" -> msDir, "source" -> "kafka", "bootstrap" -> "fake:9092", "codec" -> codec,
+        "sourceFormat" -> "graft.sources.FakeKafka", "sourcePartitions" -> "2") ++
+      (("partitions" -> "2") +: fake).map { case (k, v) => s"source.option.fake.$k" -> v })
+      .foreach { case (k, v) => s.conf.set(s"spark.sql.catalog.$cat.$k", v) }
+    cat
+  }
+
   /** Raw parquet schema per (session, path, [[Tables.pathStamp]]),
     * memoized (optimization r15): every streaming entry re-read parquet
     * footers just to seed `readStream.schema(...)` with the file's RAW
@@ -549,29 +574,8 @@ object QueriesStreaming {
     // oracle with generate_series.
     NamedQuery("s09_stream_dsv2_microbatch",
       (s, dir) => withConfs(s, statePartitions(4)) {
-        val tag = java.util.UUID
-          .nameUUIDFromBytes(s"s09:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .toString.replace("-", "").take(12)
-        val cat = s"graftstream_$tag"
-        val msDir = s"/tmp/graft_ms_$tag"
-        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("event_type", StringType)))
-        new graft.catalog.FileMetastore(msDir).createCollection("tpch", "events",
-          graft.catalog.SchemaField.fromStructType(schema))
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftTableCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.metastore", msDir)
-        s.conf.set(s"spark.sql.catalog.$cat.source", "kafka")
-        s.conf.set(s"spark.sql.catalog.$cat.bootstrap", "fake:9092")
-        s.conf.set(s"spark.sql.catalog.$cat.codec", "json")
-        s.conf.set(s"spark.sql.catalog.$cat.sourceFormat", "graft.sources.FakeKafka")
-        s.conf.set(s"spark.sql.catalog.$cat.sourcePartitions", "2")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.partitions", "2")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.latest", "1500")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.advancePerBatch", "1500")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.maxLatest", "6000")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.corruptEvery", "400")
+        val cat = fakeKafkaCatalog(s, "s09", dir, "json", "latest" -> "1500",
+          "advancePerBatch" -> "1500", "maxLatest" -> "6000", "corruptEvery" -> "400")
         val agg = s.readStream.table(s"$cat.tpch.events")
           .filter(col("_offset") >= 500 && col("_offset") < 5500)
           .groupBy(col("event_type"))
@@ -691,28 +695,8 @@ object QueriesStreaming {
     // `_offset` window filter evaluates on the decoded stream.
     NamedQuery("s12_stream_dsv2_avro",
       (s, dir) => withConfs(s, statePartitions(4)) {
-        val tag = java.util.UUID
-          .nameUUIDFromBytes(s"s12:$dir".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .toString.replace("-", "").take(12)
-        val cat = s"graftstream_$tag"
-        val msDir = s"/tmp/graft_ms_$tag"
-        import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("user_id", LongType),
-          StructField("event_type", StringType)))
-        new graft.catalog.FileMetastore(msDir).createCollection("tpch", "events",
-          graft.catalog.SchemaField.fromStructType(schema))
-        s.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.GraftTableCatalog")
-        s.conf.set(s"spark.sql.catalog.$cat.metastore", msDir)
-        s.conf.set(s"spark.sql.catalog.$cat.source", "kafka")
-        s.conf.set(s"spark.sql.catalog.$cat.bootstrap", "fake:9092")
-        s.conf.set(s"spark.sql.catalog.$cat.codec", "avro")
-        s.conf.set(s"spark.sql.catalog.$cat.sourceFormat", "graft.sources.FakeKafka")
-        s.conf.set(s"spark.sql.catalog.$cat.sourcePartitions", "2")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.partitions", "2")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.latest", "4000")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.corruptEvery", "300")
-        s.conf.set(s"spark.sql.catalog.$cat.source.option.fake.payload", "avro")
+        val cat = fakeKafkaCatalog(s, "s12", dir, "avro", "latest" -> "4000",
+          "corruptEvery" -> "300", "payload" -> "avro")
         val agg = s.readStream.table(s"$cat.tpch.events")
           .filter(col("_offset") >= 250 && col("_offset") < 3750)
           .groupBy(col("event_type"))

@@ -3,10 +3,6 @@ package graft.catalog
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.types.{DataType, StructType}
-
 import graft.util.Retry
 
 /** Durable metastore over a directory: one schema file per collection at
@@ -16,7 +12,9 @@ import graft.util.Retry
   * pluggable `Metastore` impl, and a JDBC one is a drop-in behind the same
   * trait. Reads go through [[Retry]] like the reference wrapped its
   * control-plane calls (`RetryDriver` use at
-  * `KafkaConnectorPageSource.java:202-204`).
+  * `KafkaConnectorPageSource.java:202-204`). A lookup reads the one schema
+  * file it names, so a file written behind this API's back is seen by the
+  * next query that names its collection.
   */
 final class FileMetastore(root: String, retry: Retry.Policy = Retry.Policy(maxAttempts = 3))
     extends Metastore {
@@ -24,90 +22,26 @@ final class FileMetastore(root: String, retry: Retry.Policy = Retry.Policy(maxAt
   private def dir(project: String): Path = Paths.get(root, project)
   private def file(project: String, collection: String): Path =
     dir(project).resolve(s"$collection.json")
-  private def counterFile: Path = Paths.get(root, ".graft_generation")
 
   def createCollection(project: String, collection: String, fields: Seq[SchemaField]): Unit = {
     Files.createDirectories(dir(project))
-    val st = StructType(fields.map(_.toStructField))
-    Files.write(file(project, collection), st.json.getBytes(StandardCharsets.UTF_8))
-    bumpCounter()
+    Files.write(file(project, collection),
+      SchemaField.toJson(fields).getBytes(StandardCharsets.UTF_8))
   }
-
-  /** Monotonic DDL counter (the file analogue of [[JdbcMetastore]]'s
-    * `graft_meta` row): bumped on every mutation through this API, so even
-    * a same-size rewrite within one mtime tick changes [[generation]].
-    * Written via temp-file + ATOMIC_MOVE so readers never observe a torn
-    * value. The read-modify-write is guarded by a JVM-wide lock only —
-    * concurrent mutators in SEPARATE processes can lose a bump (no file
-    * lock), so callers needing hard cross-process guarantees should use
-    * [[JdbcMetastore]], whose counter bump is a database transaction.
-    */
-  private def bumpCounter(): Unit = FileMetastore.lock.synchronized {
-    val next = readCounter() + 1
-    val tmp = Files.createTempFile(Paths.get(root), ".graft_generation", ".tmp")
-    Files.write(tmp, next.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, counterFile,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def readCounter(): Long =
-    try {
-      if (Files.exists(counterFile))
-        new String(Files.readAllBytes(counterFile), StandardCharsets.UTF_8).trim.toLong
-      else 0L
-    } catch { case _: Exception => 0L }
 
   override def getCollection(project: String, collection: String): Option[Seq[SchemaField]] =
     Retry(s"getCollection $project.$collection", retry) {
       val f = file(project, collection)
       if (!Files.exists(f)) None
-      else {
-        val st = DataType.fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-          .asInstanceOf[StructType]
-        Some(SchemaField.fromStructType(st))
-      }
+      else Some(SchemaField.fromJson(new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
     }
 
   override def listProjects: Seq[String] = graft.util.Fs.listDir(Paths.get(root)) {
     _.filter(Files.isDirectory(_)).map(_.getFileName.toString)
   }
 
-  /** Change fingerprint = monotonic DDL counter (bumped by every mutation
-    * through this API — immune to same-size same-tick rewrites and mtime
-    * granularity) mixed with a (path, size, nanosecond mtime) walk of every
-    * schema file, which additionally catches out-of-band edits made behind
-    * the API's back. Non-negative by construction (see
-    * [[Metastore.generation]]).
-    */
-  override def generation: Long = {
-    var h = 17L * 31 + readCounter()
-    for {
-      p <- listProjects.sorted
-      c <- listCollections(p).sorted
-    } {
-      val f = file(p, c)
-      val (sz, sec, nano) =
-        try {
-          val t = Files.getLastModifiedTime(f).toInstant
-          (Files.size(f), t.getEpochSecond, t.getNano.toLong)
-        } catch { case _: Exception => (-1L, -1L, -1L) }
-      h = h * 31 + p.hashCode
-      h = h * 31 + c.hashCode
-      h = h * 31 + sz
-      h = h * 31 + sec
-      h = h * 31 + nano
-    }
-    h & Long.MaxValue
-  }
-
   override def listCollections(project: String): Seq[String] =
     graft.util.Fs.listDir(dir(project)) {
       _.map(_.getFileName.toString).filter(_.endsWith(".json")).map(_.stripSuffix(".json"))
     }
-}
-
-object FileMetastore {
-  /** JVM-wide mutation lock for the counter file's read-modify-write. */
-  private[catalog] val lock = new Object
 }

@@ -1,8 +1,6 @@
 package graft.catalog
 
-import java.sql.{Connection, DriverManager}
-
-import org.apache.spark.sql.types.{DataType, StructType}
+import java.sql.{Connection, DriverManager, SQLException}
 
 import graft.util.Retry
 
@@ -15,15 +13,16 @@ import graft.util.Retry
   *
   * Layout: one row per collection in `graft_schema(project, collection,
   * schema_json)` holding the Spark DDL-JSON of the user schema (same
-  * serialization as [[FileMetastore]]), plus a single-row
-  * `graft_meta(generation)` counter bumped on every DDL — the cheap change
-  * fingerprint [[Metastore.generation]] requires.
+  * serialization as [[FileMetastore]]). Other writers (Rakam's collector
+  * writes the registry itself) need no protocol beyond that row: every
+  * lookup reads it.
   *
   * Control-plane calls go through [[Retry]] like the reference wrapped its
   * metastore access (`RetryDriver` use at
   * `KafkaConnectorPageSource.java:202-204`). Connections are per-call:
-  * metastore traffic is a handful of driver-side lookups per registration
-  * generation, not a hot path; correctness over pooling.
+  * metastore traffic is a handful of driver-side lookups per query (one per
+  * underscore split of each table name it uses), not a hot path;
+  * correctness over pooling.
   */
 final class JdbcMetastore(url: String, retry: Retry.Policy = Retry.Policy(maxAttempts = 3))
     extends Metastore {
@@ -33,165 +32,55 @@ final class JdbcMetastore(url: String, retry: Retry.Policy = Retry.Policy(maxAtt
     try f(c) finally c.close()
   }
 
-  private val MetaDdl =
-    """CREATE TABLE graft_meta (
-         id INT NOT NULL PRIMARY KEY,
-         generation BIGINT NOT NULL)"""
-
-  // idempotent bootstrap: Derby has no CREATE TABLE IF NOT EXISTS; swallow
-  // the already-exists state on races. The meta row is keyed (id=1 PRIMARY
-  // KEY) so two concurrent bootstraps can't seed it twice — the loser's
-  // INSERT fails with a duplicate-key violation and is swallowed too.
-  locally {
-    withConn { c =>
-      def tryStmt(sql: String, swallow: Set[String]): Unit = {
-        val st = c.createStatement()
-        try st.execute(sql)
-        catch { case e: java.sql.SQLException if swallow(e.getSQLState) => () }
-        finally st.close()
+  /** Executes `sql` on `c` with `args` bound in order: the first column of
+    * every row a query returns, nothing for an update.
+    */
+  private def exec(c: Connection, sql: String, args: String*): Seq[String] = {
+    val ps = c.prepareStatement(sql)
+    try {
+      args.zipWithIndex.foreach { case (a, i) => ps.setString(i + 1, a) }
+      if (!ps.execute()) Nil
+      else {
+        val rs = ps.getResultSet
+        try Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+        finally rs.close()
       }
-      val tableExists = Set("X0Y32")
-      val duplicateKey = Set("23505")
-      tryStmt("""CREATE TABLE graft_schema (
-                   project VARCHAR(255) NOT NULL,
-                   collection VARCHAR(255) NOT NULL,
-                   schema_json CLOB NOT NULL,
-                   PRIMARY KEY (project, collection))""", tableExists)
-      tryStmt(MetaDdl, tableExists)
-      // migrate a legacy keyless graft_meta(generation) in place: probing
-      // for the id column fails with 42X04 (column not in any table) there;
-      // rebuild the table preserving the counter. The rebuild runs in ONE
-      // transaction (Derby DDL is transactional), so a crash mid-migration
-      // can't lose the counter; a concurrent loser's failure is tolerated
-      // by re-probing — if the winner already migrated, proceed.
-      def hasIdColumn: Boolean =
-        try {
-          val st = c.createStatement()
-          try { st.executeQuery("SELECT id FROM graft_meta").close(); true }
-          finally st.close()
-        } catch { case e: java.sql.SQLException if e.getSQLState == "42X04" => false }
-      if (!hasIdColumn) {
-        try {
-          c.setAutoCommit(false)
-          val st = c.createStatement()
-          try {
-            val rs = st.executeQuery("SELECT generation FROM graft_meta")
-            val g = if (rs.next()) rs.getLong(1) else 0L
-            rs.close()
-            st.execute("DROP TABLE graft_meta")
-            st.execute(MetaDdl)
-            st.execute(s"INSERT INTO graft_meta (id, generation) VALUES (1, $g)")
-          } finally st.close()
-          c.commit()
-        } catch {
-          case e: java.sql.SQLException =>
-            try c.rollback() catch { case _: Exception => () }
-            if (!hasIdColumn) throw e // a concurrent winner migrated: fine
-        } finally c.setAutoCommit(true)
-      }
-      tryStmt("INSERT INTO graft_meta (id, generation) VALUES (1, 0)", duplicateKey)
-    }
+    } finally ps.close()
   }
+
+  private def query(what: String, sql: String, args: String*): Seq[String] =
+    Retry(what, retry)(withConn(exec(_, sql, args: _*)))
+
+  // idempotent bootstrap: Derby has no CREATE TABLE IF NOT EXISTS, so the
+  // already-exists state (a second instance, or a race) is tolerated
+  try withConn(exec(_, """CREATE TABLE graft_schema (
+                             project VARCHAR(255) NOT NULL,
+                             collection VARCHAR(255) NOT NULL,
+                             schema_json CLOB NOT NULL,
+                             PRIMARY KEY (project, collection))"""))
+  catch { case e: SQLException if e.getSQLState == "X0Y32" => () }
 
   def createCollection(project: String, collection: String, fields: Seq[SchemaField]): Unit =
     Retry(s"createCollection $project.$collection", retry) {
       withConn { c =>
         c.setAutoCommit(false)
-        val json = StructType(fields.map(_.toStructField)).json
-        val del = c.prepareStatement(
-          "DELETE FROM graft_schema WHERE project = ? AND collection = ?")
-        try { del.setString(1, project); del.setString(2, collection); del.executeUpdate() }
-        finally del.close()
-        val ins = c.prepareStatement(
-          "INSERT INTO graft_schema (project, collection, schema_json) VALUES (?, ?, ?)")
-        try {
-          ins.setString(1, project); ins.setString(2, collection); ins.setString(3, json)
-          ins.executeUpdate()
-        } finally ins.close()
-        val bump = c.createStatement()
-        try bump.execute("UPDATE graft_meta SET generation = generation + 1 WHERE id = 1")
-        finally bump.close()
+        exec(c, "DELETE FROM graft_schema WHERE project = ? AND collection = ?",
+          project, collection)
+        exec(c, "INSERT INTO graft_schema (project, collection, schema_json) VALUES (?, ?, ?)",
+          project, collection, SchemaField.toJson(fields))
         c.commit()
       }
     }
 
   override def getCollection(project: String, collection: String): Option[Seq[SchemaField]] =
-    Retry(s"getCollection $project.$collection", retry) {
-      withConn { c =>
-        val ps = c.prepareStatement(
-          "SELECT schema_json FROM graft_schema WHERE project = ? AND collection = ?")
-        try {
-          ps.setString(1, project); ps.setString(2, collection)
-          val rs = ps.executeQuery()
-          if (!rs.next()) None
-          else Some(SchemaField.fromStructType(
-            DataType.fromJson(rs.getString(1)).asInstanceOf[StructType]))
-        } finally ps.close()
-      }
-    }
+    query(s"getCollection $project.$collection",
+      "SELECT schema_json FROM graft_schema WHERE project = ? AND collection = ?",
+      project, collection).headOption.map(SchemaField.fromJson)
 
   override def listProjects: Seq[String] =
-    Retry("listProjects", retry) {
-      withConn { c =>
-        val st = c.createStatement()
-        try {
-          val rs = st.executeQuery(
-            "SELECT DISTINCT project FROM graft_schema ORDER BY project")
-          try {
-            val b = Seq.newBuilder[String]
-            while (rs.next()) b += rs.getString(1)
-            b.result()
-          } finally rs.close()
-        } finally st.close()
-      }
-    }
+    query("listProjects", "SELECT DISTINCT project FROM graft_schema ORDER BY project")
 
   override def listCollections(project: String): Seq[String] =
-    Retry(s"listCollections $project", retry) {
-      withConn { c =>
-        val ps = c.prepareStatement(
-          "SELECT collection FROM graft_schema WHERE project = ? ORDER BY collection")
-        try {
-          ps.setString(1, project)
-          val rs = ps.executeQuery()
-          val b = Seq.newBuilder[String]
-          while (rs.next()) b += rs.getString(1)
-          b.result()
-        } finally ps.close()
-      }
-    }
-
-  /** Dedicated long-lived connection for the generation probe: it runs on
-    * EVERY `GraftEngine.sql` call (including the cached fast path), so a
-    * fresh connection per probe is the one place per-call connections hurt.
-    * Recreated on failure (the retry loop reconnects); statement and result
-    * set are closed per probe.
-    */
-  private var probeConn: Connection = null
-
-  override def generation: Long =
-    Retry("generation", retry) {
-      this.synchronized {
-        try {
-          // isClosed itself may throw on a dead connection — it must sit
-          // INSIDE the guarded block, and any failure (not just
-          // SQLException) must drop the cached connection, or one broken
-          // handle poisons every later probe
-          if (probeConn == null || probeConn.isClosed)
-            probeConn = DriverManager.getConnection(url)
-          val st = probeConn.createStatement()
-          try {
-            val rs = st.executeQuery("SELECT generation FROM graft_meta WHERE id = 1")
-            try { rs.next(); rs.getLong(1) } finally rs.close()
-          } finally st.close()
-        } catch {
-          case e: Throwable =>
-            if (probeConn != null) {
-              try probeConn.close() catch { case _: Exception => () }
-              probeConn = null
-            }
-            throw e
-        }
-      }
-    }
+    query(s"listCollections $project",
+      "SELECT collection FROM graft_schema WHERE project = ? ORDER BY collection", project)
 }

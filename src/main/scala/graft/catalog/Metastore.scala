@@ -9,8 +9,11 @@ import org.apache.spark.sql.types.StructType
   * Parity: the reference's `Metastore.getCollection(project, collection)`
   * returning `List<SchemaField>` (reference `KafkaMetadata.java:157`,
   * JDBC/Postgres-backed via `MetastoreModule.java:34-44`). The rebuild keeps
-  * the same contract as a plain trait; the JDBC implementation is a drop-in
-  * (Spark ships a JDBC datasource) but tests use the in-memory/derived impls.
+  * the same contract as a plain trait, read-only from the engine's side like
+  * the reference's: [[graft.GraftEngine.sql]] and [[GraftTableCatalog]] look
+  * a collection up when a query names it, so an implementation keeps no
+  * change counter and a write made behind its back is seen by the next
+  * query.
   *
   * Deliberate fix over the reference: `listProjects`/`listCollections`
   * actually list. The reference returned empty lists by design
@@ -24,14 +27,6 @@ trait Metastore {
   def listProjects: Seq[String]
 
   def listCollections(project: String): Seq[String]
-
-  /** Change fingerprint: equal values ⇒ the set of collections and their
-    * schemas is unchanged, so derived registrations (e.g.
-    * [[graft.GraftEngine.sql]]'s temp views) can be reused instead of
-    * re-resolved per query. A NEGATIVE value means "unknown — always assume
-    * changed" (the safe default for impls that can't track it cheaply).
-    */
-  def generation: Long
 
   /** User-visible schema (lowercased names, reference `KafkaMetadata.java:171`). */
   final def schemaOf(project: String, collection: String): Option[StructType] =
@@ -48,14 +43,9 @@ trait Metastore {
 /** Thread-safe in-memory metastore; the default for tests and fixtures. */
 final class InMemoryMetastore extends Metastore {
   private val store = TrieMap.empty[(String, String), Seq[SchemaField]]
-  private val gen = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  override def generation: Long = gen.get()
-
-  def createCollection(project: String, collection: String, fields: Seq[SchemaField]): Unit = {
+  def createCollection(project: String, collection: String, fields: Seq[SchemaField]): Unit =
     store.put((project, collection), fields)
-    gen.incrementAndGet()
-  }
 
   override def getCollection(project: String, collection: String): Option[Seq[SchemaField]] =
     store.get((project, collection))

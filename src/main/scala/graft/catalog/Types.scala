@@ -79,6 +79,12 @@ final case class SchemaField(name: String, ftype: FieldType, nullable: Boolean =
 object SchemaField {
   def fromStructType(st: StructType): Seq[SchemaField] =
     st.fields.toSeq.map(f => SchemaField(f.name, FieldType.fromSpark(f.dataType), f.nullable))
+
+  /** The durable metastores' stored form: the Spark DDL-JSON of the user schema. */
+  def toJson(fields: Seq[SchemaField]): String = StructType(fields.map(_.toStructField)).json
+
+  def fromJson(json: String): Seq[SchemaField] =
+    fromStructType(DataType.fromJson(json).asInstanceOf[StructType])
 }
 
 /** The three hidden system columns every event table carries.
@@ -106,11 +112,11 @@ object SystemColumns {
   /** Kafka topic naming, parity with `KafkaSplitManager.java:107`. */
   def topicFor(project: String, collection: String): String = s"${project}_$collection"
 
-  /** Inverse: topic → (project, collection); split on the FIRST underscore,
-    * parity with `KafkaConnectorPageSource.java:88-89` (`split("_", 2)`).
+  /** Inverse: every (project, collection) that [[topicFor]] maps to `topic`,
+    * one per underscore. The reference split on the first underscore only
+    * (`KafkaConnectorPageSource.java:88-89`, `split("_", 2)`), which misreads
+    * a project name that holds one.
     */
-  def parseTopic(topic: String): (String, String) = topic.split("_", 2) match {
-    case Array(p, c) => (p, c)
-    case _ => throw new IllegalArgumentException(s"topic '$topic' is not <project>_<collection>")
-  }
+  def topicSplits(topic: String): Seq[(String, String)] =
+    (1 until topic.length - 1).filter(topic(_) == '_').map(i => (topic.take(i), topic.drop(i + 1)))
 }

@@ -1,73 +1,86 @@
 package graft
 
-import java.nio.file.Files
+import java.sql.{DriverManager, SQLException}
 
-import graft.catalog.{FileMetastore, FieldType, SchemaField}
-import graft.util.Retry
+import graft.catalog.{FileMetastore, FieldType, JdbcMetastore, SchemaField}
+import graft.util.{Retry, Scratch}
 
 class CatalogSpec extends SparkTestBase {
 
+  /** An embedded Derby database in a scratch dir, shut down before the dir
+    * is deleted.
+    */
+  private def withDerby[T](body: String => T): T = Scratch.withDir("graft-derby") { d =>
+    val db = d.resolve("ms").toString
+    try body(s"jdbc:derby:$db;create=true")
+    finally
+      try DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true").close()
+      catch { case e: SQLException if e.getSQLState == "08006" => () } // Derby's "shut down"
+  }
+
   test("FileMetastore persists, lists, and round-trips schemas") {
-    val root = Files.createTempDirectory("graft-ms").toString
-    val ms = new FileMetastore(root)
-    ms.createCollection("demo", "clicks",
-      Seq(SchemaField("UserId", FieldType.LONG), SchemaField("Tags", FieldType.ARRAY(FieldType.STRING))))
-    ms.createCollection("demo", "views", Seq(SchemaField("x", FieldType.DOUBLE)))
-    assert(ms.listProjects == Seq("demo"))
-    assert(ms.listCollections("demo") == Seq("clicks", "views"))
-    val st = ms.schemaOf("demo", "clicks").get
-    assert(st.fieldNames.toSeq == Seq("userid", "tags"))
-    // a second instance over the same root sees the same state (durability)
-    assert(new FileMetastore(root).schemaOf("demo", "views").isDefined)
-    assert(ms.getCollection("demo", "nope").isEmpty)
+    Scratch.withDir("graft-ms") { dir =>
+      val root = dir.toString
+      val ms = new FileMetastore(root)
+      ms.createCollection("demo", "clicks",
+        Seq(SchemaField("UserId", FieldType.LONG), SchemaField("Tags", FieldType.ARRAY(FieldType.STRING))))
+      ms.createCollection("demo", "views", Seq(SchemaField("x", FieldType.DOUBLE)))
+      assert(ms.listProjects == Seq("demo"))
+      assert(ms.listCollections("demo") == Seq("clicks", "views"))
+      val st = ms.schemaOf("demo", "clicks").get
+      assert(st.fieldNames.toSeq == Seq("userid", "tags"))
+      // a second instance over the same root sees the same state (durability)
+      assert(new FileMetastore(root).schemaOf("demo", "views").isDefined)
+      assert(ms.getCollection("demo", "nope").isEmpty)
+    }
   }
 
   test("JdbcMetastore (embedded Derby): same contract as InMemory/File") {
-    val db = Files.createTempDirectory("graft-derby").resolve("ms").toString
-    val url = s"jdbc:derby:$db;create=true"
-    val ms = new graft.catalog.JdbcMetastore(url)
-    val g0 = ms.generation
-    ms.createCollection("demo", "clicks",
-      Seq(SchemaField("UserId", FieldType.LONG), SchemaField("Tags", FieldType.ARRAY(FieldType.STRING))))
-    ms.createCollection("demo", "views", Seq(SchemaField("x", FieldType.DOUBLE)))
-    assert(ms.listProjects == Seq("demo"))
-    assert(ms.listCollections("demo") == Seq("clicks", "views"))
-    val st = ms.schemaOf("demo", "clicks").get
-    assert(st.fieldNames.toSeq == Seq("userid", "tags"))
-    assert(ms.getCollection("demo", "nope").isEmpty)
-    // DDL bumps the generation (registration-cache contract)
-    assert(ms.generation > g0)
-    // re-create (schema evolution) replaces and bumps again
-    val g1 = ms.generation
-    ms.createCollection("demo", "clicks", Seq(SchemaField("UserId", FieldType.LONG)))
-    assert(ms.schemaOf("demo", "clicks").get.fieldNames.toSeq == Seq("userid"))
-    assert(ms.generation > g1)
-    // a second instance over the same database sees the same state (durability)
-    val ms2 = new graft.catalog.JdbcMetastore(url)
-    assert(ms2.schemaOf("demo", "views").isDefined)
-    assert(ms2.generation == ms.generation)
-    // and the engine runs on it end-to-end
-    val eng = new GraftEngine(spark, ms, graft.sources.ParquetEventSource(sfDir))
-    ms.createCollection("jdbcproj", "orders",
-      SchemaField.fromStructType(Tables.load(spark, sfDir, "orders").schema))
-    assert(eng.sql("SELECT count(*) AS n FROM jdbcproj_orders").head().getLong(0) > 0)
+    withDerby { url =>
+      val ms = new JdbcMetastore(url)
+      ms.createCollection("demo", "clicks",
+        Seq(SchemaField("UserId", FieldType.LONG), SchemaField("Tags", FieldType.ARRAY(FieldType.STRING))))
+      ms.createCollection("demo", "views", Seq(SchemaField("x", FieldType.DOUBLE)))
+      assert(ms.listProjects == Seq("demo"))
+      assert(ms.listCollections("demo") == Seq("clicks", "views"))
+      val st = ms.schemaOf("demo", "clicks").get
+      assert(st.fieldNames.toSeq == Seq("userid", "tags"))
+      assert(ms.getCollection("demo", "nope").isEmpty)
+      // re-create (schema evolution) replaces
+      ms.createCollection("demo", "clicks", Seq(SchemaField("UserId", FieldType.LONG)))
+      assert(ms.schemaOf("demo", "clicks").get.fieldNames.toSeq == Seq("userid"))
+      // a second instance over the same database sees the same state (durability)
+      val ms2 = new JdbcMetastore(url)
+      assert(ms2.schemaOf("demo", "views").isDefined)
+      // and the engine runs on it end-to-end
+      val eng = new GraftEngine(spark, ms, graft.sources.ParquetEventSource(sfDir))
+      ms.createCollection("jdbcproj", "orders",
+        SchemaField.fromStructType(Tables.load(spark, sfDir, "orders").schema))
+      assert(eng.sql("SELECT count(*) AS n FROM jdbcproj_orders").head().getLong(0) > 0)
+    }
   }
 
-  test("JdbcMetastore migrates a legacy keyless graft_meta preserving the counter") {
-    val db = Files.createTempDirectory("graft-derby-legacy").resolve("ms").toString
-    val url = s"jdbc:derby:$db;create=true"
-    // fabricate the pre-migration shape by hand
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = c.createStatement()
-      st.execute("CREATE TABLE graft_meta (generation BIGINT NOT NULL)")
-      st.execute("INSERT INTO graft_meta VALUES (7)")
-      st.close()
-    } finally c.close()
-    val ms = new graft.catalog.JdbcMetastore(url)
-    assert(ms.generation == 7L)
-    ms.createCollection("p", "c", Seq(SchemaField("x", FieldType.LONG)))
-    assert(ms.generation == 8L)
+  test("JdbcMetastore: a row written into graft_schema by plain SQL is queryable by the next engine.sql") {
+    withDerby { url =>
+      val ms = new JdbcMetastore(url)
+      ms.createCollection("sqlproj", "orders",
+        SchemaField.fromStructType(Tables.load(spark, sfDir, "orders").schema))
+      val eng = new GraftEngine(spark, ms, graft.sources.ParquetEventSource(sfDir))
+      assert(eng.sql("SELECT count(*) FROM sqlproj_orders").head().getLong(0) > 0)
+      // another writer (as Rakam's collector does) inserts the row itself
+      val customer = Tables.load(spark, sfDir, "customer")
+      val c = DriverManager.getConnection(url)
+      try {
+        val ins = c.prepareStatement(
+          "INSERT INTO graft_schema (project, collection, schema_json) VALUES (?, ?, ?)")
+        try {
+          ins.setString(1, "sqlproj"); ins.setString(2, "customer")
+          ins.setString(3, customer.schema.json)
+          ins.executeUpdate()
+        } finally ins.close()
+      } finally c.close()
+      assert(eng.sql("SELECT count(*) FROM sqlproj_customer").head().getLong(0) == customer.count())
+    }
   }
 
   test("Retry: backs off with the reference's schedule, honors stopOn") {
@@ -89,13 +102,5 @@ class CatalogSpec extends SparkTestBase {
       }
     }
     assert(n == 1)
-  }
-
-  test("GraftConfig wires codec and metastore choices") {
-    val cfg = GraftConfig(codec = "json", metastoreRoot = None)
-    assert(cfg.payloadCodec == graft.sources.JsonPayloadCodec)
-    intercept[IllegalArgumentException](GraftConfig(codec = "wat").payloadCodec)
-    val eng = GraftConfig.kafkaEngine(spark, GraftConfig(kafkaNodes = "b:9092"))
-    assert(eng.metastore.listProjects.isEmpty)
   }
 }

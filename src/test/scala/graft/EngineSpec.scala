@@ -24,7 +24,9 @@ class EngineSpec extends SparkTestBase {
 
   test("topic naming round-trips (project_collection)") {
     assert(SystemColumns.topicFor("proj", "coll_with_under") == "proj_coll_with_under")
-    assert(SystemColumns.parseTopic("proj_coll_with_under") == ("proj", "coll_with_under"))
+    assert(SystemColumns.topicSplits("proj_coll_with_under") == Seq(("proj", "coll_with_under"),
+      ("proj_coll", "with_under"), ("proj_coll_with", "under")))
+    assert(SystemColumns.topicSplits("_a_").isEmpty)
   }
 
   test("engine.table hides system columns; tableWithSystemColumns exposes them") {

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.catalog.{InMemoryMetastore, SchemaField, SystemColumns}
+import graft.catalog.{FieldType, InMemoryMetastore, Metastore, SchemaField, SystemColumns}
 import graft.functions.{AvroSchemas, GraftFunctions => GF}
 import graft.plans.{OffsetRange, OffsetRangePlanner}
 import graft.sources.{AvroPayloadCodec, JsonPayloadCodec, KafkaEventSink, KafkaEventSource, ParquetEventSource}
@@ -80,37 +80,73 @@ class EngineWiringSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     intercept[Exception](spark.sql("SELECT _offset FROM tpch_events").collect())
   }
 
-  test("engine.sql caches registration on metastore generation") {
-    import graft.catalog.{InMemoryMetastore, Metastore, SchemaField}
-    final class CountingMetastore(inner: InMemoryMetastore) extends Metastore {
-      var schemaLookups = 0
-      var listCalls = 0
-      override def getCollection(p: String, c: String): Option[Seq[SchemaField]] = {
-        schemaLookups += 1; inner.getCollection(p, c)
-      }
-      override def listProjects: Seq[String] = { listCalls += 1; inner.listProjects }
-      override def listCollections(p: String): Seq[String] = inner.listCollections(p)
-      override def generation: Long = inner.generation
+  /** Records every metastore call. */
+  private final class CountingMetastore(inner: InMemoryMetastore) extends Metastore {
+    val lookups = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var listCalls = 0
+    override def getCollection(p: String, c: String): Option[Seq[SchemaField]] = {
+      lookups += ((p, c)); inner.getCollection(p, c)
     }
+    override def listProjects: Seq[String] = { listCalls += 1; inner.listProjects }
+    override def listCollections(p: String): Seq[String] = {
+      listCalls += 1; inner.listCollections(p)
+    }
+  }
+
+  private def fixtureFields(name: String): Seq[SchemaField] =
+    SchemaField.fromStructType(Tables.load(spark, sfDir, name).schema)
+
+  test("engine.sql looks up only the collections a query names") {
     val inner = new InMemoryMetastore
-    val ordersSchema = Tables.load(spark, sfDir, "orders").schema
-    inner.createCollection("genproj", "orders", SchemaField.fromStructType(ordersSchema))
+    (0 until 198).foreach(i =>
+      inner.createCollection("wide_reg", f"c$i%03d", Seq(SchemaField("x", FieldType.LONG))))
+    Seq("orders", "customer").foreach(t => inner.createCollection("wide_reg", t, fixtureFields(t)))
+    assert(inner.listCollections("wide_reg").size == 200)
     val ms = new CountingMetastore(inner)
     val eng = new GraftEngine(spark, ms, ParquetEventSource(sfDir))
 
-    assert(eng.sql("SELECT count(*) AS n FROM genproj_orders").head().getLong(0) > 0)
-    val afterFirst = (ms.schemaLookups, ms.listCalls)
-    assert(afterFirst._1 > 0 && afterFirst._2 > 0)
+    // each name is tried at each underscore: wide.reg_orders, wide_reg.orders
+    val joined = eng.sql(
+      """SELECT count(*) FROM wide_reg_orders o
+        |JOIN wide_reg_customer c ON o.o_custkey = c.c_custkey""".stripMargin)
+    assert(joined.head().getLong(0) > 0)
+    assert(ms.lookups.sorted == Seq(("wide", "reg_customer"), ("wide", "reg_orders"),
+      ("wide_reg", "customer"), ("wide_reg", "orders")))
+    assert(ms.listCalls == 0)
 
-    // unchanged generation: second query does NO metastore work at all
-    eng.sql("SELECT count(*) AS n FROM genproj_orders").head()
-    assert((ms.schemaLookups, ms.listCalls) == afterFirst)
+    // a collection added between two calls is seen
+    inner.createCollection("wide_reg", "part", fixtureFields("part"))
+    assert(eng.sql("SELECT count(*) FROM wide_reg_part").head().getLong(0) ==
+      Tables.load(spark, sfDir, "part").count())
+    // and so is one re-created with fewer fields
+    assert(eng.sql("SELECT * FROM wide_reg_orders").columns.length == fixtureFields("orders").size)
+    inner.createCollection("wide_reg", "orders", fixtureFields("orders").take(2))
+    assert(eng.sql("SELECT * FROM wide_reg_orders").columns.toSeq == Seq("o_orderkey", "o_custkey"))
 
-    // a new collection bumps the generation -> re-registration picks it up
-    inner.createCollection("genproj", "customer",
-      SchemaField.fromStructType(Tables.load(spark, sfDir, "customer").schema))
-    assert(eng.sql("SELECT count(*) AS n FROM genproj_customer").head().getLong(0) > 0)
-    assert(ms.schemaLookups > afterFirst._1 && ms.listCalls > afterFirst._2)
+    // names inside a CTE body, a scalar subquery and an IN subquery resolve
+    Seq("orders", "customer", "part").foreach(t => inner.createCollection("nest", t, fixtureFields(t)))
+    ms.lookups.clear()
+    val nested = eng.sql(
+      """WITH o AS (SELECT o_custkey, o_totalprice FROM nest_orders)
+        |SELECT count(*) FROM o
+        |WHERE o_totalprice > (SELECT min(p_retailprice) FROM nest_part)
+        |  AND o_custkey IN (SELECT c_custkey FROM nest_customer)""".stripMargin)
+    assert(nested.head().getLong(0) > 0)
+    assert(ms.lookups.sorted == Seq(("nest", "customer"), ("nest", "orders"), ("nest", "part")))
+    assert(ms.listCalls == 0)
+  }
+
+  test("engine.sql fails on an ambiguous table name, naming every candidate") {
+    val ms = new InMemoryMetastore
+    ms.createCollection("a", "b_c", Seq(SchemaField("x", FieldType.LONG)))
+    ms.createCollection("a_b", "c", Seq(SchemaField("y", FieldType.LONG)))
+    ms.createCollection("a", "customer", fixtureFields("customer"))
+    val eng = new GraftEngine(spark, ms, ParquetEventSource(sfDir))
+    val e = intercept[IllegalArgumentException](eng.sql("SELECT * FROM a_b_c"))
+    assert(e.getMessage.contains("a.b_c") && e.getMessage.contains("a_b.c"), e.getMessage)
+    // a query not naming it still runs
+    assert(eng.sql("SELECT count(*) FROM a_customer").head().getLong(0) ==
+      Tables.load(spark, sfDir, "customer").count())
   }
 
   test("KafkaEventSink shapes (topic, 8-byte big-endian key, avro value)") {
